@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
   * no float accumulations anywhere, so the card is bitwise
   * reproducible (the corpus-ratio form of the per-doc means: e.g.
   * stop_ratio is corpus stop tokens / corpus tokens, not an
-  * order-dependent average of per-doc ratios). distinct_token_est is
+  * order-dependent average of per-doc ratios). A ratio whose divisor
+  * is zero (no documents, or documents with no tokens) renders as
+  * NULL, as the DuckDB oracles' `/` does, instead of failing the card
+  * with DIVIDE_BY_ZERO under ANSI mode. distinct_token_est is
   * the KMV sketch beside the exact count — the pair IS the sketch's
   * accuracy line in the shipped report.
   *
@@ -27,6 +30,10 @@ import org.apache.spark.sql.functions._
   * it) — and the exact distinct column is the one you drop at 100 TB,
   * which is why its estimate ships in the same card. */
 object DataCard {
+
+  /** A card ratio: NULL when the divisor is zero (see the scaladoc). */
+  private def ratio(num: String, den: String): Column =
+    try_divide(col(num).cast("double"), col(den))
 
   def build(documents: DataFrame, stopwords: Seq[String] = Seq("the", "a")): DataFrame = {
     val spark = documents.sparkSession
@@ -85,14 +92,10 @@ object DataCard {
         row("exact_dup_docs", col("n_docs") - col("distinct_texts")),
         row("distinct_tokens", col("distinct_tokens")),
         row("distinct_token_est", col("d_est")),
-        row("mean_doc_tokens",
-          col("total_tokens").cast("double") / col("n_docs")),
-        row("stop_ratio",
-          col("total_stop").cast("double") / col("total_tokens")),
-        row("top_token_share",
-          col("top_tok_cnt").cast("double") / col("total_tokens")),
-        row("max_source_share",
-          col("max_source_docs").cast("double") / col("n_docs"))))
+        row("mean_doc_tokens", ratio("total_tokens", "n_docs")),
+        row("stop_ratio", ratio("total_stop", "total_tokens")),
+        row("top_token_share", ratio("top_tok_cnt", "total_tokens")),
+        row("max_source_share", ratio("max_source_docs", "n_docs"))))
         .as("r"))
       .select(col("r.metric").as("metric"), col("r.value").as("value"))
   }
@@ -255,12 +258,9 @@ object DataCard {
         row("empty_docs", col("empty_docs")),
         row("distinct_text_est", lit(estText)),
         row("distinct_token_est", lit(estTok)),
-        row("mean_doc_tokens",
-          col("total_tokens").cast("double") / col("n_docs")),
-        row("stop_ratio",
-          col("total_stop").cast("double") / col("total_tokens")),
-        row("max_source_share",
-          col("max_source_docs").cast("double") / col("n_docs"))))
+        row("mean_doc_tokens", ratio("total_tokens", "n_docs")),
+        row("stop_ratio", ratio("total_stop", "total_tokens")),
+        row("max_source_share", ratio("max_source_docs", "n_docs"))))
         .as("r"))
       .select(col("r.metric").as("metric"), col("r.value").as("value"))
   }

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver-verifiable query: the Spark formulation plus (when
   * SQL-expressible) a DuckDB oracle over the same parquet tables.
-  * Every query is written to be deterministic: total-order sort keys,
-  * rounded floats, exact decimal sums — SURVEY.md §5.1.
+  * Every query is written to be deterministic: the same row SET on
+  * every run, rounded floats, exact decimal sums — SURVEY.md §5.1.
+  * Row ORDER is not part of a registry query's result: a spec that
+  * collects a registry query sorts the rows before comparing them.
   *
   * r21 (optimization guide §2.4): queries no longer end in a
   * presentation `orderBy` — the verifier canonicalizes rows by sorting

@@ -39,6 +39,32 @@ class DataCardSpec extends SparkSpec {
     assert(card.keySet == expected.keySet)
   }
 
+  test("a zero divisor renders the ratio NULL in build and renderMerged") {
+    // all-blank texts: total_tokens = 0, so the ratios over it have a
+    // zero divisor while those over n_docs do not; the empty corpus
+    // zeroes n_docs too. ANSI division would throw DIVIDE_BY_ZERO.
+    val blank = Seq(
+      (1L, "", "en", "web", 0L),
+      (2L, "   ", "en", "web", 3L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+    val ratioRows = Set("mean_doc_tokens", "stop_ratio",
+      "top_token_share", "max_source_share")
+    def ratios(card: org.apache.spark.sql.DataFrame) =
+      card.as[(String, Option[Double])].collect().toMap
+        .filter { case (m, _) => ratioRows(m) }
+    val cases = Seq(
+      "blank" -> (blank, Map[String, Option[Double]](
+        "mean_doc_tokens" -> Some(0.0), "stop_ratio" -> None,
+        "top_token_share" -> None, "max_source_share" -> Some(1.0))),
+      "empty" -> (blank.limit(0), ratioRows.map(_ -> None).toMap))
+    for ((label, (corpus, expected)) <- cases) {
+      assert(ratios(DataCard.build(corpus)) == expected, s"$label build")
+      // the merged render has no top_token_share row (not mergeable)
+      assert(ratios(DataCard.renderMerged(DataCard.buildState(corpus))) ==
+        expected - "top_token_share", s"$label renderMerged")
+    }
+  }
+
   test("mergeable states: merge ∘ buildState ≡ buildState ∘ union, bitwise, at any split") {
     import org.apache.spark.sql.functions._
     val corpus = graft.Tables

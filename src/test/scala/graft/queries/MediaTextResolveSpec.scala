@@ -64,6 +64,7 @@ class MediaTextResolveSpec extends SparkSpec {
 
     val got = Registry.queries("q_media_text_resolve")(spark, dir)
       .as[(Long, Long, Boolean)].collect().toSeq
+      .sortBy(_._1) // registry queries do not presentation-sort
     assert(got == Seq(
       (1L, 1L, true),  // survivor of the chained {1,2,3} cluster
       (2L, 1L, false), // in via the text edge

@@ -22,7 +22,8 @@ class SqlSurfaceSpec extends SparkSpec {
     val df = Registry.queries("q_flagship")(spark, dir)
     val sql = Registry.queries("q_flagship_sql")(spark, dir)
     assert(df.columns.toSeq == sql.columns.toSeq)
-    assert(df.collect().toSeq == sql.collect().toSeq)
+    // neither side presentation-sorts: compare as full-row-sorted
+    assert(sortedRows(df) == sortedRows(sql))
   }
 
   test("flagship: SQL and DataFrame optimized plans have the same shape") {
@@ -45,9 +46,12 @@ class SqlSurfaceSpec extends SparkSpec {
   test("SQL twins agree with their DataFrame originals") {
     Seq("q_total_per_year" -> "q_total_per_year_sql",
         "q_pct_window" -> "q_pct_window_sql").foreach { case (a, b) =>
-      val da = Registry.queries(a)(spark, dir).collect().toSeq
-      val db = Registry.queries(b)(spark, dir).collect().toSeq
+      val da = sortedRows(Registry.queries(a)(spark, dir))
+      val db = sortedRows(Registry.queries(b)(spark, dir))
       assert(da == db, s"$a vs $b")
     }
   }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.toString).toSeq
 }
