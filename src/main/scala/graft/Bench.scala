@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * single-run numbers captured transient 3–4× disturbances that a
   * re-run couldn't reproduce; a median is robust to one bad rep. The
   * session-shared memoized frames (shingles / signatures / simhash /
-  * minhash pairs — Dedup.frameMemo) are pre-built BEFORE measurement
+  * minhash pairs — the Memo `dedup` family) are pre-built BEFORE measurement
   * and reported as a separate `shared_build` number, so their one-time
   * localCheckpoint cost doesn't bill to the alphabetically-first
   * consumer query.
@@ -243,7 +243,7 @@ object Bench {
     // build-vs-probe is the postings pricing discipline
     var ivfIdxDir: String = null
     val ivfIdxBuildT = timeMed(reps, "ivf_index_build") {
-      Similarity.evictIvfIndex(spark)
+      Memo.evict(spark, Memo.IvfIndexes)
       ivfIdxDir = Similarity.ivfIndexPath(emb)
     }
     val ivfIdx = spark.read.parquet(ivfIdxDir)
@@ -1666,7 +1666,7 @@ object Bench {
     var dims: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame) = null
     val dimsT = timeMed(reps, "decon_dims_build") {
-      graft.extensions.Dedup.evictShared(spark) // bill a cold dims build
+      Memo.evict(spark, Memo.DedupFrames) // bill a cold dims build
       dims = StreamingRetrievalDecon.dims(corpus, bench, terms, n = 4)
     }
     val (st, idf, bg) = dims
@@ -1742,7 +1742,7 @@ object Bench {
     var lgBloomFrozen: Option[org.apache.spark.broadcast.Broadcast[
       org.apache.spark.util.sketch.BloomFilter]] = None
     val lgBloomFreezeT = timeMed(reps, "linegate_bloom_freeze") {
-      graft.extensions.Membership.evictFilters(spark)
+      Memo.evict(spark, Memo.BloomFilters)
       lgBloomFrozen =
         graft.streaming.StreamingLineGate.freezeBoilerplateBloom(corpus)
     }
@@ -1782,7 +1782,7 @@ object Bench {
     var sdIndex: org.apache.spark.sql.DataFrame = null
     var sdState: graft.streaming.StreamingSoftDedup.State = null
     val sdBuildT = timeMed(reps, "softdedup_state_build") {
-      graft.extensions.Dedup.evictShared(spark) // bill a cold CC build
+      Memo.evict(spark, Memo.DedupFrames) // bill a cold CC build
       sdIndex = graft.extensions.Dedup.bandBuckets(
         graft.extensions.Dedup.shingles(sdDocs, share = false),
         share = false).localCheckpoint()
@@ -1807,7 +1807,7 @@ object Bench {
     var sdIndexHalf: org.apache.spark.sql.DataFrame = null
     var sdStateHalf: graft.streaming.StreamingSoftDedup.State = null
     timeMed(1, "softdedup_half_build") {
-      graft.extensions.Dedup.evictShared(spark)
+      Memo.evict(spark, Memo.DedupFrames)
       sdIndexHalf = graft.extensions.Dedup.bandBuckets(
         graft.extensions.Dedup.shingles(sdDocsHalf, share = false),
         share = false).localCheckpoint()

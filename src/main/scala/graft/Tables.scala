@@ -37,41 +37,21 @@ object Tables {
   private val eventsRawSchema =
     "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
 
-  /** Memoized analyzed frames, keyed by (session, dir, name).
+  /** Memoized analyzed frames, one per (session, table path), in the
+    * [[Memo]] family `tables`.
     *
     * `spark.read.parquet` re-lists the directory and re-reads the footer
     * schema on every call; across a ~77-query suite that fixed cost is
     * most of the wall time at small SF. Reusing the analyzed
     * LogicalRelation is exactly what `spark.table` does with a catalog —
-    * plans, pushdown and pruning are unaffected. Keyed by session so a
-    * stopped session's frames are never served to a new one, and evicted
-    * when the session's context ends so long-lived processes that build
-    * many sessions don't retain dead plans. */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private val evictionHooked =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Boolean]
-
-  private def ensureEviction(spark: SparkSession): Unit =
-    evictionHooked.getOrElseUpdate(spark, {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            evict(spark)
-        })
-      true
-    })
-
-  /** Drop this session's memoized frames (application-end hook). */
-  def evict(spark: SparkSession): Unit = {
-    memo.keys.filter(_._1 eq spark).foreach(memo.remove)
-    evictionHooked.remove(spark)
-  }
-
+    * plans, pushdown and pruning are unaffected. Each call lists the
+    * path's files ([[Memo.files]], length and mtime only): unchanged
+    * files return the identical frame, a path rewritten in place is read
+    * again. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    ensureEviction(spark)
-    memo.getOrElseUpdate((spark, dir, name), load(spark, dir, name))
+    val path = s"$dir/$name.parquet"
+    Memo(spark, Memo.TableFrames, path, Memo.files(spark, path))(
+      load(spark, dir, name))
   }
 
   /** The nanos-fallback trigger: the stable error CONDITION

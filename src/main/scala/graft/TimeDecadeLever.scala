@@ -49,7 +49,7 @@ object TimeDecadeLever {
     // ---- q_corpus_clean_full ----
     var decon: org.apache.spark.sql.DataFrame = null
     time("ccf_gates") {
-      graft.extensions.Dedup.evictShared(spark) // cold, like the bench row
+      Memo.evict(spark, Memo.DedupFrames) // cold, like the bench row
       decon = CorpusPipeline.gatedDecon(corpus, bench)
       decon.count()
     }
@@ -80,7 +80,7 @@ object TimeDecadeLever {
     // ---- q_postings_compact ----
     var pairs: org.apache.spark.sql.DataFrame = null
     time("pc_termpairs") {
-      graft.extensions.Dedup.evictShared(spark)
+      Memo.evict(spark, Memo.DedupFrames)
       pairs = Postings.termPairs(docs).localCheckpoint()
       pairs.count()
     }

@@ -42,8 +42,8 @@ object TimeLineLever {
       .localCheckpoint()
     println(s"LEVER frozen_census_rows=${frozen.count()}")
     def cold(): Unit = {
-      graft.extensions.Dedup.evictShared(spark)
-      graft.extensions.Membership.evictFilters(spark)
+      Memo.evict(spark, Memo.DedupFrames)
+      Memo.evict(spark, Memo.BloomFilters)
     }
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()

@@ -219,7 +219,8 @@ object DataSelection {
     *
     * Scale shape: rides the memoized scored frame ([[perplexityScore]])
     * with one narrow source join; everything after the per-source
-    * aggregate is K-row arithmetic on broadcast scalars. */
+    * aggregate is K-row arithmetic on broadcast scalars.
+    * Row order is not part of the result. */
   def excessLossWeights(
       documents: DataFrame, eta: Double = 1.0,
       epsilon: Double = 0.1): DataFrame = {

@@ -1,11 +1,9 @@
 package graft.extensions
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+
+import graft.Memo
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §7.1 step 7 — beyond reference parity).
@@ -45,10 +43,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       fastHash: Boolean = false,
       share: Boolean = true): DataFrame = {
-    val spark = documents.sparkSession
-    if (shareEnabled(spark, share))
-      memoized(spark,
-        ("minhash", planOf(documents), numHashes, rowsPerBand, fastHash))(
+    if (shareEnabled(documents.sparkSession, share))
+      memoized(documents, ("minhash", numHashes, rowsPerBand, fastHash))(
         computeMinHashLsh(documents, numHashes, rowsPerBand, fastHash, share))
     else computeMinHashLsh(documents, numHashes, rowsPerBand, fastHash, share)
   }
@@ -150,10 +146,8 @@ object Dedup {
       numHashes: Int = 8,
       fastHash: Boolean = false,
       share: Boolean = true): DataFrame = {
-    val spark = shingleFrame.sparkSession
-    if (shareEnabled(spark, share))
-      memoized(spark,
-        ("signatures", planOf(shingleFrame), numHashes, fastHash))(
+    if (shareEnabled(shingleFrame.sparkSession, share))
+      memoized(shingleFrame, ("signatures", numHashes, fastHash))(
         computeSignatures(shingleFrame, numHashes, fastHash))
     else computeSignatures(shingleFrame, numHashes, fastHash)
   }
@@ -260,10 +254,8 @@ object Dedup {
     * narrow projection (the per-(doc, bit) exploded formulation costs two
     * more shuffles and 16× the rows). */
   def simHash(documents: DataFrame, share: Boolean = true): DataFrame = {
-    val spark = documents.sparkSession
-    if (shareEnabled(spark, share))
-      memoized(spark, ("simhash", planOf(documents)))(
-        computeSimHash(documents, share))
+    if (shareEnabled(documents.sparkSession, share))
+      memoized(documents, "simhash")(computeSimHash(documents, share))
     else computeSimHash(documents, share)
   }
 
@@ -696,21 +688,7 @@ object Dedup {
     * chain again; the memo keeps ONE labeled table per input plan —
     * at cluster scale, the persisted component table a dedup pipeline
     * maintains between stages (the same discipline as the shingle /
-    * signature frames).
-    *
-    * STATIC-INPUT CONTRACT (the [[Similarity]] scoredFrame note,
-    * restated for this consumer because the failure is nastier): the
-    * memo key is the CANONICALIZED INPUT PLAN, not the data. If the
-    * documents are file-backed and the files change in-session, a
-    * plan-equal re-read silently serves the component table AS OF the
-    * first call — and since [[leakageSafeSplit]] folds BY COMPONENT, a
-    * late-arriving document would be folded against stale components:
-    * it could land in an eval fold while its (newly ingested) near-dup
-    * sits in train — precisely the leak this operator exists to
-    * prevent. For mutable corpora call [[evictShared]] on the ingest
-    * cadence (the maintenance hook; DedupScaleSpec documents it) or
-    * opt out via `spark.graft.dedup.shareFrames=false`. Immutable
-    * snapshot frames — the intended use — are unaffected. */
+    * signature frames). */
   def ccLabels(documents: DataFrame): DataFrame =
     sharedFrame(documents, "cc_labels")(
       ConnectedComponents.label(documents.select("doc_id"),
@@ -729,7 +707,7 @@ object Dedup {
     *
     * Cost on top of [[ccLabels]] (session-shared): one comp-keyed count
     * and a join back — both on the (doc_id, comp) metadata frame, never
-    * the text. Inherits ccLabels' static-input contract. */
+    * the text. */
   def softDedupWeights(documents: DataFrame): DataFrame = {
     val labels = ccLabels(documents)
     val sz = labels.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
@@ -742,7 +720,8 @@ object Dedup {
     * raw document count vs dedup-adjusted effective mass (Σ 1/|comp|)
     * and their ratio — the number a mixture step feeds its sampling
     * rates so heavily-duplicated sources don't buy weight with copies.
-    * Per-doc weights are DECIMAL-summed (order-independent). */
+    * Per-doc weights are DECIMAL-summed (order-independent).
+    * Row order is not part of the result. */
   def softDedupMass(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), col("source"))
       .join(softDedupWeights(documents)
@@ -767,12 +746,7 @@ object Dedup {
     * re-runs are fold-stable and a document later joining an existing
     * component inherits that component's fold. Cost: the CC labeling
     * (bounded large-star/small-star iterations) plus one narrow bucket
-    * projection — no new shuffle class.
-    *
-    * Inherits [[ccLabels]]' STATIC-INPUT CONTRACT: folds served from a
-    * stale memoized component table would silently mis-fold documents
-    * ingested after the first call — for mutable corpora, evict on the
-    * ingest cadence ([[evictShared]]) or disable frame sharing. */
+    * projection — no new shuffle class. */
   def leakageSafeSplit(documents: DataFrame, nFolds: Int = 10): DataFrame = {
     require(nFolds >= 2, s"nFolds must be >= 2, got $nFolds")
     val comps = ccLabels(documents)
@@ -803,8 +777,7 @@ object Dedup {
     * (q_split_assign).
     *
     * Scale shape: the CC labeling plus one broadcast-rate narrow pass
-    * and one left join on doc_id — no new shuffle class; inherits
-    * [[ccLabels]]' static-input contract. */
+    * and one left join on doc_id — no new shuffle class. */
   def trainEvalSplit(
       documents: DataFrame,
       nFolds: Int = 10,
@@ -830,63 +803,38 @@ object Dedup {
     * deterministic frames — the distinct-shingle frame, the MinHash
     * candidate pairs, the SimHash fingerprints — and each recompute costs
     * a scan + a SHUFFLE. Deterministic intermediates are therefore
-    * memoized per (session, canonicalized input plan, params) and
+    * memoized per (session, canonicalized input plan, params) in the
+    * [[Memo]] family `dedup` (rebuilt when the input's files change) and
     * localCheckpoint'ed, so the second consumer reads materialized
     * partitions instead of re-shuffling; at cluster scale the same role
     * is played by persisting the frame to storage between pipeline
-    * stages. Entries drop on application end (listener); call
-    * [[evictShared]] to free executor storage sooner; set
-    * `spark.graft.dedup.shareFrames=false` (or pass `share = false`) for
-    * one-shot pipelines where checkpointing a never-reused frame is pure
-    * overhead. */
-  private val frameMemo = TrieMap.empty[(SparkSession, Any), DataFrame]
-  private val evictionHooked = TrieMap.empty[SparkSession, Boolean]
-
+    * stages. Set `spark.graft.dedup.shareFrames=false` (or pass
+    * `share = false`) for one-shot pipelines where checkpointing a
+    * never-reused frame is pure overhead. */
   private def shareEnabled(spark: SparkSession, share: Boolean): Boolean =
     share && spark.conf.getOption("spark.graft.dedup.shareFrames")
       .forall(_.toBoolean)
 
-  private def memoized(spark: SparkSession, key: Any)(build: => DataFrame): DataFrame = {
-    evictionHooked.getOrElseUpdate(spark, {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-          evictShared(spark)
-      })
-      true
-    })
-    frameMemo.getOrElseUpdate((spark, key), build.localCheckpoint())
-  }
-
-  private def planOf(df: DataFrame): LogicalPlan =
-    df.queryExecution.analyzed.canonicalized
+  private def memoized(input: DataFrame, key: Any)(build: => DataFrame): DataFrame =
+    Memo.of(input, Memo.DedupFrames, key)(build.localCheckpoint())
 
   /** Package hook into the shared-frame memo for sibling modules
     * ([[Winnowing]], the query registry's q_json_nested input build):
-    * same session keying, same localCheckpoint stage boundary, same
-    * app-end eviction and `spark.graft.dedup.shareFrames` opt-out. */
+    * same keying, same localCheckpoint stage boundary and
+    * `spark.graft.dedup.shareFrames` opt-out. */
   private[graft] def sharedFrame(
       df: DataFrame, tag: String, params: Any*)(
-      build: => DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!shareEnabled(spark, share = true)) build
-    else memoized(spark, (tag, planOf(df), params.toList))(build)
-  }
-
-  /** Drop this session's memoized frames. */
-  def evictShared(spark: SparkSession): Unit = {
-    frameMemo.keys.filter(_._1 eq spark).foreach(frameMemo.remove)
-    evictionHooked.remove(spark)
-  }
+      build: => DataFrame): DataFrame =
+    if (!shareEnabled(df.sparkSession, share = true)) build
+    else memoized(df, (tag, params.toList))(build)
 
   /** Word-3-gram shingles per doc (distinct), memoized per input plan
-    * (see [[frameMemo]]). The token array is materialized once per row
+    * (see [[sharedFrame]]). The token array is materialized once per row
     * before the positional transform (the repeated-`split` form defeats
     * common-subexpression elimination inside lambda scopes). */
   def shingles(documents: DataFrame, n: Int = 3, share: Boolean = true): DataFrame = {
-    val spark = documents.sparkSession
-    if (!shareEnabled(spark, share)) computeShingles(documents, n)
-    else memoized(spark, ("shingles", planOf(documents), n))(
-      computeShingles(documents, n))
+    if (!shareEnabled(documents.sparkSession, share)) computeShingles(documents, n)
+    else memoized(documents, ("shingles", n))(computeShingles(documents, n))
   }
 
   // r20 (optimization round, guide §2.4): the per-doc dedup is

@@ -2,15 +2,13 @@ package graft.extensions
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.Memo
 import graft.functions.BloomProbe
 
 /** Bloom-prefiltered cross-corpus membership — the decontamination /
@@ -49,116 +47,32 @@ object Membership {
 
   private val probeId = new AtomicLong(0)
 
-  /** Built filters, memoized per (session, canonicalized ref plan,
-    * keyCol, expectedItems, fpp) — the same pattern as
-    * `Dedup.frameMemo`: a filter is ~1.2 bytes/item (up to ~120 MB at
-    * the 10⁸-key ceiling), so re-broadcasting one per CALL would
-    * accumulate that much driver+executor storage for the session
-    * lifetime on any repeated (e.g. per-batch) use. Entries are
-    * destroyed on application end; [[evictFilters]] frees them
-    * sooner. */
-  private val filterMemo =
-    TrieMap.empty[(SparkSession, Any), Broadcast[BloomFilter]]
-  private val evictionHooked = TrieMap.empty[SparkSession, Boolean]
-
-  /** Broadcasts swapped out by a `refresh`, awaiting destruction: an
-    * unpersist'ed broadcast keeps its driver copy until app end, so a
-    * long-lived session refreshing on a tight cadence would accumulate
-    * one ~MB bitset per refresh on the driver heap. Keyed like the memo
-    * (per filter, not per session) so one key's refresh can never cut
-    * short ANOTHER key's grace cycle. Each retiree carries its
-    * retirement timestamp and is destroyed only once a WALL-CLOCK grace
-    * ([[RetireGraceMsConf]], default 5 min) has elapsed — a grace
-    * counted in refresh CALLS would let two quick same-key refreshes
-    * (two callers at startup, a tight maintenance loop) destroy a
-    * broadcast created moments earlier while an in-flight or retained
-    * query plan still references it, the exact race unpersist-only code
-    * avoids. Retirees younger than the grace stay parked (worst-case
-    * heap: refresh-rate × grace window, bounded for any sane cadence)
-    * until a later same-key refresh ages them out or app end destroys
-    * them unconditionally. */
-  private val retired =
-    TrieMap.empty[(SparkSession, Any), List[(Broadcast[BloomFilter], Long)]]
-
-  /** Session conf key for the retired-broadcast destruction grace in
-    * milliseconds. Default 300000 (5 min) — long enough for any
-    * in-flight query that captured the old broadcast to finish. */
-  val RetireGraceMsConf = "spark.graft.bloom.retireGraceMs"
-  private val DefaultRetireGraceMs = 300000L
-
-  private def memoizedFilter(spark: SparkSession, key: Any)(
-      build: => Broadcast[BloomFilter]): Broadcast[BloomFilter] = {
-    evictionHooked.getOrElseUpdate(spark, {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-          evictFilters(spark)
-      })
-      true
-    })
-    filterMemo.getOrElseUpdate((spark, key), build)
-  }
-
-  /** Drop one memoized filter (rebuild-and-swap for `refresh`).
-    * `unpersist`, NOT `destroy`, for the filter being swapped: a
-    * concurrent query in the same session may still be executing
-    * against the old broadcast, and destroy() invalidates in-use data
-    * mid-flight. unpersist(blocking = false) removes the executor
-    * copies (in-flight tasks re-fetch from the driver) so the swap is
-    * race-free; the broadcast then parks in this key's [[retired]] list
-    * with its retirement timestamp. Retirees whose wall-clock grace
-    * ([[RetireGraceMsConf]]) has elapsed are destroyed here; younger
-    * ones stay parked for a later refresh or the app-end destroy —
-    * destruction is gated on TIME, never on refresh count, so
-    * back-to-back refreshes cannot invalidate a broadcast an in-flight
-    * query still references. */
-  private def dropFilter(spark: SparkSession, key: Any): Unit = {
-    val graceMs = spark.conf.getOption(RetireGraceMsConf)
-      .map(_.toLong).getOrElse(DefaultRetireGraceMs)
-    val now = System.currentTimeMillis()
-    val (aged, young) = retired.remove((spark, key)).getOrElse(Nil)
-      .partition { case (_, t) => now - t >= graceMs }
-    aged.foreach(_._1.destroy())
-    val swapped = filterMemo.remove((spark, key)).map { b =>
-      b.unpersist(blocking = false)
-      (b, now)
-    }
-    val keep = young ++ swapped
-    if (keep.nonEmpty) retired.put((spark, key), keep)
-  }
-
-  /** Destroy this session's memoized filter broadcasts. Full teardown —
-    * unlike the `refresh` swap this destroys driver copies too, so don't
-    * race it against in-flight queries still probing a filter. */
-  def evictFilters(spark: SparkSession): Unit = {
-    filterMemo.keys.filter(_._1 eq spark).foreach { k =>
-      filterMemo.remove(k).foreach(_.destroy())
-    }
-    retired.keys.filter(_._1 eq spark).foreach { k =>
-      retired.remove(k).foreach(_.foreach(_._1.destroy()))
-    }
-    evictionHooked.remove(spark)
-  }
+  /** Built filters are memoized per (session, canonicalized ref plan,
+    * params) in the [[Memo]] family `bloom` and rebuilt when `ref`'s
+    * files change: a filter is ~1.2 bytes/item (up to ~120 MB at the
+    * 10⁸-key ceiling), so re-broadcasting one per CALL would accumulate
+    * that much driver+executor storage on any repeated (e.g. per-batch)
+    * use. A replaced filter is only dropped from the memo — plans built
+    * before keep probing it, and Spark's ContextCleaner destroys it once
+    * no plan reaches it. */
+  private def memoizedFilter(ref: DataFrame, key: Any, refresh: Boolean)(
+      build: => BloomFilter): Broadcast[BloomFilter] =
+    Memo.of(ref, Memo.BloomFilters, key, refresh)(
+      ref.sparkSession.sparkContext.broadcast(build))
 
   /** Build (or fetch the session-memoized) broadcast Bloom over `ref`'s
     * 64-bit `hashCol` values — the filter half of [[bloomSemiJoin]],
     * exposed for siblings whose probe is NOT followed by an exact join
     * ([[LineDedup.dedupLinesBloom]]'s keep-zero scrub, where a false
     * positive is a tolerated extra drop rather than something a
-    * semi-join re-checks). Same memo, staleness contract and app-end
-    * eviction as [[bloomSemiJoin]]'s filters; callers guard the
-    * zero-row NPE themselves (an empty reference usually short-circuits
-    * the whole probe). */
+    * semi-join re-checks). Same memo as [[bloomSemiJoin]]'s filters;
+    * callers guard the zero-row NPE themselves (an empty reference
+    * usually short-circuits the whole probe). */
   private[graft] def hashSetFilter(
       ref: DataFrame, hashCol: String, expectedItems: Long,
-      fpp: Double): Broadcast[BloomFilter] = {
-    val spark = ref.sparkSession
-    val memoKey = ("hashset", ref.queryExecution.analyzed.canonicalized,
-      hashCol, expectedItems, fpp)
-    memoizedFilter(spark, memoKey) {
-      spark.sparkContext.broadcast(
-        ref.stat.bloomFilter(hashCol, expectedItems, fpp))
-    }
-  }
+      fpp: Double): Broadcast[BloomFilter] =
+    memoizedFilter(ref, ("hashset", hashCol, expectedItems, fpp),
+      refresh = false)(ref.stat.bloomFilter(hashCol, expectedItems, fpp))
 
   /** Filter `df` by a broadcast Bloom probe of `hash` (a 64-bit key
     * expression): keeps rows whose membership answer equals
@@ -184,16 +98,11 @@ object Membership {
     * exactly the left-semi join result; the Bloom filter only prunes
     * the shuffle.
     *
-    * STALENESS CONTRACT of the memoized filter: the broadcast is keyed
-    * on `ref`'s CANONICALIZED PLAN, not its data. If the reference is a
-    * mutable source (JDBC table, re-written parquet path) whose contents
-    * change under a plan-equal read, the cached filter no longer covers
-    * newly added keys — and since the filter prunes BEFORE the exact
-    * semi-join, missing keys mean silently dropped rows. For mutable
-    * references pass `refresh = true` (rebuild-and-swap: the stale
-    * broadcast is destroyed, the memo stays leak-free) or call
-    * [[evictFilters]] on the maintenance cadence. Immutable snapshot
-    * frames — the intended use — are unaffected. */
+    * The memoized filter follows `ref`'s files (a rewritten parquet
+    * reference rebuilds it). A reference with no file leaves — a JDBC
+    * table, an RDD — is keyed on its plan alone; when its contents
+    * change, pass `refresh = true` to rebuild and swap the filter, since
+    * a stale one prunes newly added keys BEFORE the exact semi-join. */
   def bloomSemiJoin(
       big: DataFrame,
       ref: DataFrame,
@@ -207,14 +116,10 @@ object Membership {
     // buffer never initializes); an empty reference also makes the
     // prefilter pointless — the semi-join alone answers (with no rows)
     if (ref.isEmpty) return exactSemi
-    val spark = big.sparkSession
-    val memoKey =
-      (ref.queryExecution.analyzed.canonicalized, keyCol, expectedItems, fpp)
-    if (refresh) dropFilter(spark, memoKey)
-    val bfBc = memoizedFilter(spark, memoKey) {
-      spark.sparkContext.broadcast(
-        ref.select(xxhash64(col(keyCol)).as("k"))
-          .stat.bloomFilter("k", expectedItems, fpp))
+    val bfBc = memoizedFilter(ref, ("semijoin", keyCol, expectedItems, fpp),
+      refresh) {
+      ref.select(xxhash64(col(keyCol)).as("k"))
+        .stat.bloomFilter("k", expectedItems, fpp)
     }
     // A function-registry builder is the one public seam that lets a
     // captured broadcast become an Expression — see [[filterByProbe]].

@@ -130,7 +130,8 @@ object QualityRules {
     * INDEPENDENT fail count (a doc failing three rules counts in all
     * three — the tuning view, unlike [[CorpusPipeline.funnelFull]]'s
     * first-fail attribution), plus a 'pass' row carrying the survivor
-    * count. Single aggregation over the flags frame. */
+    * count. Single aggregation over the flags frame.
+    * Row order is not part of the result. */
   def gopherReport(documents: DataFrame,
       t: Thresholds = Thresholds()): DataFrame = {
     val flags = gopherFlags(documents, t)

@@ -61,7 +61,8 @@ object Similarity {
     * broadcast-hash join on the cell key (never all-pairs, never a
     * corpus shuffle) plus one per-doc aggregate. At 100 TB with the
     * corpus bucketed by cell the join is also partition-pruned to
-    * cells the benchmark occupies. */
+    * cells the benchmark occupies.
+    * Row order is not part of the result. */
   def semanticDecon(corpus: DataFrame, benchmark: DataFrame,
                     tau: Double = 0.3): DataFrame = {
     val c = withNorm(corpus)
@@ -92,7 +93,8 @@ object Similarity {
     * prompt the paraphrase channel says still leaks. Total over the
     * benchmark: max_cos NULL distinguishes "no corpus vector shares my
     * cell" from "compared and clean". Same broadcast/cell-blocked
-    * shape as the forward direction. */
+    * shape as the forward direction.
+    * Row order is not part of the result. */
   def semanticReport(corpus: DataFrame, benchmark: DataFrame,
                      tau: Double = 0.3): DataFrame = {
     val c = withNorm(corpus)
@@ -207,29 +209,16 @@ object Similarity {
     else e.write.mode("overwrite").partitionBy("label").parquet(path)
   }
 
-  /** Session-memoized index build: one write per (session, corpus
-    * plan); every caller probes the same on-disk index (the
-    * Dedup.sharedFrame discipline applied to a persisted artifact —
-    * fresh temp dir per JVM, so no cross-run staleness). */
-  private val ivfIndexMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  def ivfIndexPath(embeddings: DataFrame): String = {
-    val spark = embeddings.sparkSession
-    val key = (spark, embeddings.queryExecution.analyzed.canonicalized.toString)
-    ivfIndexMemo.getOrElseUpdate(key, {
+  /** Session-memoized index build ([[graft.Memo]] family `ivf`): one
+    * write per (session, corpus plan, corpus files); every caller probes
+    * the same on-disk index in a fresh temp dir. */
+  def ivfIndexPath(embeddings: DataFrame): String =
+    graft.Memo.of(embeddings, graft.Memo.IvfIndexes, "ivf_index") {
       val dir = java.nio.file.Files.createTempDirectory("graft-ivf")
         .toFile.getAbsolutePath
       writeIvfIndex(embeddings, dir)
       dir
-    })
-  }
-
-  /** Drop this session's memoized index paths (bench billing: evict,
-    * then the next [[ivfIndexPath]] pays a cold build). */
-  def evictIvfIndex(spark: org.apache.spark.sql.SparkSession): Unit =
-    ivfIndexMemo.keys.filter(_._1 eq spark).foreach(ivfIndexMemo.remove)
+    }
 
   /** Incremental index maintenance (r19 VERDICT #5): UPSERT an arriving
     * raw-embeddings batch into the persisted label-partitioned index,
@@ -441,20 +430,9 @@ object Similarity {
     * n × |queryIds|, small relative to the scan. Routed through the
     * shared-frame memo so repeated calls (bench reps, verify runs, and
     * the recall + classify pair on the same sample) retain ONE
-    * materialized copy per (embeddings, queryIds), not one per call;
-    * entries drop on app end / Dedup.evictShared. Under the
-    * shareFrames=false opt-out the frame is checkpointed per call, the
-    * pre-memo behavior.
-    *
-    * STATIC-INPUT CONTRACT (same as the shingles memo): the memo key is
-    * the CANONICALIZED INPUT PLAN, not the data. If the embeddings are
-    * file-backed and the files change in-session (an append, a
-    * rewrite), a plan-equal re-read silently serves the stale
-    * checkpointed frame — [[recallAtK]] and [[knnClassify]] then score
-    * against the corpus AS OF the first call. For mutable inputs, call
-    * `Dedup.evictShared(spark)` on the maintenance cadence (or opt out
-    * via shareFrames=false); immutable snapshot frames — the intended
-    * use — are unaffected. */
+    * materialized copy per (embeddings, queryIds), not one per call.
+    * Under the shareFrames=false opt-out the frame is checkpointed per
+    * call, the pre-memo behavior. */
   private def scoredFrame(e: DataFrame, queryIds: Seq[Long]): DataFrame = {
     val q = e.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -471,9 +449,7 @@ object Similarity {
     }
   }
 
-  /** NOTE: shares [[scoredFrame]]'s memoized frame — see its
-    * STATIC-INPUT CONTRACT for mutable (file-backed, changing)
-    * embedding sources. */
+  /** Shares [[scoredFrame]]'s memoized frame with [[knnClassify]]. */
   def recallAtK(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = withNorm(embeddings)
@@ -499,8 +475,7 @@ object Similarity {
     * deterministic tie-breaks (votes desc, label asc), the vector's own
     * label, and the hit flag. Shares [[scoredFrame]]'s memoized n ×
     * |queryIds| frame with [[recallAtK]] — running both contracts on
-    * the same sample scans the corpus once; see scoredFrame's
-    * STATIC-INPUT CONTRACT for mutable embedding sources. */
+    * the same sample scans the corpus once. */
   def knnClassify(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     val e = withNorm(embeddings)
     val scored = scoredFrame(e, queryIds)
@@ -773,7 +748,8 @@ object Similarity {
     * above it the probe join runs as a plain cell-keyed shuffle join
     * (both sides exchange on `label` — the right plan when the anchor
     * side is itself data-scaled). Both sides of the threshold are
-    * plan-pinned in HardNegativesSpec. */
+    * plan-pinned in HardNegativesSpec.
+    * Row order is not part of the result. */
   def hardNegatives(
       embeddings: DataFrame,
       anchorMod: Long = 100,

@@ -651,7 +651,8 @@ object TextAnalysis {
     * outside the weight vocab contribute 0 (the inner join drops them)
     * while still counting toward dl — unseen-token behavior a
     * frozen-vocab deployment needs. Shared verbatim by
-    * [[classifierScore]] and the streaming twin. */
+    * [[classifierScore]] and the streaming twin.
+    * Row order is not part of the result. */
   private[graft] def scoreWithWeights(documents: DataFrame,
       weights: DataFrame, threshold: Double): DataFrame = {
     val docs = classifierDocs(documents)
@@ -787,12 +788,11 @@ object TextAnalysis {
     * [[duplicatedSpans]]; hashed ≡ raw is pinned in ExactSubstrSpec.
     *
     * Session-memoized via [[Dedup.sharedFrame]] (the shingles
-    * discipline, incl. its STATIC-INPUT CONTRACT and the
-    * `spark.graft.dedup.shareFrames` opt-out): spans, clean, apply and
-    * the training-set composition all consume this same frame, so its
-    * two shuffles run once per (corpus, k, hashWindows) instead of
-    * once per caller — at cluster scale the persisted window-position
-    * table between pipeline stages. */
+    * discipline, incl. the `spark.graft.dedup.shareFrames` opt-out):
+    * spans, clean, apply and the training-set composition all consume
+    * this same frame, so its two shuffles run once per (corpus, k,
+    * hashWindows) instead of once per caller — at cluster scale the
+    * persisted window-position table between pipeline stages. */
   private def dupWindowPositions(
       documents: DataFrame, k: Int, hashWindows: Boolean = false): DataFrame =
     Dedup.sharedFrame(documents, "dup_window_positions", k, hashWindows) {

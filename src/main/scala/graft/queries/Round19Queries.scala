@@ -232,38 +232,28 @@ object Round19Queries {
         ORDER BY tokenizer"""))
 
   /** The wide post-snapshot-A state as a BUCKETED+SORTED table, built
-    * once per (session, sf dir) — the ivfIndexPath memo discipline
-    * applied to the merge's persisted-state story. The 2.4-semantics
-    * sorted-bucket-scan conf the zero-sort probe needs is pinned
-    * SESSION-WIDE at build by [[graft.GraftSession.protectedConfs]]
+    * once per (session, snapshot plan, snapshot files) in the
+    * [[graft.Memo]] family `scd_bucketed` — the ivfIndexPath memo
+    * discipline applied to the merge's persisted-state story. The
+    * 2.4-semantics sorted-bucket-scan conf the zero-sort probe needs is
+    * pinned SESSION-WIDE at build by [[graft.GraftSession.protectedConfs]]
     * (r19 VERDICT #4 — the build must not leak conf into the session,
     * so plan shape never depends on whether this row ran first); a
     * foreign session without the pin still computes the identical
     * merge, just with a Sort on the state side. */
-  private val scdBktMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  /** Test seam: drop the session's memoized bucketed-state tables so
-    * the next q_merge_scd_bucketed call exercises the BUILD path —
-    * GraftSessionSpec's conf-neutrality pin is vacuous against a warm
-    * memo (the only place a reintroduced conf.set could live is the
-    * build body). */
-  private[graft] def evictBucketedState(
-      s: org.apache.spark.sql.SparkSession): Unit =
-    scdBktMemo.keys.filter(_._1 eq s).foreach(scdBktMemo.remove)
-
   private def bucketedWideState(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    scdBktMemo.getOrElseUpdate((s, dir), {
-      val a = CoreQueries.wideSnap(s, dir, perturb = false,
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
+      s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val a = CoreQueries.wideSnap(s, dir, perturb = false,
+      col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
+    graft.Memo.of(a, graft.Memo.ScdBucketedState, dir) {
       val s1 = ScdMerge.applySnapshot(
         ScdMerge.emptyState(a), a, "1998-01-01", "id", CoreQueries.wideCols)
       val tbl = "scd_state_wide_" +
         java.lang.Integer.toHexString(dir.hashCode)
       Layout.writeBucketedSorted(s1, tbl, Seq("id"), 32)
       tbl
-    })
+    }
+  }
 
   /** q_merge_scd_wide's physical twin over a PERSISTED bucketed state
     * (r18 VERDICT #1, driver-verified): snapshot B merges against the

@@ -42,7 +42,7 @@ class GraftSessionSpec extends AnyFunSuite {
       // this session may already have built the table) the build body,
       // the only place a reintroduced conf.set could live, would never
       // run and the assertions would pass vacuously.
-      graft.queries.Round19Queries.evictBucketedState(s)
+      Memo.evict(s, Memo.ScdBucketedState)
       s.conf.set(key, "false")
       val before = s.conf.getAll
       graft.queries.Registry.queries("q_merge_scd_bucketed")(

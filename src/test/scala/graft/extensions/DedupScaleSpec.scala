@@ -139,8 +139,8 @@ class DedupScaleSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dedup.shareFrames")
     // per-call opt-out recomputes too
     assert(!(Dedup.shingles(in, share = false) eq s1))
-    Dedup.evictShared(spark)
+    graft.Memo.evict(spark, graft.Memo.DedupFrames)
     assert(!(Dedup.shingles(in) eq s1)) // evicted -> fresh frame
-    Dedup.evictShared(spark)
+    graft.Memo.evict(spark, graft.Memo.DedupFrames)
   }
 }

@@ -159,7 +159,7 @@ class IvfIndexSpec extends SparkSpec {
     val p2 = Similarity.ivfIndexPath(
       Tables.table(spark, "/root/testdata/sf0.001", "embeddings"))
     assert(p1 == p2, "same corpus plan -> same persisted index")
-    Similarity.evictIvfIndex(spark)
+    graft.Memo.evict(spark, graft.Memo.IvfIndexes)
     val p3 = Similarity.ivfIndexPath(emb)
     assert(p3 != p1, "eviction forces a fresh build")
   }

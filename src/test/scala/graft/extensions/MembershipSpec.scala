@@ -95,9 +95,9 @@ class MembershipSpec extends SparkSpec {
     // different params build a different filter
     val c = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 200))
     assert(!(a eq c))
-    // refresh=true rebuild-and-swaps: new broadcast, stale one destroyed,
-    // and the memo serves the NEW one afterwards (the mutable-ref escape
-    // hatch of the staleness contract)
+    // refresh=true rebuild-and-swaps: new broadcast, and the memo serves
+    // the NEW one afterwards (the escape hatch for a reference with no
+    // file leaves, whose changes the memo cannot see)
     val d = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 100,
       refresh = true))
     assert(!(a eq d), "refresh must not serve the stale broadcast")
@@ -105,8 +105,7 @@ class MembershipSpec extends SparkSpec {
     assert(d eq e, "post-refresh calls reuse the refreshed broadcast")
   }
 
-  test("retired broadcasts survive back-to-back refreshes (time-gated " +
-    "grace, not call-counted) and are destroyed once the grace elapses") {
+  test("old plans outlive back-to-back refreshes; memo serves the newest") {
     val bigDist = spark.range(1, 8).select(col("id").as("doc_id"),
       concat(lit("w"), col("id")).as("s"))
     val refDist = spark.range(1, 4).select(concat(lit("w"), col("id")).as("s"))
@@ -115,30 +114,25 @@ class MembershipSpec extends SparkSpec {
         .collect { case n => n.expressions }.flatten
         .flatMap(e => e.collect { case p: graft.functions.BloomProbe => p })
         .head.bf
-    // fresh memo entry for this test (expectedItems distinguishes keys).
-    // Default grace (5 min): two refreshes in quick succession — the
-    // race the call-counted grace had — must NOT destroy either retiree;
-    // an in-flight plan referencing them stays valid.
-    val a = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 300))
-    val d = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 300,
-      refresh = true)) // a retired: unpersist'ed, driver copy intact
-    val e = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 300,
-      refresh = true)) // d retired too; a PARKED — grace hasn't elapsed
-    assert(!(d eq e))
-    assert(a.value != null, "quick re-refresh must not destroy a young retiree")
-    assert(d.value != null, "quick re-refresh must not destroy a young retiree")
-    // Tiny grace: once the wall-clock grace HAS elapsed, the next
-    // same-key refresh ages the parked retirees out (heap stays bounded).
-    spark.conf.set(Membership.RetireGraceMsConf, "50")
-    try {
-      Thread.sleep(80)
-      val f = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 300,
-        refresh = true)) // a and d aged out; e retires NOW (young, parked)
-      assert(f.value != null)
-      intercept[Exception] { a.value } // destroyed after its grace elapsed
-      intercept[Exception] { d.value }
-      assert(e.value != null, "the just-retired broadcast keeps its grace")
-    } finally spark.conf.unset(Membership.RetireGraceMsConf)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "s").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    // fresh memo entry for this test (expectedItems distinguishes keys);
+    // two refreshes in quick succession swap the filter twice while the
+    // plans built before them are still unexecuted
+    val planA = Membership.bloomSemiJoin(bigDist, refDist, "s", 300)
+    val planD = Membership.bloomSemiJoin(bigDist, refDist, "s", 300,
+      refresh = true)
+    val planE = Membership.bloomSemiJoin(bigDist, refDist, "s", 300,
+      refresh = true)
+    val (a, d, e) = (probeLit(planA), probeLit(planD), probeLit(planE))
+    assert(!(a eq d) && !(d eq e) && !(a eq e), "each refresh builds anew")
+    val want = Set((1L, "w1"), (2L, "w2"), (3L, "w3"))
+    assert(rows(planA) == want, "a plan built before both refreshes runs")
+    assert(rows(planD) == want, "a plan built between the refreshes runs")
+    assert(rows(planE) == want)
+    val served = probeLit(Membership.bloomSemiJoin(bigDist, refDist, "s", 300))
+    assert(served eq e, "the memo serves the newest broadcast")
   }
 
   /** Direct structural check (not a plan-string-length proxy, which

@@ -82,26 +82,21 @@ class Round9OpsSpec extends SparkSpec {
     assert(Dedup.trainEvalSplit(docs).count() == docs.count())
   }
 
-  test("evictShared is the maintenance hook for mutable corpora: stale ccLabels until evicted") {
-    // the STATIC-INPUT CONTRACT, demonstrated end-to-end: a plan-equal
-    // re-read of a REWRITTEN file serves the memoized component table
-    // until the documented maintenance hook (evictShared) runs
+  test("a rewritten corpus file is seen without eviction") {
+    // a plan-equal re-read of a file rewritten in place must not serve
+    // the component table memoized from the old files
     val dir = java.nio.file.Files.createTempDirectory("graft-ccmemo").toString
     Seq((1L, "alpha beta gamma delta"), (2L, "unrelated text entirely here"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     def labels() = Dedup.ccLabels(spark.read.parquet(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val before = labels()
-    assert(before.keySet == Set(1L, 2L))
+    assert(labels().keySet == Set(1L, 2L))
     // corpus mutates under the same plan: doc 3 arrives as a dup of 1
     Seq((1L, "alpha beta gamma delta"), (2L, "unrelated text entirely here"),
       (3L, "alpha beta gamma delta"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    assert(labels().keySet == Set(1L, 2L),
-      "without eviction the memo serves the corpus AS OF the first call")
-    Dedup.evictShared(spark)
     val after = labels()
-    assert(after.keySet == Set(1L, 2L, 3L), "post-evict labeling sees the new doc")
+    assert(after.keySet == Set(1L, 2L, 3L), "the rewritten corpus is labeled")
     assert(after(3L) == after(1L), "the arriving dup joins doc 1's component")
   }
 
