@@ -51,6 +51,14 @@ object GraftSession {
     // buckets, and those stay unclaimed. Layout.compactBucketed
     // restores the one-file invariant after appends.
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+    // Janino's compiled-class cache (static conf, default 100; one cache
+    // per JVM, sized by the first session that generates code). The
+    // weekly refresh loop (one admit, ten notebook queries) compiles
+    // about 90 classes by its first warm refresh, then one per refresh
+    // (the merge inlines the snapshot date); at 100 the LRU evicted live
+    // classes and each refresh recompiled 15–37 of them (lakebench
+    // refresh_mixed, seed 1). 1000 holds that working set ten times over.
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.ui.enabled" -> "false")
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

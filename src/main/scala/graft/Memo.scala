@@ -1,8 +1,11 @@
 package graft
 
-import java.io.FileNotFoundException
+import java.io.{File, FileNotFoundException}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.concurrent.TrieMap
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
@@ -29,15 +32,19 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * empty fingerprint, i.e. plan-only keying; their owners offer an
   * explicit rebuild (`Membership.bloomSemiJoin(refresh = true)`).
   *
-  * One `onApplicationEnd` listener per session drops the session's
-  * entries when its context ends. A replaced or evicted value is only
-  * dropped from the memo: plans that captured it keep it alive, and
-  * Spark's ContextCleaner frees a checkpoint or broadcast once nothing
-  * reaches it. Concurrent misses on one key may both build; the last
-  * one stays. The same model as "Building Advanced SQL Analytics From
-  * Low-Level Plan Operators" (SIGMOD 2021): one materialized
-  * intermediate, reused by every consumer, kept correct by the data it
-  * read. */
+  * A family's values may own a resource outside the JVM heap (the IVF
+  * index's directory); the family's release hook frees it. [[evict]]
+  * releases the family's values at once. A REPLACED value is released
+  * only when the session ends, because a plan built before the
+  * replacement may still read it. One `onApplicationEnd` listener per
+  * session releases every value the session still holds or retired and
+  * drops its entries. A value with no release is only dropped from the
+  * memo: plans that captured it keep it alive, and Spark's
+  * ContextCleaner frees a checkpoint or broadcast once nothing reaches
+  * it. Concurrent misses on one key may both build; the last one stays.
+  * The same model as "Building Advanced SQL Analytics From Low-Level
+  * Plan Operators" (SIGMOD 2021): one materialized intermediate, reused
+  * by every consumer, kept correct by the data it read. */
 object Memo {
 
   /** (path, length, modification time) of every input file. */
@@ -47,21 +54,40 @@ object Memo {
   val TableFrames = "tables"
   val DedupFrames = "dedup"
   val BloomFilters = "bloom"
+  /** Values are index directories; releasing one deletes it. */
   val IvfIndexes = "ivf"
   val ScdBucketedState = "scd_bucketed"
+  /** Freshness gauges observed on the job that materialized a
+    * checkpointed frame, keyed by that frame's RDD id
+    * ([[graft.metrics.Freshness.remember]]). */
+  val ObservedGauges = "gauges"
+
+  /** The per-family release hooks: what a value holds outside the
+    * heap, and how to free it. Families not named hold nothing. */
+  private val releases: Map[String, Any => Unit] = Map(
+    IvfIndexes -> (dir => FileUtils.deleteQuietly(new File(dir.toString))))
+
+  private def release(family: String, value: Any): Unit =
+    releases.get(family).foreach(_(value))
 
   private final case class Entry(fingerprint: Fingerprint, value: Any)
 
-  private val sessions =
-    TrieMap.empty[SparkSession, TrieMap[(String, Any), Entry]]
+  /** One session's entries, and the replaced (family, value) pairs that
+    * still own a resource, released when the session ends. */
+  private final class Session {
+    val entries = TrieMap.empty[(String, Any), Entry]
+    val retired = new ConcurrentLinkedQueue[(String, Any)]()
+  }
 
-  private def entries(spark: SparkSession): TrieMap[(String, Any), Entry] =
+  private val sessions = TrieMap.empty[SparkSession, Session]
+
+  private def session(spark: SparkSession): Session =
     sessions.getOrElse(spark, {
-      val fresh = TrieMap.empty[(String, Any), Entry]
+      val fresh = new Session
       sessions.putIfAbsent(spark, fresh).getOrElse {
         spark.sparkContext.addSparkListener(new SparkListener {
           override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-            sessions.remove(spark)
+            close(spark)
         })
         fresh
       }
@@ -72,35 +98,43 @@ object Memo {
     * replace the entry. */
   def apply[V](spark: SparkSession, family: String, key: Any,
       fingerprint: Fingerprint, rebuild: Boolean = false)(build: => V): V = {
-    val memo = entries(spark)
-    memo.get((family, key)) match {
+    val memo = session(spark)
+    memo.entries.get((family, key)) match {
       case Some(e) if !rebuild && e.fingerprint == fingerprint =>
         e.value.asInstanceOf[V]
       case _ =>
         val v = build
-        memo.put((family, key), Entry(fingerprint, v)).foreach(old =>
-          dropDependents(memo, old.value))
+        memo.entries.put((family, key), Entry(fingerprint, v))
+          .foreach(old => retire(memo, family, old.value))
         v
     }
   }
 
-  /** A value keyed on the plan of a replaced checkpointed frame (the
-    * dedup signatures of a rebuilt shingle frame) can never be looked up
-    * again; drop it, and its own dependents, with the frame. */
-  private def dropDependents(
-      memo: TrieMap[(String, Any), Entry], replaced: Any): Unit = {
+  /** The value memoized under (spark, family, key), if any; never
+    * builds. */
+  private[graft] def get[V](spark: SparkSession, family: String, key: Any): Option[V] =
+    sessions.get(spark).flatMap(_.entries.get((family, key))).map(_.value.asInstanceOf[V])
+
+  /** A replaced value: its release, if its family has one, waits for
+    * session end (other values are not held, so the ContextCleaner can
+    * free them). A value keyed on the plan of a replaced checkpointed
+    * frame (the dedup signatures of a rebuilt shingle frame) can never
+    * be looked up again; drop it, and its own dependents, with the
+    * frame. */
+  private def retire(memo: Session, family: String, replaced: Any): Unit = {
+    if (releases.contains(family)) memo.retired.add(family -> replaced)
     val rdds = replaced match {
       case df: DataFrame =>
         df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
       case _ => Set.empty[Int]
     }
-    if (rdds.nonEmpty) memo.foreach {
-      case (k @ (_, (_, plan: LogicalPlan)), e) if plan.exists {
+    if (rdds.nonEmpty) memo.entries.foreach {
+      case (k @ (f, (_, plan: LogicalPlan)), e) if plan.exists {
           case r: LogicalRDD => rdds(r.rdd.id)
           case _ => false
         } =>
-        memo.remove(k)
-        dropDependents(memo, e.value)
+        memo.entries.remove(k)
+        retire(memo, f, e.value)
       case _ =>
     }
   }
@@ -139,14 +173,26 @@ object Memo {
     catch { case _: FileNotFoundException => Set.empty }
   }
 
-  /** Drop this session's entries of one family (bench billing of a
-    * cold build, or freeing executor storage sooner). */
+  /** Drop this session's entries of one family and release their
+    * values (bench billing of a cold build, or freeing executor storage
+    * and disk sooner). */
   def evict(spark: SparkSession, family: String): Unit =
     sessions.get(spark).foreach { m =>
-      m.keys.filter(_._1 == family).foreach(m.remove)
+      m.entries.keys.filter(_._1 == family).foreach(k =>
+        m.entries.remove(k).foreach(e => release(family, e.value)))
+    }
+
+  /** End the session's memo: release every value it holds or retired
+    * and drop its entries. The app-end listener runs this. */
+  private def close(spark: SparkSession): Unit =
+    sessions.remove(spark).foreach { m =>
+      m.entries.foreach { case ((family, _), e) => release(family, e.value) }
+      m.entries.clear()
+      Iterator.continually(m.retired.poll()).takeWhile(_ != null)
+        .foreach { case (family, v) => release(family, v) }
     }
 
   /** Number of this session's entries in one family. */
   private[graft] def size(spark: SparkSession, family: String): Int =
-    sessions.get(spark).fold(0)(_.keys.count(_._1 == family))
+    sessions.get(spark).fold(0)(_.entries.keys.count(_._1 == family))
 }

@@ -211,7 +211,10 @@ object Similarity {
 
   /** Session-memoized index build ([[graft.Memo]] family `ivf`): one
     * write per (session, corpus plan, corpus files); every caller probes
-    * the same on-disk index in a fresh temp dir. */
+    * the same on-disk index in a fresh temp dir. The memo deletes the
+    * directory on `Memo.evict(spark, Memo.IvfIndexes)` and at session
+    * end; a directory replaced by a rebuild lives until session end,
+    * since a plan built on it may still read it. */
   def ivfIndexPath(embeddings: DataFrame): String =
     graft.Memo.of(embeddings, graft.Memo.IvfIndexes, "ivf_index") {
       val dir = java.nio.file.Files.createTempDirectory("graft-ivf")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.merge.ScdMerge
+import graft.metrics.Freshness
 
 /** Batch-incremental ingest driver — the reference's poller loop
   * (feeder_postgres.py:212-259 `run_once`/`loop`) as a library function.
@@ -16,6 +17,13 @@ import graft.merge.ScdMerge
   *  - process the rest in ascending date order (:226)
   *  - per snapshot: normalize → drop archived → late-guard → SCD merge
   *  - future-dated dirs are skipped (periodic_run.py:31-33)
+  *
+  * One materializing job per snapshot: the merge's `localCheckpoint`.
+  * The late guard is evaluated inside that job's projection
+  * ([[ScdMerge.applySnapshotGuarded]]), and the same job observes the
+  * freshness gauges of the state it produces ([[Freshness.observe]]).
+  * The next poll's high-water mark and [[Freshness.compute]] on the
+  * returned state read those gauges instead of scanning again.
   *
   * Only directory NAMES touch the driver (bounded by calendar days);
   * all row data stays distributed.
@@ -36,7 +44,9 @@ object IngestJob {
   }
 
   /** The state's high-water mark: greatest lifecycle date, 1970-01-01 for
-    * an empty state (feeder_postgres.py:200-209 get_db_max_date).
+    * an empty state (feeder_postgres.py:200-209 get_db_max_date). Read
+    * from the observed gauges when `state` is a state [[runOnce]]
+    * returned; any other frame is scanned.
     *
     * Reference quirk kept for parity: a snapshot that changes NOTHING
     * leaves every lifecycle date untouched, so the HWM does not advance
@@ -44,14 +54,22 @@ object IngestJob {
     * (ScdMergeSpec), so this is wasteful but harmless — exactly the
     * reference's behavior. */
   def highWaterMark(state: DataFrame): String = {
-    val row = state
-      .agg(greatest(max("added_at"), max("updated_at"), max("removed_at")).as("hwm"))
-      .head()
-    if (row.isNullAt(0)) "1970-01-01" else row.getDate(0).toString
+    val hwm = Freshness.observed(state).map(r => Option(r.getDate(3))).getOrElse(
+      Option(state
+        .agg(greatest(max("added_at"), max("updated_at"), max("removed_at")).as("hwm"))
+        .head().getDate(0)))
+    hwm.fold("1970-01-01")(_.toString)
   }
 
   /** One poll cycle: applies every new snapshot in order, returns the new
-    * state and the list of processed dates. */
+    * state and the list of processed dates.
+    *
+    * Steps: the high-water mark (observed, or one aggregate for a state
+    * this function did not return); discovery; then per snapshot one
+    * guarded merge, observed and localCheckpointed. A snapshot holding a
+    * key the state updated after the snapshot's date fails that job, and
+    * this throws `IllegalStateException("newer record detected")` before
+    * returning, so a caller publishes nothing. */
   def runOnce(
       spark: SparkSession,
       root: String,
@@ -67,15 +85,22 @@ object IngestJob {
     val finalState = dates.foldLeft(state) { (st, date) =>
       val snap = ScdMerge.dropArchived(Normalize.normalizeSnapshot(
         readSnapshot(s"$root/$date")))
-      ScdMerge.assertNotLate(st, snap, date, keyCol)
+      val merged = Freshness.observe(
+        ScdMerge.applySnapshotGuarded(st, snap, date, keyCol, trackedCols))
       // Materialize each merge generation and cut its lineage: without
-      // this, assertNotLate's count() and the next applySnapshot both
-      // re-execute the entire unmaterialized chain of prior full-outer
-      // joins — O(n²) recompute and unbounded plan depth once more than
-      // a handful of snapshots are pending. (SnapshotStream.mergeSink's
-      // saveState achieves the same by write-and-reload.)
-      ScdMerge.applySnapshot(st, snap, date, keyCol, trackedCols)
-        .localCheckpoint()
+      // this, the next applySnapshot re-executes the entire
+      // unmaterialized chain of prior full-outer joins — O(n²) recompute
+      // and unbounded plan depth once more than a handful of snapshots
+      // are pending. (SnapshotStream.mergeSink's saveState achieves the
+      // same by write-and-reload.)
+      val next =
+        try merged.localCheckpoint()
+        catch {
+          case e: Throwable if ScdMerge.isLate(e) =>
+            throw new IllegalStateException("newer record detected", e)
+        }
+      Freshness.remember(next, merged)
+      next
     }
     (finalState, dates)
   }

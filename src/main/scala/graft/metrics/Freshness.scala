@@ -1,7 +1,14 @@
 package graft.metrics
 
-import org.apache.spark.sql.DataFrame
+import java.time.LocalDate
+
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import graft.Memo
 
 /** Freshness/liveness gauges — the reference's Prometheus exporter
   * semantics (metrics_exporter.py:68-151) as aggregate queries. Export is
@@ -16,24 +23,78 @@ object Freshness {
       maxLifecycleDate: Option[String],
       daysSinceUpdate: Option[Long])
 
+  /** The gauge aggregates (rows, live, removed, high-water mark), shared
+    * by the scan in [[compute]] and the observation in [[observe]]. */
+  private val aggregates: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    count(when(col("removed_at").isNull, 1)).as("live"),
+    count(col("removed_at")).as("removed"),
+    greatest(max("added_at"), max("updated_at"), max("removed_at")).as("hwm"))
+
+  private val IsoDate = "^\\d{4}-\\d{2}-\\d{2}$".r
+
   /** All gauges in ONE pass over the state (the reference runs one SQL
     * query per gauge, metrics_exporter.py:72-96 — here a single aggregate
-    * job computes them all). */
-  def compute(state: DataFrame, asOf: String): Gauges = {
-    val row = state.agg(
-      count(lit(1)).as("n"),
-      count(when(col("removed_at").isNull, 1)).as("live"),
-      count(col("removed_at")).as("removed"),
-      greatest(max("added_at"), max("updated_at"), max("removed_at")).as("hwm"))
-      .withColumn("days", datediff(to_date(lit(asOf)), col("hwm")))
-      .head()
-    Gauges(
-      rowCount = row.getLong(0),
-      liveCount = row.getLong(1),
-      removedCount = row.getLong(2),
-      maxLifecycleDate = Option(row.getDate(3)).map(_.toString),
-      daysSinceUpdate = if (row.isNullAt(4)) None else Some(row.getInt(4).toLong))
-  }
+    * job computes them all).
+    *
+    * Observed vs. scanned: when `state` is exactly a frame whose
+    * materializing job observed the aggregates ([[observe]] then
+    * [[remember]], as [[graft.ingest.IngestJob.runOnce]] does for the
+    * state it returns), the gauges are read from the memo and no job
+    * runs. Any other frame (a filtered or re-read state) runs the one
+    * aggregate and adds no memo entry. Both paths give equal gauges
+    * (IngestJobSpec). `daysSinceUpdate` is computed on the driver from
+    * the high-water mark when `asOf` is a plain `yyyy-MM-dd`, so the
+    * aggregate's generated code does not change with the date; any
+    * other `asOf` is parsed by Spark inside the aggregate. */
+  def compute(state: DataFrame, asOf: String): Gauges =
+    (if (IsoDate.matches(asOf)) Try(LocalDate.parse(asOf)).toOption else None) match {
+      case Some(day) =>
+        val row = observed(state).getOrElse(scan(state).head())
+        gauges(row, Option(row.getDate(3)).map(h => day.toEpochDay - h.toLocalDate.toEpochDay))
+      case None =>
+        val row = scan(state).withColumn("days", datediff(to_date(lit(asOf)), col("hwm"))).head()
+        gauges(row, if (row.isNullAt(4)) None else Some(row.getInt(4).toLong))
+    }
+
+  private def scan(state: DataFrame): DataFrame = state.agg(aggregates.head, aggregates.tail: _*)
+
+  private def gauges(row: Row, days: Option[Long]): Gauges = Gauges(
+    rowCount = row.getLong(0),
+    liveCount = row.getLong(1),
+    removedCount = row.getLong(2),
+    maxLifecycleDate = Option(row.getDate(3)).map(_.toString),
+    daysSinceUpdate = days)
+
+  private val ObservationName = "graft_gauges"
+
+  /** `state` with the gauge aggregates attached as observed metrics
+    * (`Dataset.observe`): the job that materializes the returned frame
+    * computes them as it goes, with no pass of its own. */
+  private[graft] def observe(state: DataFrame): DataFrame =
+    state.observe(ObservationName, aggregates.head, aggregates.tail: _*)
+
+  /** Keep the gauges the job that materialized `observedFrame` (an
+    * [[observe]] result) observed, for `checkpointed`, the checkpointed
+    * frame that job made: [[Memo.ObservedGauges]], keyed by its RDD id. */
+  private[graft] def remember(checkpointed: DataFrame, observedFrame: DataFrame): Unit =
+    rddOf(checkpointed).foreach { id =>
+      observedFrame.queryExecution.observedMetrics.get(ObservationName).foreach { row =>
+        Memo(checkpointed.sparkSession, Memo.ObservedGauges, id, Set.empty,
+          rebuild = true)(row)
+      }
+    }
+
+  /** The observed gauge row of `state` if it is exactly a remembered
+    * checkpointed frame. The row is (rows, live, removed, hwm). */
+  private[graft] def observed(state: DataFrame): Option[Row] =
+    rddOf(state).flatMap(Memo.get[Row](state.sparkSession, Memo.ObservedGauges, _))
+
+  private def rddOf(df: DataFrame): Option[Int] =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => Some(r.rdd.id)
+      case _ => None
+    }
 
   /** Prometheus text exposition (metrics_exporter.py:113-141 format). */
   def prometheusText(g: Gauges, prefix: String = "graft"): String = {

@@ -100,7 +100,7 @@ object StatefulMergeTws {
     * in snapshot order WITHIN a batch, but an observation arriving in a
     * LATER batch with an OLDER snapshot date is folded against newer
     * state — `updatedAt` flips on a hash difference that is not a real
-    * change (the batch path fails loudly via ScdMerge.assertNotLate; the
+    * change (the batch path, IngestJob.runOnce, fails loudly; the
     * keyed path would silently misfold). This variant buffers every
     * observation in a ListState and re-folds the sorted history on each
     * batch, emitting the key's CURRENT lifecycle row per batch

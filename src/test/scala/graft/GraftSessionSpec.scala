@@ -29,6 +29,9 @@ class GraftSessionSpec extends AnyFunSuite {
     // session build — no query builder may leak it into a session
     assert(c.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
       .contains("true"))
+    // the weekly refresh loop's plans must fit the codegen cache, or
+    // every refresh recompiles the classes the last one evicted
+    assert(c.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
   }
 
   test("q_merge_scd_bucketed leaves the session conf exactly as it found it (r19 VERDICT #4)") {

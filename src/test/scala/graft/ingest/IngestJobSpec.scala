@@ -3,9 +3,10 @@ package graft.ingest
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import graft.merge.ScdMerge
 import graft.metrics.Freshness
 import graft.schema.VacancySchema
@@ -80,5 +81,90 @@ class IngestJobSpec extends SparkSpec {
     assert(g.maxLifecycleDate.contains("2021-01-08"))
     assert(g.daysSinceUpdate.contains(12L))
     assert(Freshness.prometheusText(g).contains("graft_rows_live 1"))
+  }
+
+  private def emptyState(root: String, date: String): DataFrame = ScdMerge.emptyState(
+    Normalize.normalizeSnapshot(readSnapshot(s"$root/$date").limit(0)))
+
+  /** The scan path on `state`'s rows: a copy that is not the frame the
+    * admit observed. */
+  private def scanned(state: DataFrame, asOf: String): Freshness.Gauges = {
+    val copy = spark.createDataFrame(state.collectAsList(), state.schema)
+    assert(Freshness.observed(copy).isEmpty)
+    Freshness.compute(copy, asOf)
+  }
+
+  private def observedEqualsScanned(state: DataFrame, asOf: String): Freshness.Gauges = {
+    assert(Freshness.observed(state).nonEmpty, "runOnce's state carries observed gauges")
+    val g = Freshness.compute(state, asOf)
+    assert(g == scanned(state, asOf))
+    g
+  }
+
+  test("runOnce: a late snapshot throws newer record detected and returns no state") {
+    val root = Files.createTempDirectory("ingest-late").toFile.getAbsolutePath
+    writeCsv(root, "2021-01-01", Seq(("1", "a", "False"), ("2", "b", "False")))
+    writeCsv(root, "2021-01-15", Seq(("1", "a2", "False"), ("2", "b", "False")))
+    val (s1, _) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
+      tracked, today = "2021-01-15", readSnapshot)
+    assert(IngestJob.highWaterMark(s1) == "2021-01-15")
+    // A state's own dates never put a key's updated_at above its
+    // high-water mark, so discovery alone never lands a late snapshot.
+    // Plant a stale observed mark for s1 so that the 2021-01-08 dir is
+    // admitted against a state that updated key 1 on 2021-01-15: the
+    // merge job's guard must refuse it.
+    val rdd = s1.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+    Memo(spark, Memo.ObservedGauges, rdd, Set.empty, rebuild = true)(
+      Row(2L, 2L, 0L, java.sql.Date.valueOf("2021-01-01")))
+    writeCsv(root, "2021-01-08", Seq(("1", "a3", "False"), ("3", "c", "False")))
+    val e = intercept[IllegalStateException] {
+      IngestJob.runOnce(spark, root, s1, "id", tracked, today = "2021-01-15", readSnapshot)
+    }
+    assert(e.getMessage == "newer record detected")
+    // a snapshot that only adds keys is not late
+    writeCsv(root, "2021-01-08", Seq(("3", "c", "False")))
+    val (s2, d2) = IngestJob.runOnce(spark, root, s1, "id", tracked,
+      today = "2021-01-08", readSnapshot)
+    assert(d2 == Seq("2021-01-08") && s2.count() == 3)
+  }
+
+  test("observed gauges equal scanned gauges: empty state") {
+    val root = Files.createTempDirectory("ingest-empty").toFile.getAbsolutePath
+    // every row archived: the admit merges an empty snapshot
+    writeCsv(root, "2021-01-01", Seq(("1", "a", "True"), ("2", "b", "True")))
+    val (s1, d1) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
+      tracked, today = "2021-01-01", readSnapshot)
+    assert(d1 == Seq("2021-01-01"))
+    assert(IngestJob.highWaterMark(s1) == "1970-01-01")
+    val g = observedEqualsScanned(s1, "2021-01-20")
+    assert(g == Freshness.Gauges(0L, 0L, 0L, None, None))
+  }
+
+  test("observed gauges equal scanned gauges: a catch-up of three pending snapshots") {
+    val root = Files.createTempDirectory("ingest-catchup").toFile.getAbsolutePath
+    writeCsv(root, "2021-01-01", Seq(("1", "a", "False"), ("2", "b", "False")))
+    writeCsv(root, "2021-01-08", Seq(("1", "a", "False"), ("3", "c", "False")))
+    writeCsv(root, "2021-01-15", Seq(("1", "a2", "False"), ("3", "c", "False"),
+      ("4", "d", "False")))
+    val (s1, d1) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
+      tracked, today = "2021-01-15", readSnapshot)
+    assert(d1 == Seq("2021-01-01", "2021-01-08", "2021-01-15"))
+    assert(IngestJob.highWaterMark(s1) == "2021-01-15")
+    val g = observedEqualsScanned(s1, "2021-01-20")
+    assert(g == Freshness.Gauges(4L, 3L, 1L, Some("2021-01-15"), Some(5L)))
+    assert(observedEqualsScanned(s1, "2021-01-10").daysSinceUpdate.contains(-5L))
+    // an asOf that is not yyyy-MM-dd is parsed by Spark inside the scan;
+    // its datediff must agree with the driver-side days of the same date
+    assert(Freshness.compute(s1, "2021-1-20") == g)
+  }
+
+  test("observed gauges equal scanned gauges: every row removed") {
+    val root = Files.createTempDirectory("ingest-removed").toFile.getAbsolutePath
+    writeCsv(root, "2021-01-01", Seq(("1", "a", "False"), ("2", "b", "False")))
+    writeCsv(root, "2021-01-08", Seq(("1", "a", "True"), ("2", "b", "True")))
+    val (s1, _) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
+      tracked, today = "2021-01-08", readSnapshot)
+    val g = observedEqualsScanned(s1, "2021-01-08")
+    assert(g == Freshness.Gauges(2L, 0L, 2L, Some("2021-01-08"), Some(0L)))
   }
 }
