@@ -54,7 +54,8 @@ object Memo {
   val TableFrames = "tables"
   val DedupFrames = "dedup"
   val BloomFilters = "bloom"
-  /** Values are index directories; releasing one deletes it. */
+  /** Values are index directories; releasing one deletes it if it is
+    * one of [[ivfDir]]'s. */
   val IvfIndexes = "ivf"
   val ScdBucketedState = "scd_bucketed"
   /** Freshness gauges observed on the job that materialized a
@@ -65,7 +66,22 @@ object Memo {
   /** The per-family release hooks: what a value holds outside the
     * heap, and how to free it. Families not named hold nothing. */
   private val releases: Map[String, Any => Unit] = Map(
-    IvfIndexes -> (dir => FileUtils.deleteQuietly(new File(dir.toString))))
+    IvfIndexes -> (dir => ownIvfDir(dir).foreach(FileUtils.deleteQuietly)))
+
+  private val IvfPrefix = "graft-ivf"
+
+  /** A fresh directory for an [[IvfIndexes]] value. */
+  private[graft] def ivfDir(): String =
+    java.nio.file.Files.createTempDirectory(IvfPrefix).toFile.getAbsolutePath
+
+  /** `value` as a directory [[ivfDir]] made: a `graft-ivf*` child of the
+    * temp directory. The release deletes nothing else, whatever path a
+    * value names. */
+  private def ownIvfDir(value: Any): Option[File] = {
+    val f = new File(value.toString).getAbsoluteFile
+    val tmp = new File(System.getProperty("java.io.tmpdir")).getAbsoluteFile
+    Some(f).filter(d => d.getParentFile == tmp && d.getName.startsWith(IvfPrefix))
+  }
 
   private def release(family: String, value: Any): Unit =
     releases.get(family).foreach(_(value))

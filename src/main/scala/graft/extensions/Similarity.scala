@@ -217,8 +217,7 @@ object Similarity {
     * since a plan built on it may still read it. */
   def ivfIndexPath(embeddings: DataFrame): String =
     graft.Memo.of(embeddings, graft.Memo.IvfIndexes, "ivf_index") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf")
-        .toFile.getAbsolutePath
+      val dir = graft.Memo.ivfDir()
       writeIvfIndex(embeddings, dir)
       dir
     }

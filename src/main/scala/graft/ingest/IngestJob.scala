@@ -15,15 +15,21 @@ import graft.metrics.Freshness
   *  - discover snapshot dirs matching `YYYY-MM-DD` (:213,226)
   *  - skip dirs at or below the state's high-water mark (:224,230-231)
   *  - process the rest in ascending date order (:226)
-  *  - per snapshot: normalize → drop archived → late-guard → SCD merge
+  *  - per snapshot: normalize → drop archived → SCD merge
   *  - future-dated dirs are skipped (periodic_run.py:31-33)
   *
   * One materializing job per snapshot: the merge's `localCheckpoint`.
-  * The late guard is evaluated inside that job's projection
-  * ([[ScdMerge.applySnapshotGuarded]]), and the same job observes the
-  * freshness gauges of the state it produces ([[Freshness.observe]]).
-  * The next poll's high-water mark and [[Freshness.compute]] on the
-  * returned state read those gauges instead of scanning again.
+  * The last snapshot's job also observes the freshness gauges of the
+  * state it produces ([[Freshness.observe]]); the next poll's high-water
+  * mark and [[Freshness.compute]] on the returned state read those
+  * gauges instead of scanning again.
+  *
+  * No late guard runs here: the reference aborts a snapshot older than
+  * a key's `updated_at` (feeder_postgres.py:156-159), but discovery
+  * admits only dates above the high-water mark, which is at least every
+  * `updated_at` in the state, and each later date in a catch-up is above
+  * the earlier ones. Direct [[ScdMerge.applySnapshot]] callers keep
+  * [[ScdMerge.assertNotLate]].
   *
   * Only directory NAMES touch the driver (bounded by calendar days);
   * all row data stays distributed.
@@ -66,10 +72,10 @@ object IngestJob {
     *
     * Steps: the high-water mark (observed, or one aggregate for a state
     * this function did not return); discovery; then per snapshot one
-    * guarded merge, observed and localCheckpointed. A snapshot holding a
-    * key the state updated after the snapshot's date fails that job, and
-    * this throws `IllegalStateException("newer record detected")` before
-    * returning, so a caller publishes nothing. */
+    * merge, localCheckpointed. Only the last merge is observed: the
+    * intermediate states are never returned, so their gauges could
+    * never be read. A snapshot dated at or below the high-water mark is
+    * skipped, never merged, so a late snapshot cannot reach the state. */
   def runOnce(
       spark: SparkSession,
       root: String,
@@ -85,21 +91,17 @@ object IngestJob {
     val finalState = dates.foldLeft(state) { (st, date) =>
       val snap = ScdMerge.dropArchived(Normalize.normalizeSnapshot(
         readSnapshot(s"$root/$date")))
-      val merged = Freshness.observe(
-        ScdMerge.applySnapshotGuarded(st, snap, date, keyCol, trackedCols))
+      val last = date == dates.last
+      val merge = ScdMerge.applySnapshot(st, snap, date, keyCol, trackedCols)
+      val merged = if (last) Freshness.observe(merge) else merge
       // Materialize each merge generation and cut its lineage: without
       // this, the next applySnapshot re-executes the entire
       // unmaterialized chain of prior full-outer joins — O(n²) recompute
       // and unbounded plan depth once more than a handful of snapshots
       // are pending. (SnapshotStream.mergeSink's saveState achieves the
       // same by write-and-reload.)
-      val next =
-        try merged.localCheckpoint()
-        catch {
-          case e: Throwable if ScdMerge.isLate(e) =>
-            throw new IllegalStateException("newer record detected", e)
-        }
-      Freshness.remember(next, merged)
+      val next = merged.localCheckpoint()
+      if (last) Freshness.remember(next, merged)
       next
     }
     (finalState, dates)

@@ -95,44 +95,7 @@ object ScdMerge {
       snapshotDate: String,
       keyCol: String,
       trackedCols: Seq[String],
-      snapshotDeduped: Boolean = false): DataFrame =
-    merge(state, snapshot, snapshotDate, keyCol, trackedCols, snapshotDeduped,
-      lateGuard = false)
-
-  /** [[applySnapshot]] with [[assertNotLate]]'s guard evaluated inside
-    * the merge projection: the full outer join already pairs
-    * `s.updated_at` with every snapshot key, so a matched key updated
-    * after `snapshotDate` raises [[LateError]] in the job that
-    * materializes the merge, with no join or action of its own. The
-    * caller maps the failure back with [[isLate]]
-    * ([[graft.ingest.IngestJob.runOnce]]). */
-  private[graft] def applySnapshotGuarded(
-      state: DataFrame,
-      snapshot: DataFrame,
-      snapshotDate: String,
-      keyCol: String,
-      trackedCols: Seq[String]): DataFrame =
-    merge(state, snapshot, snapshotDate, keyCol, trackedCols,
-      snapshotDeduped = false, lateGuard = true).drop(ChangedCol)
-
-  /** The message [[applySnapshotGuarded]] raises; unique enough to find
-    * in a failed job's cause chain. */
-  private val LateError = "graft.ScdMerge: newer record detected"
-
-  /** Whether `e` is (or wraps) the failure [[applySnapshotGuarded]]
-    * raises. */
-  private[graft] def isLate(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .exists(t => Option(t.getMessage).exists(_.contains(LateError)))
-
-  private def merge(
-      state: DataFrame,
-      snapshot: DataFrame,
-      snapshotDate: String,
-      keyCol: String,
-      trackedCols: Seq[String],
-      snapshotDeduped: Boolean,
-      lateGuard: Boolean): DataFrame = {
+      snapshotDeduped: Boolean = false): DataFrame = {
 
     val d = to_date(lit(snapshotDate))
     val snap = if (snapshotDeduped) snapshot else snapshot.dropDuplicates(keyCol)
@@ -156,12 +119,9 @@ object ScdMerge {
     // Only a key PRESENT in the snapshot with a real column change bumps
     // updated_at (feeder_postgres.py:171-177 `was_update`); a mere removal
     // touches removed_at only (:188-192).
-    val updated = when(!inState, d)
+    val updatedAt = when(!inState, d)
       .when(inSnap && changed, d)
       .otherwise(col("s.updated_at"))
-    val updatedAt = (if (!lateGuard) updated
-      else when(inState && inSnap && col("s.updated_at") > d,
-        raise_error(lit(LateError))).otherwise(updated))
       .as("updated_at")
 
     // Tombstone: in state, absent from snapshot, added before this date,
@@ -216,8 +176,9 @@ object ScdMerge {
     * updated after the incoming snapshot date. This is an action (a
     * join, `limit(1)` and `count()`) for callers that merge with
     * [[applySnapshot]] directly; EndToEndSpec and ScdMergeSpec call it.
-    * [[graft.ingest.IngestJob.runOnce]] does not: it evaluates the same
-    * guard inside its merge job ([[applySnapshotGuarded]]). */
+    * [[graft.ingest.IngestJob.runOnce]] does not: it admits only dates
+    * above the state's high-water mark, and no key's `updated_at` is
+    * above that mark, so a late admit cannot happen there. */
   def assertNotLate(state: DataFrame, snapshot: DataFrame, snapshotDate: String, keyCol: String): Unit = {
     val late = state
       .join(snapshot.select(col(keyCol)).dropDuplicates(keyCol), keyCol)

@@ -1,12 +1,10 @@
 package graft.metrics
 
-import java.time.LocalDate
-
-import scala.util.Try
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Memo
 
@@ -31,8 +29,6 @@ object Freshness {
     count(col("removed_at")).as("removed"),
     greatest(max("added_at"), max("updated_at"), max("removed_at")).as("hwm"))
 
-  private val IsoDate = "^\\d{4}-\\d{2}-\\d{2}$".r
-
   /** All gauges in ONE pass over the state (the reference runs one SQL
     * query per gauge, metrics_exporter.py:72-96 — here a single aggregate
     * job computes them all).
@@ -44,27 +40,29 @@ object Freshness {
     * runs. Any other frame (a filtered or re-read state) runs the one
     * aggregate and adds no memo entry. Both paths give equal gauges
     * (IngestJobSpec). `daysSinceUpdate` is computed on the driver from
-    * the high-water mark when `asOf` is a plain `yyyy-MM-dd`, so the
-    * aggregate's generated code does not change with the date; any
-    * other `asOf` is parsed by Spark inside the aggregate. */
-  def compute(state: DataFrame, asOf: String): Gauges =
-    (if (IsoDate.matches(asOf)) Try(LocalDate.parse(asOf)).toOption else None) match {
-      case Some(day) =>
-        val row = observed(state).getOrElse(scan(state).head())
-        gauges(row, Option(row.getDate(3)).map(h => day.toEpochDay - h.toLocalDate.toEpochDay))
-      case None =>
-        val row = scan(state).withColumn("days", datediff(to_date(lit(asOf)), col("hwm"))).head()
-        gauges(row, if (row.isNullAt(4)) None else Some(row.getInt(4).toLong))
-    }
+    * the high-water mark and `asOf`, so the aggregate's generated code
+    * does not change with the date. */
+  def compute(state: DataFrame, asOf: String): Gauges = {
+    val day = epochDay(state.sparkSession, asOf)
+    val row = observed(state).getOrElse(
+      state.agg(aggregates.head, aggregates.tail: _*).head())
+    val hwm = Option(row.getDate(3))
+    Gauges(
+      rowCount = row.getLong(0),
+      liveCount = row.getLong(1),
+      removedCount = row.getLong(2),
+      maxLifecycleDate = hwm.map(_.toString),
+      daysSinceUpdate = for (d <- day; h <- hwm) yield d - h.toLocalDate.toEpochDay)
+  }
 
-  private def scan(state: DataFrame): DataFrame = state.agg(aggregates.head, aggregates.tail: _*)
-
-  private def gauges(row: Row, days: Option[Long]): Gauges = Gauges(
-    rowCount = row.getLong(0),
-    liveCount = row.getLong(1),
-    removedCount = row.getLong(2),
-    maxLifecycleDate = Option(row.getDate(3)).map(_.toString),
-    daysSinceUpdate = days)
+  /** `asOf` as days since the epoch, parsed by the parser `to_date`
+    * uses: an unparseable string throws under ANSI and is None
+    * otherwise, as `to_date(lit(asOf))` would be. */
+  private def epochDay(spark: SparkSession, asOf: String): Option[Long] = {
+    val s = UTF8String.fromString(asOf)
+    (if (spark.sessionState.conf.ansiEnabled) Some(DateTimeUtils.stringToDateAnsi(s))
+      else DateTimeUtils.stringToDate(s)).map(_.toLong)
+  }
 
   private val ObservationName = "graft_gauges"
 

@@ -100,10 +100,10 @@ object StatefulMergeTws {
     * in snapshot order WITHIN a batch, but an observation arriving in a
     * LATER batch with an OLDER snapshot date is folded against newer
     * state — `updatedAt` flips on a hash difference that is not a real
-    * change (the batch path, IngestJob.runOnce, fails loudly; the
-    * keyed path would silently misfold). This variant buffers every
-    * observation in a ListState and re-folds the sorted history on each
-    * batch, emitting the key's CURRENT lifecycle row per batch
+    * change (the batch path, IngestJob.runOnce, never admits a date at
+    * or below its high-water mark; the keyed path would silently
+    * misfold). This variant buffers every observation in a ListState and
+    * re-folds the sorted history on each batch, emitting the key's CURRENT lifecycle row per batch
     * (downstream upserts by key). State is the key's observation history
     * — bound it with the TTL/timer variants for unbounded streams; the
     * reference's weekly cadence holds ~1 obs/key/week. */

@@ -79,6 +79,20 @@ class MemoSpec extends SparkSpec {
     assert(!(Tables.table(s, dir, "t") eq t))
   }
 
+  test("an ivf release deletes only graft-ivf directories of the temp directory") {
+    val s = spark.newSession()
+    val own = new java.io.File(Memo.ivfDir())
+    val foreign = Files.createTempDirectory("graft-memo-foreign").toFile
+    val nested = new java.io.File(lake(), "graft-ivf-nested")
+    assert(nested.mkdirs())
+    Seq(own, foreign, nested).zipWithIndex.foreach { case (d, i) =>
+      Memo(s, Memo.IvfIndexes, i, Set.empty)(d.getPath)
+    }
+    Memo.evict(s, Memo.IvfIndexes)
+    assert(!own.exists && foreign.exists && nested.exists)
+    Seq(foreign, nested.getParentFile).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
   test("Memo.files lists a path recursively with length and mtime; a missing path is empty") {
     val dir = lake()
     Seq((1L, 2020), (2L, 2021)).toDF("id", "year")

@@ -2,8 +2,7 @@ package graft.ingest
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Memo, SparkSpec}
@@ -101,31 +100,26 @@ class IngestJobSpec extends SparkSpec {
     g
   }
 
-  test("runOnce: a late snapshot throws newer record detected and returns no state") {
+  test("runOnce: a late snapshot is never admitted; assertNotLate refuses it") {
     val root = Files.createTempDirectory("ingest-late").toFile.getAbsolutePath
     writeCsv(root, "2021-01-01", Seq(("1", "a", "False"), ("2", "b", "False")))
     writeCsv(root, "2021-01-15", Seq(("1", "a2", "False"), ("2", "b", "False")))
     val (s1, _) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
       tracked, today = "2021-01-15", readSnapshot)
     assert(IngestJob.highWaterMark(s1) == "2021-01-15")
-    // A state's own dates never put a key's updated_at above its
-    // high-water mark, so discovery alone never lands a late snapshot.
-    // Plant a stale observed mark for s1 so that the 2021-01-08 dir is
-    // admitted against a state that updated key 1 on 2021-01-15: the
-    // merge job's guard must refuse it.
-    val rdd = s1.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
-    Memo(spark, Memo.ObservedGauges, rdd, Set.empty, rebuild = true)(
-      Row(2L, 2L, 0L, java.sql.Date.valueOf("2021-01-01")))
+    // 2021-01-08 lands after the state updated key 1 on 2021-01-15: it is
+    // at or below the high-water mark, so discovery skips it
     writeCsv(root, "2021-01-08", Seq(("1", "a3", "False"), ("3", "c", "False")))
+    val (s2, d2) = IngestJob.runOnce(spark, root, s1, "id", tracked,
+      today = "2021-01-15", readSnapshot)
+    assert(d2.isEmpty && (s2 eq s1))
+    // merged directly, the same snapshot is refused by the reference's guard
+    val late = ScdMerge.dropArchived(Normalize.normalizeSnapshot(
+      readSnapshot(s"$root/2021-01-08")))
     val e = intercept[IllegalStateException] {
-      IngestJob.runOnce(spark, root, s1, "id", tracked, today = "2021-01-15", readSnapshot)
+      ScdMerge.assertNotLate(s1, late, "2021-01-08", "id")
     }
     assert(e.getMessage == "newer record detected")
-    // a snapshot that only adds keys is not late
-    writeCsv(root, "2021-01-08", Seq(("3", "c", "False")))
-    val (s2, d2) = IngestJob.runOnce(spark, root, s1, "id", tracked,
-      today = "2021-01-08", readSnapshot)
-    assert(d2 == Seq("2021-01-08") && s2.count() == 3)
   }
 
   test("observed gauges equal scanned gauges: empty state") {
@@ -146,16 +140,21 @@ class IngestJobSpec extends SparkSpec {
     writeCsv(root, "2021-01-08", Seq(("1", "a", "False"), ("3", "c", "False")))
     writeCsv(root, "2021-01-15", Seq(("1", "a2", "False"), ("3", "c", "False"),
       ("4", "d", "False")))
+    val entries = Memo.size(spark, Memo.ObservedGauges)
     val (s1, d1) = IngestJob.runOnce(spark, root, emptyState(root, "2021-01-01"), "id",
       tracked, today = "2021-01-15", readSnapshot)
     assert(d1 == Seq("2021-01-01", "2021-01-08", "2021-01-15"))
+    // only the returned state's gauges are kept, not the intermediates'
+    assert(Memo.size(spark, Memo.ObservedGauges) == entries + 1)
     assert(IngestJob.highWaterMark(s1) == "2021-01-15")
     val g = observedEqualsScanned(s1, "2021-01-20")
     assert(g == Freshness.Gauges(4L, 3L, 1L, Some("2021-01-15"), Some(5L)))
     assert(observedEqualsScanned(s1, "2021-01-10").daysSinceUpdate.contains(-5L))
-    // an asOf that is not yyyy-MM-dd is parsed by Spark inside the scan;
-    // its datediff must agree with the driver-side days of the same date
+    // asOf is parsed as to_date parses it: a short form is the same day,
+    // and under ANSI an unparseable date throws
     assert(Freshness.compute(s1, "2021-1-20") == g)
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    intercept[Exception](Freshness.compute(s1, "not a date"))
   }
 
   test("observed gauges equal scanned gauges: every row removed") {

@@ -113,24 +113,6 @@ class ScdMergeSpec extends SparkSpec {
     ScdMerge.assertNotLate(s1, snap((1, "a", 10L)), "2021-02-08", key)
   }
 
-  test("the guarded merge equals applySnapshot in order and raises on a late key") {
-    val s1 = ScdMerge.applySnapshot(ScdMerge.emptyState(snap()),
-      snap((1, "a", 10L), (2, "b", 20L)), "2021-02-01", key, tracked)
-    val next = snap((1, "a", 11L), (3, "c", 30L))
-    val guarded = ScdMerge.applySnapshotGuarded(s1, next, "2021-02-08", key, tracked)
-    assert(stateMap(guarded) == stateMap(
-      ScdMerge.applySnapshot(s1, next, "2021-02-08", key, tracked)))
-    // key 1 was updated on 2021-02-01, after this snapshot's date; key 3
-    // is new and key 2 absent, neither of which is late
-    val e = intercept[Exception] {
-      ScdMerge.applySnapshotGuarded(s1, next, "2021-01-15", key, tracked).collect()
-    }
-    assert(ScdMerge.isLate(e), e)
-    // a snapshot without key 1 or 2 on that date only adds a key
-    assert(stateMap(ScdMerge.applySnapshotGuarded(
-      s1, snap((3, "c", 30L)), "2021-01-15", key, tracked)).size == 3)
-  }
-
   test("archived rows are treated as deleted (dropArchived)") {
     val sn = Seq((1L, "a", true), (2L, "b", false)).toDF("id", "name", "archived")
     assert(ScdMerge.dropArchived(sn).select("id").as[Long].collect().toSet == Set(2L))
