@@ -77,7 +77,8 @@ object GraftSession {
     * TimeOne, …): local[SPARK_GRAFT_CPUS or `defaultCpus`], shuffle
     * partitions = cores (overridable via SPARK_GRAFT_SHUFFLE — the
     * spill-sizing lever: r18 used it to attribute the wide-merge
-    * decade cliff to sort spill with cores held constant), protected
+    * decade cliff to sort spill with cores held constant, PLANS.md
+    * records the finding), protected
     * confs applied, temp warehouse dir (keeps ad-hoc catalog writes
     * out of the repo root). */
   def tool(defaultCpus: Int, logLevel: String = "WARN"): SparkSession = {

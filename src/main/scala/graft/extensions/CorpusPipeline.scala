@@ -1,6 +1,6 @@
 package graft.extensions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus cleaning — the composition every
@@ -27,19 +27,23 @@ object CorpusPipeline {
       maxStopRatio: Double = 0.12,
       trainHexBound: String = "c") // md5 first hex < bound → train (c = 75%)
 
-  /** @param containmentTau as [[cleanFull]]'s: when set, the near-dup
+  /** The quality gate: [[TextAnalysis.qualityScore]]'s `n_tok` in
+    * [minTokens, maxTokens] and its `stop_ratio` ≤ maxStopRatio. */
+  private def quality(t: Thresholds): Column =
+    TextAnalysis.nTok.between(t.minTokens, t.maxTokens) &&
+      TextAnalysis.stopRatio(Funnel.DefaultStopwords) <= t.maxStopRatio
+
+  /** The quality gate is one narrow `filter` on `documents`. A row whose
+    * `doc_id` is NULL passes it but never survives: the exact-dedup
+    * keeper join on `doc_id` drops it.
+    *
+    * @param containmentTau as [[cleanFull]]'s: when set, the near-dup
     *   stage drops the CONTAINED side of each candidate pair instead of
     *   blindly dropping b. */
   def clean(documents: DataFrame, t: Thresholds = Thresholds(),
-      containmentTau: Option[Double] = None): DataFrame = {
-    // 1. quality gate (TextAnalysis metrics, filtered before anything heavy)
-    val quality = TextAnalysis.qualityScore(documents)
-      .filter(col("n_tok").between(t.minTokens, t.maxTokens) &&
-        col("stop_ratio") <= t.maxStopRatio)
-      .select("doc_id")
-    dedupAndSplit(documents, documents.join(quality, "doc_id"), t,
+      containmentTau: Option[Double] = None): DataFrame =
+    dedupAndSplit(documents, documents.filter(quality(t)), t,
       containmentTau = containmentTau)
-  }
 
   /** [[clean]] plus the two remaining gates a pretraining pipeline runs —
     * a repetition/boilerplate gate and benchmark decontamination:
@@ -48,9 +52,10 @@ object CorpusPipeline {
     *   near-dup removal (MinHash-LSH) → deterministic split
     *
     * Gate order is cost order: the two narrow per-row gates (quality,
-    * duplicate-bigram ratio) drop rows before the decontamination
-    * broadcast probe, which drops rows before anything that shuffles
-    * (content-hash dedup, LSH banding).
+    * duplicate-bigram ratio) are one `filter`, ahead of the
+    * decontamination broadcast probe, which drops rows before anything
+    * that shuffles (content-hash dedup, LSH banding). As in [[clean]], a
+    * NULL `doc_id` passes the gates and is dropped by the keeper join.
     *
     * The decontaminated frame is materialized once (localCheckpoint):
     * the dedup tail references it several times (hash keepers, the
@@ -58,8 +63,11 @@ object CorpusPipeline {
     * it lazy re-evaluates the whole gate chain — shuffles included —
     * per reference (measured 20 s vs 3 s at sf0.1). At cluster scale
     * this is the natural stage boundary a pipeline persists to storage
-    * between gating and dedup. */
-  /** @param containmentTau when set, the near-dup stage's drop
+    * between gating and dedup. The checkpoint job and the survivor
+    * frame carry [[funnelFull]]'s stage counts as observed metrics
+    * (`Dataset.observe`, named apart per call).
+    *
+    * @param containmentTau when set, the near-dup stage's drop
     *   DIRECTION is decided by containment instead of position: a
     *   candidate pair whose a-side is the contained one (cont_a ≥ tau,
     *   cont_b < tau) drops a — the quote, the re-post, the
@@ -76,57 +84,96 @@ object CorpusPipeline {
       t: Thresholds = Thresholds(),
       maxDupBigram: Double = 0.2,
       contamGram: Int = 5,
-      containmentTau: Option[Double] = None): DataFrame = {
-    val decon = gatedDecon(documents, benchmark, t, maxDupBigram, contamGram)
-    // shareShingles=false: the checkpointed frame's plan is unique per
-    // run, so session-memoizing shingles keyed on it would only grow the
-    // memo without ever hitting
-    dedupAndSplit(decon, decon, t, shareShingles = false,
-      containmentTau = containmentTau)
-  }
+      containmentTau: Option[Double] = None): DataFrame =
+    fullRun(documents, benchmark, t, maxDupBigram, contamGram, containmentTau)._1
 
-  /** [[cleanFull]]'s GATE stage, exposed as the pipeline's natural
-    * seam (and the decade lever's stage boundary — TimeDecadeLever
-    * bills it solo at sf1/sf10): quality → repetition →
-    * decontamination, MATERIALIZED. Returns the checkpointed
-    * decontaminated frame the dedup tail consumes. */
-  def gatedDecon(
+  private val runs = new java.util.concurrent.atomic.AtomicLong()
+
+  /** One [[cleanFull]] pass: its survivors, and the funnel report of
+    * this pass, to be read after an action ran `executed` (the
+    * survivors or a frame over them) through `executed`'s own
+    * QueryExecution, e.g. by `collect()`. The stages are sequential, so
+    * each stage's drops are the difference of the counts before and
+    * after it. A count no job observed reads 0: an empty input can
+    * leave a branch unexecuted. */
+  private[extensions] def fullRun(
       documents: DataFrame,
       benchmark: DataFrame,
-      t: Thresholds = Thresholds(),
-      maxDupBigram: Double = 0.2,
-      contamGram: Int = 5): DataFrame = {
-    val quality = TextAnalysis.qualityScore(documents)
-      .filter(col("n_tok").between(t.minTokens, t.maxTokens) &&
-        col("stop_ratio") <= t.maxStopRatio)
-      .select("doc_id")
-    // repetition gate: narrow — computed in the filter itself, no join
-    val grams = TextAnalysis.wordNgrams(2)
-    val nBi = size(grams).cast("long")
-    val nDis = size(array_distinct(grams)).cast("long")
-    val dupRatio = when(nBi > 0, (nBi - nDis) * lit(1.0) / nBi).otherwise(lit(0.0))
-    val gated = documents.filter(dupRatio <= maxDupBigram).join(quality, "doc_id")
+      t: Thresholds,
+      maxDupBigram: Double,
+      contamGram: Int,
+      containmentTau: Option[Double]): (DataFrame, DataFrame => DataFrame) = {
+    val name = s"graft_funnel_${runs.incrementAndGet()}"
+    val (decon, gates) = gatedDecon(documents, benchmark, t, maxDupBigram, contamGram, name)
+    val Seq(total, noQuality, noRepetition, nDecon) = gates
+    // share=false: the checkpointed frame's plan is unique per run, so
+    // session-memoizing shingles or signatures keyed on it would only
+    // grow the memo without ever hitting
+    val survivors = dedupAndSplit(decon, decon, t, share = false,
+      containmentTau = containmentTau, observeAs = Some(name))
+    (survivors, executed => {
+      val Seq(keepers, nSurvivors) = Seq("keepers", "survivors")
+        .map(stage => observed(executed, s"${name}_$stage", 1).head)
+      Funnel.ladder(executed.sparkSession,
+        Seq("quality", "repetition", "contamination", "exact_dup", "near_dup"),
+        total, Seq(noQuality, noRepetition, total - noQuality - noRepetition - nDecon,
+          nDecon - keepers, keepers - nSurvivors))
+    })
+  }
+
+  /** The first `n` counts that the job which ran `executed` observed
+    * under `name`, zeros if it observed none. */
+  private def observed(executed: DataFrame, name: String, n: Int): Seq[Long] =
+    executed.queryExecution.observedMetrics.get(name)
+      .fold(Seq.fill(n)(0L))(r => (0 until n).map(r.getLong))
+
+  /** [[cleanFull]]'s GATE stage: quality → repetition →
+    * decontamination, MATERIALIZED. Returns the checkpointed
+    * decontaminated frame the dedup tail consumes, and the counts its
+    * checkpoint job observed: rows in, failed quality, passed quality
+    * but failed repetition, rows checkpointed. */
+  private def gatedDecon(
+      documents: DataFrame,
+      benchmark: DataFrame,
+      t: Thresholds,
+      maxDupBigram: Double,
+      contamGram: Int,
+      observeAs: String): (DataFrame, Seq[Long]) = {
+    val q = quality(t)
+    val r = TextAnalysis.dupBigramRatio <= maxDupBigram
+    // the flags are projected once, for the counts and the filter
+    val gated = documents.select(col("*"), q.as("_q"), r.as("_r"))
+      .observe(observeAs, count(lit(1)), count(when(!col("_q"), 1)),
+        count(when(col("_q") && !col("_r"), 1)))
+      .filter(col("_q") && col("_r"))
+      .drop("_q", "_r")
     // decontamination: drop docs sharing any contamGram-gram with the
     // benchmark (5 by default — the eval-leak gram should be long enough
-    // that coincidental phrase reuse does not wipe the corpus)
+    // that coincidental phrase reuse does not wipe the corpus). The
+    // probe re-applies the gates unobserved, so each doc is counted once.
     val contaminated = TextAnalysis
-      .contaminationHits(gated, benchmark, contamGram).select("doc_id")
-    gated.join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .contaminationHits(documents.filter(q && r), benchmark, contamGram)
+      .select("doc_id")
+    val decon = gated.join(contaminated, Seq("doc_id"), "left_anti")
+      .observe(s"${observeAs}_decon", count(lit(1)))
+    val checkpointed = decon.localCheckpoint()
+    (checkpointed, observed(decon, observeAs, 3) ++ observed(decon, s"${observeAs}_decon", 1))
   }
 
   /** Shared tail of [[clean]]/[[cleanFull]]: exact dedup → LSH near-dup
     * removal (± containment gate) → split, over `gated` (a filtered
-    * view of `documents`). */
-  private[graft] def dedupAndSplit(
+    * view of `documents`). With `observeAs`, the keeper aggregate and
+    * the survivor frame count their rows under `<observeAs>_keepers`
+    * and `<observeAs>_survivors`. */
+  private def dedupAndSplit(
       documents: DataFrame, gated: DataFrame, t: Thresholds,
-      shareShingles: Boolean = true,
-      containmentTau: Option[Double] = None): DataFrame = {
+      share: Boolean = true,
+      containmentTau: Option[Double] = None,
+      observeAs: Option[String] = None): DataFrame = {
+    def counted(df: DataFrame, stage: String) = observeAs.fold(df)(name =>
+      df.observe(s"${name}_$stage", count(lit(1))))
     // exact dedup: keep the smallest doc_id per content hash
-    val keepers = gated
-      .groupBy(md5(lower(coalesce(col("text"), lit(""))).cast("binary")).as("h"))
-      .agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
+    val keepers = counted(Dedup.exact(gated).select(col("keep_id").as("doc_id")), "keepers")
     val exactDeduped = gated.join(keepers, "doc_id")
 
     // near-dup removal: MinHash-LSH candidates, drop the b of each pair.
@@ -135,9 +182,9 @@ object CorpusPipeline {
     // identical rows (per-doc shingles are independent), but the scan +
     // explode + distinct shuffle happens once per session instead of once
     // per pipeline; the keeper-id side is small and broadcasts.
-    val sh = Dedup.shingles(documents, share = shareShingles)
+    val sh = Dedup.shingles(documents, share = share)
       .join(exactDeduped.select("doc_id"), "doc_id")
-    val pairs = Dedup.minHashLshFromShingles(sh)
+    val pairs = Dedup.minHashLshFromShingles(sh, share = share)
     // optional containment gate: same drop-one-per-pair cardinality,
     // but the DIRECTION follows the content — the contained side goes,
     // whichever position it holds (see cleanFull scaladoc). The SAME
@@ -154,95 +201,37 @@ object CorpusPipeline {
     val surviving = exactDeduped.join(removed, Seq("doc_id"), "left_anti")
 
     // deterministic content-independent split
-    surviving.select(col("doc_id"),
+    counted(surviving.select(col("doc_id"),
       when(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1) < t.trainHexBound,
-        lit("train")).otherwise(lit("val")).as("split"))
+        lit("train")).otherwise(lit("val")).as("split")), "survivors")
   }
 
   /** "Where did my corpus go?" — first-fail attribution for
-    * [[cleanFull]]'s whole gate chain, in [[Funnel]]'s report shape:
-    * (stage_idx, rule, n_dropped, n_remaining) over
+    * [[cleanFull]]'s whole gate chain, in [[Funnel.shape]]'s report
+    * shape: (stage_idx, rule, n_dropped, n_remaining) over
     *
     *   quality → repetition → contamination → exact_dup → near_dup →
     *   pass
     *
     * Each doc is attributed to the FIRST stage that drops it, so the
     * per-stage counts sum exactly to `total − survivors` and the pass
-    * row's n_remaining equals [[cleanFull]]'s survivor count (pinned in
-    * GatesSpec) — the release-note table every corpus ship includes
-    * beside its [[DataCard]].
+    * row's n_remaining equals [[cleanFull]]'s survivor count — the
+    * release-note table every corpus ship includes beside its
+    * [[DataCard]].
     *
-    * Attribution recomputes the SAME stage frames the pipeline runs
-    * (same operators, same filtered populations: contamination is
-    * probed on the gated set, exact-dup keepers on the decontaminated
-    * set, near-dup pairs among the exact-deduped survivors — a
-    * stage's verdict on a doc that earlier stages already dropped is
-    * never computed, matching what [[cleanFull]] actually does).
-    * Scale shape: the stage id-sets are narrow one-column frames,
-    * membership is five key joins, and the report collapses to a
-    * stages-cardinality frame before its (bounded) windows. */
+    * The counts are [[cleanFull]]'s own ([[fullRun]]): this runs
+    * [[cleanFull]] and one action (a count) on its survivors, and
+    * renders the six rows locally from what those jobs observed. */
   def funnelFull(
       documents: DataFrame,
       benchmark: DataFrame,
       t: Thresholds = Thresholds(),
       maxDupBigram: Double = 0.2,
       contamGram: Int = 5): DataFrame = {
-    // each stage's verdict feeds BOTH the next stage's population and
-    // the final attribution joins — so the two NARROW per-row gates
-    // are fused into ONE flags frame over one corpus scan and
-    // materialized once (unchecked, the plan re-ran the whole gate
-    // chain per consumer: 14 corpus scans at the same answer; and one
-    // checkpoint per gate still serialized three corpus passes).
-    // The quality predicate replicates TextAnalysis.qualityScore's
-    // exact arithmetic (unfiltered space split, round-4 stop ratio) —
-    // the oracle re-derives both gates independently, so drift between
-    // this inline form and cleanFull's qualityScore gate breaks the
-    // q_pipeline_funnel hash AND the GatesSpec reconciliation pin.
-    val arr = split(coalesce(col("text"), lit("")), " ")
-    val nTok = size(arr).cast("long")
-    val stopArr = array(lit("the"), lit("a"))
-    val nStop = size(filter(arr, x => array_contains(stopArr, x))).cast("long")
-    val qPred = nTok.between(t.minTokens, t.maxTokens) &&
-      round(nStop * lit(1.0) / nTok, 4) <= t.maxStopRatio
-    val grams = TextAnalysis.wordNgrams(2)
-    val nBi = size(grams).cast("long")
-    val nDis = size(array_distinct(grams)).cast("long")
-    val dupRatio =
-      when(nBi > 0, (nBi - nDis) * lit(1.0) / nBi).otherwise(lit(0.0))
-    val flags = documents
-      .select(col("doc_id"),
-        coalesce(qPred, lit(false)).as("_q"),
-        coalesce(dupRatio <= maxDupBigram, lit(false)).as("_r"))
-      .localCheckpoint()
-    val gated = documents
-      .join(flags.filter(col("_q") && col("_r")).select("doc_id"), "doc_id")
-    val contaminated = TextAnalysis
-      .contaminationHits(gated, benchmark, contamGram).select("doc_id")
-      .localCheckpoint()
-    val decon = gated.join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // same stage boundary as cleanFull (see above)
-    val keepers = decon
-      .groupBy(md5(lower(coalesce(col("text"), lit(""))).cast("binary")).as("h"))
-      .agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-    val ed = decon.join(keepers, "doc_id").select("doc_id")
-    val sh = Dedup.shingles(decon, share = false).join(ed, "doc_id")
-    val removed = Dedup.minHashLshFromShingles(sh)
-      .select(col("b").as("doc_id")).distinct()
-
-    def mark(ids: DataFrame, name: String) =
-      ids.withColumn(name, lit(true))
-    val stageIdx = flags
-      .join(mark(contaminated, "_c"), Seq("doc_id"), "left_outer")
-      .join(mark(keepers, "_k"), Seq("doc_id"), "left_outer")
-      .join(mark(removed, "_nd"), Seq("doc_id"), "left_outer")
-      .select(when(!col("_q"), 0)
-        .when(!col("_r"), 1)
-        .when(col("_c").isNotNull, 2)
-        .when(col("_k").isNull, 3)
-        .when(col("_nd").isNotNull, 4)
-        .otherwise(5).as("stage_idx"))
-    Funnel.shape(stageIdx, Seq(
-      "quality", "repetition", "contamination", "exact_dup", "near_dup"))
+    val (survivors, report) =
+      fullRun(documents, benchmark, t, maxDupBigram, contamGram, None)
+    val total = survivors.agg(count(lit(1)))
+    total.collect()
+    report(total)
   }
 }

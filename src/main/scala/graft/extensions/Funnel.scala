@@ -1,6 +1,6 @@
 package graft.extensions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -86,11 +86,10 @@ object Funnel {
       rules.map(_._1))
 
   /** Shape a one-column per-doc `stage_idx` frame into the report:
-    * (stage_idx, rule, n_dropped, n_remaining) for the ordered stage
-    * `names` plus the terminal 'pass' row (index = names.size). Shared
-    * by [[funnel]] and the pipeline-level attribution
-    * ([[CorpusPipeline.funnelFull]]) — any first-fail cascade collapses
-    * to the same ladder. */
+    * (stage_idx int, rule, n_dropped long, n_remaining long) for the
+    * ordered stage `names` plus the terminal 'pass' row (index =
+    * names.size). [[ladder]] renders the same report from counts that
+    * are already known ([[CorpusPipeline.funnelFull]]). */
   private[extensions] def shape(
       stageIdxRows: DataFrame, names: Seq[String]): DataFrame = {
     val spark = stageIdxRows.sparkSession
@@ -113,6 +112,18 @@ object Funnel {
       .select(col("stage_idx"), col("rule"), col("n_dropped"),
         (sum("_n").over(whole) - sum("n_dropped").over(upTo))
           .as("n_remaining"))
+  }
+
+  /** [[shape]]'s report from known counts, as a local frame (no job):
+    * `dropped(i)` of the `total` docs first fail stage `names(i)`. */
+  private[extensions] def ladder(
+      spark: SparkSession, names: Seq[String], total: Long,
+      dropped: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    val remaining = dropped.scanLeft(total)(_ - _)
+    (names.indices.map(i => (i, names(i), dropped(i), remaining(i + 1))) :+
+      ((names.size, "pass", 0L, remaining.last)))
+      .toDF("stage_idx", "rule", "n_dropped", "n_remaining")
   }
 
   /** Documents that pass every rule — the survivor frame downstream

@@ -47,8 +47,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * The census-leg single-scan (r19 VERDICT #2): one call exploded the
   * corpus into lines TWICE — once to derive the dup set, once as the
-  * anti-join's left side — and TimeLineLever attributed about half the
-  * family's sf100 cost to the census leg. [[lines]] now rides
+  * anti-join's left side — and a census/scrub timing split (PLANS.md)
+  * attributed about half the family's sf100 cost to the census leg.
+  * [[lines]] now rides
   * [[Dedup.sharedFrame]] (session-memoized localCheckpoint keyed on the
   * corpus plan + lineLen), so the explode runs ONCE and both legs — and
   * every other registry row of the family — read the materialized

@@ -23,11 +23,10 @@ object Packing {
       documents: DataFrame,
       budget: Int,
       shardCol: String = "lang"): DataFrame = {
-    val nTok = size(split(coalesce(col("text"), lit("")), " ")).cast("long")
     val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     documents
-      .select(col("doc_id"), col(shardCol).as("shard"), nTok.as("n_tok"))
+      .select(col("doc_id"), col(shardCol).as("shard"), TextAnalysis.nTok.as("n_tok"))
       .withColumn("end_tok", sum("n_tok").over(w))
       .withColumn("start_tok", col("end_tok") - col("n_tok"))
       .withColumn("chunk_first", floor(col("start_tok") / budget).cast("long"))
@@ -90,8 +89,7 @@ object Packing {
     * independently. */
   def shardAssign(documents: DataFrame, numShards: Int): DataFrame = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    val nTok = size(split(coalesce(col("text"), lit("")), " ")).cast("long")
-    val meta = documents.select(col("doc_id"), nTok.as("n_tok"))
+    val meta = documents.select(col("doc_id"), TextAnalysis.nTok.as("n_tok"))
     val lane = pmod(col("rn"), lit(numShards.toLong))
     val pass = floor(col("rn") / numShards)
     globalRowNumber(meta, Seq(col("n_tok").desc, col("doc_id")))

@@ -53,25 +53,45 @@ object TextAnalysis {
   }
 
   /** Quality metrics: token count, mean token length, stopword ratio —
-    * the length/punct/stopword heuristics of C4/Gopher-style filters. */
-  def qualityScore(documents: DataFrame, stopwords: Seq[String] = Seq("the", "a")): DataFrame = {
-    val arr = split(coalesce(col("text"), lit("")), " ")
-    val nTok = size(arr).cast("long")
-    val sumLen = aggregate(transform(arr, t => length(t)), lit(0), (acc, x) => acc + x)
-    val stopArr = array(stopwords.map(lit): _*)
-    val nStop = size(filter(arr, t => array_contains(stopArr, t))).cast("long")
+    * the length/punct/stopword heuristics of C4/Gopher-style filters.
+    * [[CorpusPipeline]]'s quality gate filters on the same [[nTok]] and
+    * [[stopRatio]] columns. */
+  def qualityScore(documents: DataFrame,
+      stopwords: Seq[String] = Funnel.DefaultStopwords): DataFrame = {
+    val sumLen = aggregate(transform(wsTokens, t => length(t)), lit(0), (acc, x) => acc + x)
     documents.select(col("doc_id"),
       nTok.as("n_tok"),
       col("n_chars"),
       round(sumLen * lit(1.0) / nTok, 4).as("avg_tok_len"),
-      round(nStop * lit(1.0) / nTok, 4).as("stop_ratio"))
+      stopRatio(stopwords).as("stop_ratio"))
+  }
+
+  /** `text` split on single spaces, NULL read as "": never empty, so
+    * [[nTok]] ≥ 1 and no ratio over it divides by zero. */
+  private def wsTokens: Column = split(coalesce(col("text"), lit("")), " ")
+
+  /** [[qualityScore]]'s `n_tok` and `stop_ratio`. */
+  private[extensions] def nTok: Column = size(wsTokens).cast("long")
+  private[extensions] def stopRatio(stopwords: Seq[String]): Column = {
+    val stop = array(stopwords.map(lit): _*)
+    val nStop = size(filter(wsTokens, t => array_contains(stop, t))).cast("long")
+    round(nStop * lit(1.0) / nTok, 4)
+  }
+
+  /** Share of a doc's word bigrams ([[wordNgrams]]) that repeat an
+    * earlier one, unrounded; 0 for a doc with no bigram. */
+  private[extensions] def dupBigramRatio: Column = {
+    val grams = wordNgrams(2)
+    val nBi = size(grams).cast("long")
+    val nDis = size(array_distinct(grams)).cast("long")
+    when(nBi > 0, (nBi - nDis) * lit(1.0) / nBi).otherwise(lit(0.0))
   }
 
   /** Whitespace token count + BPE-ish regex token count
     * (letters / digit runs / other symbols). */
   def tokenCounts(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"),
-      size(split(coalesce(col("text"), lit("")), " ")).cast("long").as("ws_tokens"),
+      nTok.as("ws_tokens"),
       size(regexp_extract_all(coalesce(col("text"), lit("")),
         lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long").as("re_tokens"))
 

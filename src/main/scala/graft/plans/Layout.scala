@@ -17,12 +17,16 @@ object Layout {
   /** Write `df` partitioned by a derived year column: the per-year file
     * loop of the reference becomes `.../year=YYYY/` and year predicates
     * prune at plan time. `sortCols` are sorted WITHIN partitions so
-    * parquet row-group stats can skip on them (Z-order-lite). */
+    * parquet row-group stats can skip on them (Z-order-lite). The sort
+    * leads with `year`: the partitioned writer requires its input
+    * ordered by the partition column, and a sort by `sortCols` alone
+    * does not meet that, so the planner replaced it with a sort by
+    * `year` only and the files came out unsorted on `sortCols`. */
   def writeYearPartitioned(
       df: DataFrame, tsCol: String, path: String,
       sortCols: Seq[String], maxRecordsPerFile: Int = 50000): Unit =
     df.withColumn("year", year(col(tsCol)))
-      .sortWithinPartitions(sortCols.map(col): _*)
+      .sortWithinPartitions(("year" +: sortCols).map(col): _*)
       .write
       .partitionBy("year")
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)

@@ -1244,7 +1244,8 @@ object Round10Queries {
     * corpus go?": first-fail attribution across the FULL pretraining
     * gate chain (quality → repetition → contamination → exact dedup →
     * MinHash near-dup → pass), on q_corpus_clean_full's corpus/benchmark
-    * split. The oracle re-derives every stage frame of the
+    * split. graft renders the counts that q_corpus_clean_full's own pass
+    * observes; the oracle re-derives every stage frame of the
     * q_corpus_clean_full CTE chain and attributes each doc to its first
     * failing stage — so the pass row's n_remaining necessarily equals
     * q_corpus_clean_full's row count, pinning the two queries to each

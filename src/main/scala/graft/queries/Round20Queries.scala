@@ -7,8 +7,8 @@ import graft.Tables.table
 /** Round-20 additions. Headline: the Bloom two-pass line-dedup path
   * ([[graft.extensions.LineDedup.dedupLinesBloom]]) — the repo's last
   * prose scale claim turned into a driver-verified row (r19 VERDICT
-  * #1): the exact-df census that TimeLineLever measured at ~half the
-  * family's sf100 cost is replaced by an 8-byte-key census folded into
+  * #1): the exact-df census, measured at ~half the family's sf100
+  * cost (PLANS.md), is replaced by an 8-byte-key census folded into
   * a broadcast Bloom bitset plus a codegen'd scan-side probe (no
   * anti-join). Verified under q_line_dedup's oracle VERBATIM — on the
   * harness corpus the filter is sized so the expected false-positive

@@ -88,6 +88,92 @@ class GatesSpec extends SparkSpec {
     }
   }
 
+  private def ladder(report: org.apache.spark.sql.DataFrame) =
+    report.orderBy("stage_idx").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+
+  private val fullStages = Seq("quality", "repetition", "contamination",
+    "exact_dup", "near_dup", "pass")
+
+  test("funnelFull: empty and one-row corpora give the six-row ladder") {
+    val docs = postDocs
+    val bench = Seq((0L, "held out words nobody else uses at all here"))
+      .toDF("doc_id", "text")
+    val good = (1 to 25).map(i => s"w$i").mkString(" ")
+    // the ladder of `pass` survivors and `dropped` first-fail counts
+    def expected(pass: Long, dropped: Map[String, Long] = Map.empty) = {
+      val total = pass + dropped.values.sum
+      val d = fullStages.map(s => if (s == "pass") 0L else dropped.getOrElse(s, 0L))
+      fullStages.indices.map(i =>
+        (i, fullStages(i), d(i), total - d.take(i + 1).sum))
+    }
+    // an empty lake (a parquet scan that returns no row) and an empty
+    // local frame: every count reads 0, nothing blocks
+    assert(ladder(CorpusPipeline.funnelFull(docs.filter($"doc_id" < 0), bench)) == expected(0))
+    assert(ladder(CorpusPipeline.funnelFull(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), bench)) == expected(0))
+    // one row that survives, and one row each stage drops
+    def one(text: String) = Seq((1L, text)).toDF("doc_id", "text")
+    assert(ladder(CorpusPipeline.funnelFull(one(good), bench)) == expected(1))
+    assert(ladder(CorpusPipeline.funnelFull(one("too short"), bench)) ==
+      expected(0, Map("quality" -> 1L)))
+    // 24 tokens, 21 of 23 bigrams repeat
+    assert(ladder(CorpusPipeline.funnelFull(one(Seq.fill(12)("p q").mkString(" ")),
+      bench)) == expected(0, Map("repetition" -> 1L)))
+    assert(ladder(CorpusPipeline.funnelFull(one(good),
+      Seq((0L, "w3 w4 w5 w6 w7")).toDF("doc_id", "text"))) ==
+      expected(0, Map("contamination" -> 1L)))
+    // a lake whose every doc fails the first gate: nothing downstream
+    // of the gate runs on a row, and the gate's count is still read
+    val n = docs.count()
+    assert(ladder(CorpusPipeline.funnelFull(docs, bench,
+      CorpusPipeline.Thresholds(minTokens = 1000, maxTokens = 2000))) ==
+      expected(0, Map("quality" -> n)))
+  }
+
+  test("funnelFull: the pass row is the survivor count of the same run") {
+    val docs = postDocs
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val bench = docs.filter(col("doc_id") % 10 === 0)
+    val memo = graft.Memo.size(spark, graft.Memo.DedupFrames)
+    val (frame, report) = CorpusPipeline.fullRun(corpus, bench,
+      CorpusPipeline.Thresholds(), 0.2, 5, None)
+    // the job that collects the survivors is the job whose counts the
+    // report reads
+    val survivors = frame.collect()
+    // a run's frames are unique to it: none is kept in the session memo
+    assert(graft.Memo.size(spark, graft.Memo.DedupFrames) == memo)
+    val rows = ladder(report(frame))
+    assert(rows.map(_._2) == fullStages)
+    assert(rows.last._4 == survivors.length && rows.last._3 == 0L)
+    assert(rows.map(_._3).sum == corpus.count() - survivors.length)
+    // two cleanFull frames in one plan: each run's observations are
+    // named apart, so the union analyzes
+    val twice = CorpusPipeline.cleanFull(corpus, bench)
+      .union(CorpusPipeline.cleanFull(corpus, bench))
+    assert(twice.count() == 2L * survivors.length)
+  }
+
+  test("clean/cleanFull: NULL-text, zero-token and NULL-id rows keep the survivors") {
+    val good = (1 to 25).map(i => s"w$i").mkString(" ")
+    val other = (1 to 25).map(i => s"v$i").mkString(" ")
+    val corpus = Seq[(java.lang.Long, String)](
+      (1L, good),
+      (2L, null),   // NULL text: no token, fails quality
+      (3L, ""),     // zero tokens
+      (4L, "    "), // zero word tokens, four empty split tokens
+      (5L, good),   // exact duplicate of doc 1
+      (null, other), // passes every gate, dropped by the keeper join
+      (7L, other))
+      .toDF("doc_id", "text")
+    val bench = Seq((0L, "held out words nobody else uses at all here"))
+      .toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => if (r.isNullAt(0)) -1L else r.getLong(0)).toSet
+    assert(ids(CorpusPipeline.clean(corpus)) == Set(1L, 7L))
+    assert(ids(CorpusPipeline.cleanFull(corpus, bench)) == Set(1L, 7L))
+  }
+
   test("data card with funnel: the drop table reconciles inside the card") {
     val docs = graft.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val card = DataCard.buildWithFunnel(docs).collect()

@@ -23,6 +23,22 @@ class LayoutSkewSpec extends SparkSpec {
     assert(pruned.select("v").as[Long].collect().toSet == Set(1L, 2L))
   }
 
+  test("year-partitioned write: every file is sorted by sortCols") {
+    val dir = java.nio.file.Files.createTempDirectory("layout-order").toFile.getAbsolutePath
+    // v descends through the input, three years interleaved
+    val df = spark.range(300).select(
+      to_timestamp(format_string("%d-06-01 00:00:00", lit(2020) + col("id") % 3)).as("ts"),
+      (lit(1000L) - col("id")).as("v"))
+      .repartition(2)
+    Layout.writeYearPartitioned(df, "ts", dir, sortCols = Seq("v"))
+    val files = spark.read.parquet(dir).inputFiles
+    assert(files.length >= 3)
+    files.foreach { f =>
+      val v = spark.read.parquet(f).select("v").as[Long].collect().toSeq
+      assert(v.nonEmpty && v == v.sorted, s"$f is not sorted by v: ${v.take(10)}")
+    }
+  }
+
   test("sorted write: equality predicate hits few row groups; unsorted hits most") {
     val dir = java.nio.file.Files.createTempDirectory("layout-sort").toFile.getAbsolutePath
     // 200k rows, keys shuffled so the unsorted layout has every key

@@ -288,16 +288,6 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("q_pipeline_funnel: stage frames stay materialized — bounded corpus scans") {
-    val p = planString("q_pipeline_funnel")
-    // the naive form re-ran the gate chain once per consumer: 14
-    // parquet scans of documents. The fused/checkpointed form reads
-    // the corpus at most 6 times (flags, gated join, contamination
-    // grams, benchmark grams + the dedup tail's own references)
-    val scans = "Scan parquet".r.findAllIn(p).size
-    assert(scans <= 6, s"$scans corpus scans — a stage frame lost its checkpoint\n$p")
-  }
-
   test("q_postings: pair frame materialized once, list build bounded by the cap") {
     val p = planString("q_postings")
     // the distinct (term, doc) frame is a checkpoint boundary (three
