@@ -100,21 +100,18 @@ object Bench {
     * shuffle-volume lever, read from the plan's SQL metrics after a full
     * toRdd evaluation rather than asserted from the scaladoc. */
   private def shuffleBytesOf(df: org.apache.spark.sql.DataFrame): Double = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val qe = df.queryExecution
     qe.toRdd.count() // materialize every output row (no column pruning)
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec => p +: walk(q.plan)
-      case _ => p +: p.children.flatMap(walk)
-    }
-    walk(qe.executedPlan).collect {
+    aqe.collect(qe.executedPlan) {
       case e: ShuffleExchangeExec =>
         e.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)
     }.sum.toDouble
   }
+
+  /** Plan walks that enter AQE plans and their query stages. */
+  private val aqe =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
 
   /** Measured ANN accuracy/latency trade-off: mean recall@10 of
     * [[graft.extensions.Similarity.ivfSearch]] (k-means cells) vs exact
@@ -1850,8 +1847,8 @@ object Bench {
   def skewJoinBench(
       spark: SparkSession, reps: Int = 3,
       n: Long = 2000000L): Seq[(String, Double)] = {
-    import org.apache.spark.sql.execution.{PartialReducerPartitionSpec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.PartialReducerPartitionSpec
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
     val left = spark.range(n).select(
       when(pmod(col("id"), lit(2L)) === 0, lit(0L)).otherwise(col("id")).as("k"),
       sha2(concat(lit("p"), col("id")), 256).as("pad")) // ~64 B payload/row
@@ -1863,15 +1860,9 @@ object Bench {
       .agg(sum(length(col("pad"))).as("bytes"), count(lit(1)).as("rows"))
     // query stages are LEAF nodes holding their subtree in .plan — a
     // plain collect() on the final plan never reaches the
-    // AQEShuffleRead below ResultQueryStage (same walk as
-    // [[shuffleBytesOf]])
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec => p +: walk(q.plan)
-      case _ => p +: p.children.flatMap(walk)
-    }
+    // AQEShuffleRead below ResultQueryStage
     def splitsOf(df: org.apache.spark.sql.DataFrame): Double =
-      walk(df.queryExecution.executedPlan).collect {
+      aqe.collect(df.queryExecution.executedPlan) {
         case r: AQEShuffleReadExec =>
           r.partitionSpecs.count(_.isInstanceOf[PartialReducerPartitionSpec])
       }.sum.toDouble

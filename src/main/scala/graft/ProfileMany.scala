@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Round-20 measurement harness (guide §1): for each named query, time
@@ -11,12 +10,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * Usage: runMain graft.ProfileMany <sfDir> <reps> <query ...>
   * (`all` as the only query name profiles the whole registry.)
   */
-object ProfileMany {
-  private def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-    case q: QueryStageExec => p +: walk(q.plan)
-    case _ => p +: p.children.flatMap(walk)
-  }
+object ProfileMany extends AdaptiveSparkPlanHelper {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -39,7 +33,7 @@ object ProfileMany {
         // plan stats from one more executed run (AQE final plan)
         val df = SparkEntry.queries(n)(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
-        val ops = walk(df.queryExecution.executedPlan)
+        val ops = mapPlans(df.queryExecution.executedPlan)(identity)
         val exch = ops.collect { case e: ShuffleExchangeExec => e }
         val shufMb = exch.flatMap(_.metrics.get("shuffleBytesWritten").map(_.value)).sum / 1e6
         def cnt(sub: String) = ops.count(_.getClass.getSimpleName.contains(sub))

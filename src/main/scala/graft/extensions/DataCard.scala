@@ -142,7 +142,11 @@ object DataCard {
     * smallest distinct 48-bit text/token hashes (`kmv_text` /
     * `kmv_tok`, key = zero-padded hash so the state frame is
     * string-keyed and sortable). Size ≤ 5 + |sources| + |langs| + 2k
-    * rows regardless of corpus size. */
+    * rows regardless of corpus size. Reads `documents` five times (the
+    * tallies, per-source and per-lang counts and the two KMV sets), so
+    * callers hand it a materialized frame: q_card_merged a checkpoint
+    * of each half, [[graft.streaming.StreamingDataCard]] the batch's
+    * checkpoint, which the sink frees. */
   def buildState(
       documents: DataFrame,
       k: Int = 256,
@@ -156,7 +160,6 @@ object DataCard {
       size(filter(toks, t => t.isin(stopwords: _*)))
         .cast("long").as("n_stop"),
       lower(coalesce(col("text"), lit(""))).as("_lt"))
-      .localCheckpoint()
 
     def row(kind: String, key: Column, n: Column) =
       struct(lit(kind).as("kind"), key.as("key"), n.cast("long").as("n"))

@@ -304,7 +304,7 @@ object Sketches {
     // discipline): the cum/n windows and the q join are separate
     // consumers, and an unmaterialized state would re-run its whole
     // build subtree — corpus scan included — per consumer
-    // (ExplainOne caught 4 scans; now the build runs once)
+    // (the formatted plan showed 4 scans; now the build runs once)
     val s = state.localCheckpoint()
     val w = Window.orderBy("bin")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -140,10 +140,7 @@ object Freshness {
       path: java.nio.file.Path,
       prefix: String = "graft")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ticks.writeStream
-      .outputMode("append")
-      .foreachBatch {
-        (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          publishProm(path, prometheusText(compute(state, asOf()), prefix))
-      }
+    graft.streaming.Admission.sink(ticks.writeStream) { _ =>
+      publishProm(path, prometheusText(compute(state, asOf()), prefix))
+    }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Physical-layout helpers — the 100 TB story (SURVEY §4, §7.4).
@@ -392,23 +393,18 @@ object Layout {
     * claim in this repo (`inputFiles` lists the whole relation and is
     * blind to pruning; this consults each scan's partitionFilters the
     * way the execution-time file listing does). Descends into AQE
-    * plans: an AdaptiveSparkPlanExec is a leaf of the outer tree, so
-    * `collectLeaves` alone would miss every scan under an exchange. */
+    * plans through Spark's [[AdaptiveSparkPlanHelper]]: an
+    * AdaptiveSparkPlanExec is a leaf of the outer tree, and after
+    * execution AQE freezes exchanges into query stages, leaves holding
+    * their subtree in `.plan` — a plain `collectLeaves` would miss
+    * every scan under an exchange and read an executed plan as "zero
+    * files". */
   def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[String] = p.collectLeaves().flatMap {
-      case f: FileSourceScanExec =>
+    new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec =>
         f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
           .flatMap(_.files.map(_.getPath.toString))
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      // after execution AQE freezes exchanges into query stages, which
-      // are leaves of the outer tree holding their subtree in .plan —
-      // without this case an executed plan reads as "zero files"
-      case q: QueryStageExec => walk(q.plan)
-      case _ => Seq.empty
-    }
-    walk(df.queryExecution.executedPlan)
+      }.flatten
   }
 }

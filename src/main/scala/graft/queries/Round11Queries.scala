@@ -113,9 +113,9 @@ object Round11Queries {
     (s, dir) => {
       val docs = graft.Tables.table(s, dir, "documents")
       val a = graft.extensions.DataCard
-        .buildState(docs.filter(col("doc_id") % 2 === 0))
+        .buildState(docs.filter(col("doc_id") % 2 === 0).localCheckpoint())
       val b = graft.extensions.DataCard
-        .buildState(docs.filter(col("doc_id") % 2 === 1))
+        .buildState(docs.filter(col("doc_id") % 2 === 1).localCheckpoint())
       graft.extensions.DataCard
         .renderMerged(graft.extensions.DataCard.mergeStates(a, b))
     },

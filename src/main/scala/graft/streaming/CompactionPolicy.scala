@@ -1,5 +1,8 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 /** WHEN to compact — the operational lever that turns the
   * transparency-proven [[StreamingPostings.compact]] /
   * [[StreamingDeletes.compact]] from a capability a caller must
@@ -29,4 +32,13 @@ final case class CompactionPolicy(
     (maxLogBatches > 0 && logBatches >= maxLogBatches) ||
       (maxLogToBaseRatio > 0 && baseRows > 0 &&
         logRows.toDouble >= maxLogToBaseRatio * baseRows)
+
+  /** The sinks' check: `log`'s segments (distinct `batch_id`) and rows
+    * in one aggregate, plus one count of `base` only when the ratio
+    * lever is enabled. */
+  def shouldCompact(log: DataFrame, base: => DataFrame): Boolean = {
+    val r = log.agg(countDistinct(col("batch_id")), count(lit(1))).head()
+    val baseRows = if (maxLogToBaseRatio > 0) base.count() else 0L
+    shouldCompact(r.getLong(0), r.getLong(1), baseRows)
+  }
 }

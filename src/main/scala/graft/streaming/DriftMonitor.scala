@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.extensions.TextAnalysis
+import graft.extensions.{BpeTrain, TextAnalysis}
 
 /** Streaming distribution-drift monitor — the always-on counterpart of
   * [[TextAnalysis.sourceDrift]], watching a live document feed the way
@@ -47,21 +47,8 @@ object DriftMonitor {
       newDocs: DataFrame,
       profile: DataFrame,
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(TextAnalysis.driftVsProfile(batch, profile), batchId)
-      }
-
-  /** Release the blocks behind a localCheckpoint'ed frame (same
-    * defensive shape as BpeTrain's per-round free): a long-running
-    * monitor would otherwise retain one materialized profile per
-    * refresh for the session lifetime. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
+    Admission.sink(newDocs.writeStream) { b =>
+      onBatch(TextAnalysis.driftVsProfile(b.df, profile), b.id)
     }
 
   /** [[sink]] with a moving baseline: at every micro-batch whose id is a
@@ -69,7 +56,8 @@ object DriftMonitor {
     * profile is rebuilt from `profileSource` — typically a re-read of
     * the accumulated corpus path the admission job appends to —
     * localCheckpoint'ed so every batch joins a materialized frame, and
-    * the predecessor's blocks are freed. Between refreshes, batches
+    * the predecessor's blocks are freed (a long-running monitor would
+    * otherwise retain one profile per refresh). Between refreshes, batches
     * score against the profile from the last boundary: staleness is
     * bounded by `refreshEvery` batches BY CONSTRUCTION, not by operator
     * discipline. Keying the cadence on the deterministic micro-batch id
@@ -93,17 +81,15 @@ object DriftMonitor {
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
     var profile: DataFrame = null
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (profile == null || batchId % refreshEvery == 0) {
-          val prev = profile
-          profile = TextAnalysis.vocabProfile(profileSource(), topN)
-            .localCheckpoint()
-          if (prev != null) freeCheckpoint(prev)
-        }
-        onBatch(TextAnalysis.driftVsProfile(batch, profile), batchId)
+    Admission.sink(newDocs.writeStream) { b =>
+      if (profile == null || b.id % refreshEvery == 0) {
+        val prev = profile
+        profile = TextAnalysis.vocabProfile(profileSource(), topN)
+          .localCheckpoint()
+        if (prev != null) BpeTrain.freeCheckpoint(prev)
       }
+      onBatch(TextAnalysis.driftVsProfile(b.df, profile), b.id)
+    }
   }
 
   /** Alarm filter over a drift frame: sources whose divergence crossed

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.merge.ScdMerge
@@ -55,16 +55,14 @@ object SnapshotStream {
       trackedCols: Seq[String],
       loadState: () => DataFrame,
       saveState: DataFrame => Unit): DataStreamWriter[Row] =
-    writer.outputMode(OutputMode.Append).foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val dates = batch.select("snapshot_date").distinct()
-          .collect().map(_.getDate(0)).sorted
-        dates.foreach { d =>
-          val snap = batch.filter(col("snapshot_date") === lit(d)).drop("snapshot_date")
-          val merged = ScdMerge.applySnapshot(
-            loadState(), snap, d.toString, keyCol, trackedCols)
-          saveState(merged)
-        }
+    Admission.sink(writer) { b =>
+      val dates = b.df.select("snapshot_date").distinct()
+        .collect().map(_.getDate(0)).sorted
+      dates.foreach { d =>
+        val snap = b.df.filter(col("snapshot_date") === lit(d)).drop("snapshot_date")
+        saveState(ScdMerge.applySnapshot(
+          loadState(), snap, d.toString, keyCol, trackedCols))
+      }
     }
 
   /** Watermarked 7-day tumbling counts — the streaming formulation of the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -164,17 +164,12 @@ object StreamingBucketedMerge {
       dateOf: (DataFrame, Long) => String,
       onBatch: (State, Long) => Unit,
       maxFilesPerBucket: Int = 4): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val st = state()
-        if (batchId + 1 > st.gen) { // replay guard: gen N applied batch N-1
-          val b = batch.toDF().localCheckpoint()
-          try {
-            val next = applyBatchCompacting(
-              batch.sparkSession, st, b, dateOf(b, batchId), maxFilesPerBucket)
-            onBatch(next, batchId)
-          } finally graft.extensions.BpeTrain.freeCheckpoint(b)
-        }
+    Admission.sink(arriving.writeStream) { b =>
+      val st = state()
+      if (b.id + 1 > st.gen) { // replay guard: gen N applied batch N-1
+        val next = applyBatchCompacting(b.df.sparkSession, st, b.frozen,
+          dateOf(b.frozen, b.id), maxFilesPerBucket)
+        onBatch(next, b.id)
       }
+    }
 }

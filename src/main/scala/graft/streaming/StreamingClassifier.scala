@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.extensions.TextAnalysis
@@ -40,9 +40,7 @@ object StreamingClassifier {
   def sink(weights: DataFrame, arriving: DataFrame,
            onBatch: (DataFrame, Long) => Unit,
            threshold: Double = 0.0): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(admitBatch(batch.toDF(), weights, threshold), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(admitBatch(b.df, weights, threshold), b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.extensions.{DataCard, Funnel}
@@ -23,12 +23,9 @@ import graft.extensions.{DataCard, Funnel}
   *
   * State shape at 100 TB: ≤ 5 + |sources| + |langs| + 2k rows —
   * driver-postcard-sized — so per-batch cost is one narrow pass over
-  * the batch plus an O(state) merge, independent of corpus age. Replay
-  * caution (the [[StreamingSketch]] discipline): the tally rows are
-  * SUMS, not idempotent — re-merging a redelivered batch double-counts
-  * — so the caller persists the merged state keyed by batchId
-  * (overwrite-by-id ⇒ exactly-once; foreachBatch redelivers a failed
-  * batch under the same id). */
+  * the batch plus an O(state) merge, independent of corpus age. The
+  * tally rows are SUMS: this is a fold twin under the [[Admission]]
+  * replay contract. */
 object StreamingDataCard {
 
   /** foreachBatch sink maintaining the card state: each arriving batch
@@ -43,11 +40,8 @@ object StreamingDataCard {
       onBatch: (DataFrame, Long) => Unit,
       k: Int = 256,
       stopwords: Seq[String] = Funnel.DefaultStopwords): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val batchState =
-          DataCard.buildState(batch.localCheckpoint(), k, stopwords)
-        onBatch(DataCard.mergeStates(state, batchState, k), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val batchState = DataCard.buildState(b.frozen, k, stopwords)
+      onBatch(DataCard.mergeStates(state, batchState, k), b.id)
+    }
 }

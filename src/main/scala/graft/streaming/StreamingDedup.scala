@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -84,10 +84,8 @@ object StreamingDedup {
       numHashes: Int = 8,
       rowsPerBand: Int = 4,
       fastHash: Boolean = false): DataStreamWriter[Row] =
-    candidates(index, newDocs, numHashes, rowsPerBand, fastHash)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(batch.distinct(), batchId)
-      }
+    Admission.sink(
+      candidates(index, newDocs, numHashes, rowsPerBand, fastHash).writeStream) { b =>
+      onBatch(b.df.distinct(), b.id)
+    }
 }

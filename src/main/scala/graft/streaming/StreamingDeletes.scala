@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -56,13 +56,9 @@ object StreamingDeletes {
   def sink(
       arrivingDeletes: DataFrame,
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    arrivingDeletes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(
-          batch.select("doc_id").withColumn("batch_id", lit(batchId)),
-          batchId)
-      }
+    Admission.sink(arrivingDeletes.writeStream) { b =>
+      onBatch(b.df.select("doc_id").withColumn("batch_id", lit(b.id)), b.id)
+    }
 
   /** [[sink]] with the compaction policy inside the sink (r12 VERDICT
     * #2, the [[StreamingPostings.sinkCompacting]] twin): after each
@@ -87,23 +83,10 @@ object StreamingDeletes {
       onTombstones: (DataFrame, Long) => Unit,
       onCompact: (DataFrame, Long) => Unit,
       policy: CompactionPolicy = CompactionPolicy()): DataStreamWriter[Row] =
-    arrivingDeletes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onTombstones(
-          batch.select("doc_id").withColumn("batch_id", lit(batchId)),
-          batchId)
-        val postLog = log // re-read: now includes this batch
-        val (segs, rows) = {
-          val r = postLog.agg(
-            countDistinct(col("batch_id")), count(lit(1))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val baseRows =
-          if (policy.maxLogToBaseRatio > 0) base.count() else 0L
-        if (policy.shouldCompact(segs, rows, baseRows)) {
-          val newBase = compact(base, postLog.select("doc_id"), budget)
-          onCompact(newBase, batchId)
-        }
-      }
+    Admission.sink(arrivingDeletes.writeStream) { b =>
+      onTombstones(b.df.select("doc_id").withColumn("batch_id", lit(b.id)), b.id)
+      val postLog = log // re-read: now includes this batch
+      if (policy.shouldCompact(postLog, base))
+        onCompact(compact(base, postLog.select("doc_id"), budget), b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -51,9 +51,7 @@ object StreamingDsir {
       ratio: DataFrame,
       onBatch: (DataFrame, Long) => Unit,
       buckets: Int = 4096): DataStreamWriter[Row] =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(scoreBatch(batch.toDF(), ratio, buckets), batchId)
-      }
+    Admission.sink(newDocs.writeStream) { b =>
+      onBatch(scoreBatch(b.df, ratio, buckets), b.id)
+    }
 }

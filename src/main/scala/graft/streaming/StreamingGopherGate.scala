@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -19,10 +19,8 @@ import graft.extensions.QualityRules
   * Exactness: the report is a per-doc independent sum, so any batch
   * decomposition folds to exactly the whole-corpus
   * [[QualityRules.gopherReport]] (StreamingGopherGateSpec pins it
-  * through a live MemoryStream). Replay caution (the
-  * [[StreamingDataCard]] discipline): sums are not idempotent — the
-  * caller persists the merged report keyed by batchId
-  * (overwrite-by-id ⇒ exactly-once under foreachBatch redelivery).
+  * through a live MemoryStream). The report is a sum: a fold twin
+  * under the [[Admission]] replay contract.
   *
   * State shape at 100 TB: 6 rows (5 rules + pass). Per-batch cost ∝
   * batch; the historical corpus is never re-read. */
@@ -55,12 +53,8 @@ object StreamingGopherGate {
       arriving: DataFrame,
       onBatch: (DataFrame, DataFrame, Long) => Unit,
       t: QualityRules.Thresholds = QualityRules.Thresholds()): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val frozen = batch.localCheckpoint()
-        val flags = QualityRules.gopherFlags(frozen, t)
-        val merged = mergeReports(state, QualityRules.gopherReport(frozen, t))
-        onBatch(flags, merged, batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val merged = mergeReports(state, QualityRules.gopherReport(b.frozen, t))
+      onBatch(QualityRules.gopherFlags(b.frozen, t), merged, b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -149,10 +149,8 @@ object StreamingJointDedup {
       maxHamming: Int = 3,
       numBands: Int = 4,
       audioIndex: Option[DataFrame] = None): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(jointCandidates(batch.sparkSession, textIndex, imageIndex,
-          batch.toDF(), maxHamming, numBands, audioIndex), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(jointCandidates(b.df.sparkSession, textIndex, imageIndex,
+        b.df, maxHamming, numBands, audioIndex), b.id)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.util.sketch.BloomFilter
@@ -30,11 +30,9 @@ import graft.extensions.{LineDedup, Membership}
   * Scale shape: the frozen set is the boilerplate census — small by
   * construction — so the per-batch anti-join broadcasts it; per-batch
   * cost ∝ batch, ZERO streaming state beyond the 1-row running
-  * report. Replay caution (the [[StreamingDataCard]] discipline): the
-  * report fold is a SUM, not idempotent — the caller persists the
-  * merged report keyed by batchId (overwrite-by-id ⇒ exactly-once
-  * under foreachBatch redelivery); the scrubbed frame itself is a pure
-  * function of (batch, frozen set) and safe to re-emit. */
+  * report. The report is a SUM, a fold under the [[Admission]] replay
+  * contract; the scrubbed frame itself is a pure function of (batch,
+  * frozen set) and safe to re-emit. */
 object StreamingLineGate {
 
   /** The frozen dim: lines with document frequency > `maxDf` in the
@@ -119,27 +117,18 @@ object StreamingLineGate {
   /** foreachBatch sink: hands the caller the batch's scrubbed frame
     * and the RUNNING removal-mass report. `state` is by-name so each
     * batch re-reads the caller's persisted report — the stream-static
-    * shape every twin in this repo uses. */
+    * shape every twin in this repo uses. The scrubbed frame is
+    * checkpointed and handed over; the caller owns its lifetime. */
   def sink(
       state: => DataFrame,
       boilerplate: DataFrame,
       arriving: DataFrame,
       onBatch: (DataFrame, DataFrame, Long) => Unit,
       lineLen: Int = 6): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // the input checkpoint is dead once the scrubbed frame
-        // materializes — free it, or an always-on stream retains one
-        // batch-sized cached RDD per micro-batch (the
-        // BpeTrain.freeCheckpoint discipline). The SCRUBBED checkpoint
-        // is handed to the caller, who owns its lifetime.
-        val b = batch.toDF().localCheckpoint()
-        val scrubbed =
-          try admitBatch(b, boilerplate, lineLen).localCheckpoint()
-          finally graft.extensions.BpeTrain.freeCheckpoint(b)
-        onBatch(scrubbed, mergeReports(state, batchReport(scrubbed)), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val scrubbed = admitBatch(b.frozen, boilerplate, lineLen).localCheckpoint()
+      onBatch(scrubbed, mergeReports(state, batchReport(scrubbed)), b.id)
+    }
 
   /** [[sink]] for the Bloom regime — identical replay/report contract;
     * the per-batch scrub is the scan-side probe of the ONE frozen
@@ -151,13 +140,8 @@ object StreamingLineGate {
       arriving: DataFrame,
       onBatch: (DataFrame, DataFrame, Long) => Unit,
       lineLen: Int = 6): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint() // freed below, as in sink
-        val scrubbed =
-          try admitBatchBloom(b, frozen, lineLen).localCheckpoint()
-          finally graft.extensions.BpeTrain.freeCheckpoint(b)
-        onBatch(scrubbed, mergeReports(state, batchReport(scrubbed)), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val scrubbed = admitBatchBloom(b.frozen, frozen, lineLen).localCheckpoint()
+      onBatch(scrubbed, mergeReports(state, batchReport(scrubbed)), b.id)
+    }
 }

@@ -63,10 +63,7 @@ object StreamingMediaDedup {
       onBatch: (DataFrame, Long) => Unit,
       maxHamming: Int = 3,
       numBands: Int = 4): DataStreamWriter[Row] =
-    candidates(index, arriving, maxHamming, numBands)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(batch.distinct(), batchId)
-      }
+    Admission.sink(candidates(index, arriving, maxHamming, numBands).writeStream) { b =>
+      onBatch(b.df.distinct(), b.id)
+    }
 }

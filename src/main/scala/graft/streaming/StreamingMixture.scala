@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.extensions.Mixture
@@ -20,11 +20,8 @@ import graft.extensions.Mixture
   * narrow pass over the batch plus an O(state) merge, independent of
   * corpus age; the plan derivation is pure bounded-frame arithmetic.
   *
-  * Replay caution (the [[StreamingSketch]] discipline): totals are
-  * SUMS, not idempotent — re-merging a redelivered batch
-  * double-counts — so the caller persists the merged state keyed by
-  * batchId (overwrite-by-id ⇒ exactly-once; foreachBatch redelivers a
-  * failed batch under the same id).
+  * Totals are SUMS: this is a fold twin under the [[Admission]] replay
+  * contract.
   *
   * Parity (StreamingMixtureSpec): after any stream of batches, the
   * maintained totals equal [[Mixture.totalsOf]] over the concatenated
@@ -41,10 +38,7 @@ object StreamingMixture {
       totals: => DataFrame,
       arriving: DataFrame,
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val batchTotals = Mixture.totalsOf(batch.localCheckpoint())
-        onBatch(Mixture.mergeTotals(totals, batchTotals), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(Mixture.mergeTotals(totals, Mixture.totalsOf(b.frozen)), b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -55,9 +55,7 @@ object StreamingPerplexity {
       lm: DataSelection.RefLm,
       onBatch: (DataFrame, Long) => Unit,
       k: Double = 0.5): DataStreamWriter[Row] =
-    newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(scoreBatch(batch.toDF(), lm, k), batchId)
-      }
+    Admission.sink(newDocs.writeStream) { b =>
+      onBatch(scoreBatch(b.df, lm, k), b.id)
+    }
 }

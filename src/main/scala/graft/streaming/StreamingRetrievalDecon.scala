@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -79,10 +79,7 @@ object StreamingRetrievalDecon {
            queryTerms: Seq[String], arriving: DataFrame,
            onBatch: (DataFrame, Long) => Unit,
            k: Int = 20, n: Int = 4): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(admitBatch(batch.toDF(), stats, idf, benchGrams,
-          queryTerms, k, n), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(admitBatch(b.df, stats, idf, benchGrams, queryTerms, k, n), b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -109,14 +109,10 @@ object StreamingSemDedup {
       centroids: DataFrame,
       arriving: DataFrame,
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    assignWithNorm(arriving, centroids)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(graft.extensions.EmbeddingDrift.driftVsProfile(
-          batch.select(col("cell_id").cast("long").as("cell")), profile),
-          batchId)
-      }
+    Admission.sink(assignWithNorm(arriving, centroids).writeStream) { b =>
+      onBatch(graft.extensions.EmbeddingDrift.driftVsProfile(
+        b.df.select(col("cell_id").cast("long").as("cell")), profile), b.id)
+    }
 
   /** foreachBatch sink: assigns the arriving stream to cells (narrow,
     * stateless) and hands each micro-batch's ADMITTED rows to `onBatch`
@@ -131,11 +127,7 @@ object StreamingSemDedup {
       tau: Double,
       onBatch: (DataFrame, Long) => Unit,
       maxCellSize: Int = 4096): DataStreamWriter[Row] =
-    assignWithNorm(arriving, centroids)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(admitBatch(index, batch.localCheckpoint(), tau, maxCellSize),
-          batchId)
-      }
+    Admission.sink(assignWithNorm(arriving, centroids).writeStream) { b =>
+      onBatch(admitBatch(index, b.frozen, tau, maxCellSize), b.id)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -28,12 +28,9 @@ import graft.extensions.Sketches
   * per-batch merge cost is O(batch) map-side combine + O(state)
   * reduce, independent of corpus age. The state lives as a file-backed
   * frame the caller overwrites per batch (the [[StreamingDedup]]
-  * stream-static discipline). Replay caution: CMS merge is NOT
-  * idempotent — re-merging the same batch double-counts — so the
-  * caller's persist must be keyed by batchId (foreachBatch redelivers
-  * a failed batch under the SAME id, making overwrite-by-id
-  * exactly-once); the KMV merge, a set union, is idempotent and
-  * immune. */
+  * stream-static discipline). CMS counters are sums, a fold under the
+  * [[Admission]] replay contract; the KMV merge, a set union, is
+  * idempotent and immune. */
 object StreamingSketch {
 
   /** Cell-wise sum of two CMS grids (seed, bucket, cnt) — the sketch
@@ -74,21 +71,17 @@ object StreamingSketch {
     * r12 third family member, [[graft.extensions.Sketches.histState]]):
     * per-batch bin counts merged by union+sum — associative and
     * commutative like the CMS counters, so streamed ≡ rebuilt holds
-    * EXACTLY (not w.h.p.; StreamingSketchSpec pins it). Same replay
-    * caution as CMS: counts are sums, so the caller's persist must be
-    * keyed by batchId. */
+    * EXACTLY (not w.h.p.; StreamingSketchSpec pins it). Counts are
+    * sums, replayed like CMS ([[Admission]]). */
   def histSink(
       state: => DataFrame,
       arriving: DataFrame,
       onBatch: (DataFrame, Long) => Unit,
       vCol: String, lo: Long, hi: Long, bins: Int): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val batchState = Sketches.histState(
-          batch.localCheckpoint(), vCol, lo, hi, bins)
-        onBatch(Sketches.mergeHist(state, batchState), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val batchState = Sketches.histState(b.frozen, vCol, lo, hi, bins)
+      onBatch(Sketches.mergeHist(state, batchState), b.id)
+    }
 
   /** foreachBatch sink maintaining the HLL distinct state (the fourth
     * family member, [[graft.extensions.Sketches.hllState]]): per-batch
@@ -103,18 +96,14 @@ object StreamingSketch {
       arriving: DataFrame,
       onBatch: (DataFrame, Long) => Unit,
       n: Int = 3): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val batchState = Sketches.hllState(batch.localCheckpoint(), n)
-        onBatch(Sketches.mergeHll(state, batchState), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(Sketches.mergeHll(state, Sketches.hllState(b.frozen, n)), b.id)
+    }
 
   /** foreachBatch sink maintaining BOTH sketches: each micro-batch of
     * documents is sketched (one narrow pass each) and merged into the
     * caller-persisted state; `onBatch(newCms, newKmv, batchId)`
-    * persists the merged states (overwrite keyed by batchId ⇒
-    * exactly-once under replay). `cms`/`kmv` are by-name so each batch
+    * persists the merged states. `cms`/`kmv` are by-name so each batch
     * re-reads the file-backed current state — the stream-static
     * shape. */
   def sink(
@@ -123,12 +112,9 @@ object StreamingSketch {
       arriving: DataFrame,
       onBatch: (DataFrame, DataFrame, Long) => Unit,
       depth: Int = 4, width: Int = 1024, k: Int = 64, n: Int = 3): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val b = batch.localCheckpoint()
-        val batchCms = Sketches.cmsBuild(Sketches.tokens(b), depth, width)
-        val batchKmv = kmvState(b, k, n)
-        onBatch(mergeCms(cms, batchCms), mergeKmv(kmv, batchKmv, k), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      val batchCms = Sketches.cmsBuild(Sketches.tokens(b.frozen), depth, width)
+      val batchKmv = kmvState(b.frozen, k, n)
+      onBatch(mergeCms(cms, batchCms), mergeKmv(kmv, batchKmv, k), b.id)
+    }
 }

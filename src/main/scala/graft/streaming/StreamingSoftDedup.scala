@@ -218,16 +218,17 @@ object StreamingSoftDedup {
     @volatile private var current: State = initial
     def state: State = current
     def lastAppliedBatchId: Long = lastApplied
-    override def apply(batch: Dataset[Row], batchId: Long): Unit = {
-      if (batchId <= lastApplied) return // replayed batch: already folded
-      val frozen = batch.localCheckpoint()
-      current = admitBatch(current, index(), frozen, numHashes, rowsPerBand,
-        fastHash)
-      appendIndex(Dedup.bandBucketsRowLocal(
-        frozen.select("doc_id", "text"), numHashes, rowsPerBand, fastHash))
-      lastApplied = batchId // after the fold: a crash mid-batch replays it
-      onBatch(current, batchId)
-    }
+    override def apply(batch: Dataset[Row], batchId: Long): Unit =
+      Admission.run(batch, batchId)(admit)
+    private[streaming] def admit(b: Admission.Batch): Unit =
+      if (b.id > lastApplied) { // else a replayed batch: already folded
+        current = admitBatch(current, index(), b.frozen, numHashes,
+          rowsPerBand, fastHash)
+        appendIndex(Dedup.bandBucketsRowLocal(
+          b.frozen.select("doc_id", "text"), numHashes, rowsPerBand, fastHash))
+        lastApplied = b.id // after the fold: a crash mid-batch replays it
+        onBatch(current, b.id)
+      }
   }
 
   /** Persist/read the fold's replay cursor beside the state dirs, so a
@@ -261,8 +262,6 @@ object StreamingSoftDedup {
       startAfterBatchId: Long = -1L): DataStreamWriter[Row] = {
     val fold = new Fold(() => index, initial, appendIndex, onBatch,
       numHashes, rowsPerBand, fastHash, startAfterBatchId)
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch(fold)
+    Admission.sink(arriving.writeStream)(fold.admit)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -60,9 +60,7 @@ object StreamingTokenizerStats {
   def sink(vocab: Map[String, Double], arriving: DataFrame,
            onBatch: (DataFrame, Long) => Unit,
            maxPieceLen: Int = 4): DataStreamWriter[Row] =
-    arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(admitBatch(batch.toDF(), vocab, maxPieceLen), batchId)
-      }
+    Admission.sink(arriving.writeStream) { b =>
+      onBatch(admitBatch(b.df, vocab, maxPieceLen), b.id)
+    }
 }
