@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
+  * ([[contractLine]]).
   *
   * Per-query numbers are the MEDIAN of `SPARK_GRAFT_BENCH_REPS`
   * (default 3) runs in sorted-name order — the round-5 file's
@@ -17,23 +16,12 @@ import org.apache.spark.sql.functions._
   * localCheckpoint cost doesn't bill to the alphabetically-first
   * consumer query.
   *
-  * A separate `layout` section (excluded from the graded total, which
-  * stays the plain-parquet suite) times the physical-layout story of
-  * SURVEY §4: the same aggregate on flat vs year-partitioned parquet
-  * (partition pruning), and the same join shuffled vs bucketed
-  * (exchange elimination) — the two levers that matter most at 100 TB,
-  * measured rather than asserted. A `scale` section times the
-  * ngram-Jaccard df levers on a generated Zipf-tail corpus each round
-  * (see [[scaleBench]]) so the scale-lever claims stay continuously
-  * measured.
-  *
-  * Since round 9 the SECTION timing rows (layout scans/joins, scale
-  * levers, ann index builds, streaming probes, capstone phases) are
-  * ALSO medians of `SPARK_GRAFT_BENCH_REPS` runs ([[timeMed]]) — the
-  * r8 driver bench single-shot rows swung 2-4× on unchanged code under
-  * machine load, which only a judge re-run could adjudicate; setup
-  * rows with persistent writes (layout/sorted setup) stay single-shot
-  * (they are priced as one-time costs, not perf claims).
+  * The graded loop is the whole benchmark. The evidence sections that
+  * once ran after it (layout, scale, ann, streaming, lsm, scd_lsm,
+  * capstone, multimodal, skewjoin, paged, rtfilter, curation,
+  * joint_admission, admission) are gone: their structural facts are
+  * pinned by specs, their last numbers are kept in `BENCH_r21.json`
+  * (`parsed`), and PLANS.md records their findings.
   *
   * Regression detection (since round 16) is contention-robust by
   * construction: the flag stat is MIN-of-reps (robust to bursty load; a
@@ -56,1938 +44,29 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Median-of-reps timing for the SECTION rows (layout/scale/ann/
-    * streaming/capstone) — the same discipline the queries map has had
-    * since round 5, extended here because the r8 driver bench showed
-    * 2-4× phantom swings on UNCHANGED code in the single-shot scale
-    * rows (ngram_encoded 63.9 s driver vs 10.1 s controlled re-run):
-    * one `time(...)` sample cannot distinguish a real regression from a
-    * noisy neighbor on a shared box, and only a judge re-run could
-    * adjudicate. Bodies re-run per rep, so any body with persistent
-    * side effects must make them idempotent (drop-before-write).
-    *
-    * When `name` is given, the raw per-rep samples are recorded in
-    * [[repsLog]] and emitted as `<section>_reps` sibling objects in the
-    * JSON line — a median alone still can't self-adjudicate when
-    * SUSTAINED box load skews all reps (r9: driver ngram_pruned 53.2 s
-    * vs judge 10.4 s on identical code, twice needing a judge re-run);
-    * with the per-rep arrays in the artifact, a loaded run shows up as
-    * uniformly-inflated or high-variance reps without anyone re-running
-    * anything. */
-  private val repsLog =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-
-  private def timeMed(reps: Int, name: String = null)(body: => Any): Double = {
-    val xs = (1 to reps).map(_ => time(body))
-    if (name != null) repsLog(name) = xs
-    median(xs)
-  }
-
-  /** `{"row":num,...}` for a section's rows. */
+  /** `{"row":num,...}` */
   private def jsonNum(rows: Seq[(String, Double)]): String =
     rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** The parallel `{"row":[rep,rep,rep],...}` object for whichever of a
-    * section's rows were timed through [[timeMed]] with a name (count /
-    * ratio rows have no reps and are skipped). */
-  private def jsonReps(rows: Seq[(String, Double)]): String =
-    rows.collect { case (k, _) if repsLog.contains(k) =>
-      "\"" + k + "\":" + repsLog(k).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-
-  /** Total shuffle bytes written by `df`'s own executed plan (AQE-aware
-    * walk into materialized query stages) — structural evidence for a
-    * shuffle-volume lever, read from the plan's SQL metrics after a full
-    * toRdd evaluation rather than asserted from the scaladoc. */
-  private def shuffleBytesOf(df: org.apache.spark.sql.DataFrame): Double = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val qe = df.queryExecution
-    qe.toRdd.count() // materialize every output row (no column pruning)
-    aqe.collect(qe.executedPlan) {
-      case e: ShuffleExchangeExec =>
-        e.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)
-    }.sum.toDouble
-  }
-
-  /** Plan walks that enter AQE plans and their query stages. */
-  private val aqe =
-    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-
-  /** Measured ANN accuracy/latency trade-off: mean recall@10 of
-    * [[graft.extensions.Similarity.ivfSearch]] (k-means cells) vs exact
-    * brute force over a fixed query sample, at nprobe 1/2/4 — the
-    * recall-vs-cells-probed curve an ANN deployment publishes, measured
-    * each round rather than asserted (same discipline as the ngram
-    * levers in [[scaleBench]]). */
-  def annBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.extensions.{KMeans, Similarity}
-    val emb = Tables.table(spark, sfDir, "embeddings").localCheckpoint()
-    val cents = KMeans.fit(emb, k = 8, iters = 3).localCheckpoint()
-    val queryIds = 0L until 8L
-    def topIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.collect().map(_.getLong(0)).toSet
-    val brute = queryIds.map(qid =>
-      qid -> topIds(Similarity.bruteForceTopK(emb, qid, 10))).toMap
-    // a query id absent from the corpus (or a <2-vector corpus) yields an
-    // empty brute set; dividing by it would put NaN into the JSON line
-    // and break the whole bench output — drop such ids from the mean
-    val valid = queryIds.filter(qid => brute(qid).nonEmpty)
-    // IVF-realistic index build: k=64 cells, 3 Lloyd iterations. fit is
-    // eager (each iteration collects the k×dim centroid table), so this
-    // times the real per-iteration work — since round 8 a row-local
-    // argmin projection (zero shuffle; Round8OpsSpec pins the plan)
-    // instead of the old n×k crossJoin + window shuffle.
-    val idxBuild = timeMed(reps, "index_build_k64")(KMeans.fit(emb, k = 64, iters = 3))
-    // the IVF-REALISTIC k regime (the scaladoc's 4k–65k cells claim,
-    // measured): the round-9 broadcast NearestCell expression keeps the
-    // per-row cost one fused k×dim loop and the centroid table off the
-    // plan — this row pins that large-k holds up, round over round
-    val idxBuild4k = timeMed(reps, "index_build_k4096")(KMeans.fit(emb, k = 4096, iters = 3))
-    // product quantization: train/encode cost and the recall@10-vs-
-    // exact-L2 accuracy contract (ADC ranks L2, so the exact baseline
-    // here is L2 too, not the cosine brute map above). Two recall rows
-    // publish the REAL operating curve: raw ADC (coarse — at this
-    // corpus' tight in-cluster neighborhoods quantization washes out
-    // fine ranks) and the shipped shortlist-200 re-rank, which
-    // recovers the exact top-10 while the corpus scan still touches
-    // only m-byte codes; code_bytes_ratio is the memory story — dim
-    // floats down to m bytes per vector (32× here)
-    import graft.extensions.ProductQuantization
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val m = 8
-    var pqCb: ProductQuantization.Codebooks = null
-    val pqTrainT = timeMed(reps, "pq_train_m8k256") {
-      pqCb = ProductQuantization.train(emb, dim, m = m, ksub = 256)
-    }
-    val pqEncodeT = timeMed(reps, "pq_encode") {
-      ProductQuantization.encode(emb, pqCb)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val codes = ProductQuantization.encode(emb, pqCb).localCheckpoint()
-    val qVecs = emb.filter(col("vec_id").isin(valid: _*))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val pqRecallPairs = valid.map { qid =>
-      val q = emb.filter(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>").as("qe"))
-      val exact = emb.filter(col("vec_id") =!= qid)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          call_function("squared_l2",
-            col("embedding").cast("array<double>"), col("qe")).as("d"))
-        .orderBy(col("d"), col("vec_id")).limit(10)
-        .collect().map(_.getLong(0)).toSet
-      val raw = topIds(ProductQuantization.searchAdc(
-        codes.filter(col("vec_id") =!= qid), pqCb, qVecs(qid), 10))
-      val reranked = topIds(ProductQuantization.searchAdcRerank(
-        codes.filter(col("vec_id") =!= qid), emb.filter(col("vec_id") =!= qid),
-        pqCb, qVecs(qid), 10, shortlist = 200))
-      if (exact.isEmpty) (0.0, 0.0)
-      else ((raw & exact).size.toDouble / exact.size,
-        (reranked & exact).size.toDouble / exact.size)
-    }
-    val pqRecalls = pqRecallPairs.map(_._1)
-    val pqRecallsRr = pqRecallPairs.map(_._2)
-    // the composed IVF-PQ pipeline (coarse cells × compressed scan ×
-    // re-rank) — its recall factors into the two contracts above
-    val pqAssigned = KMeans.assign(emb, cents).select("vec_id", "cell_id")
-      .localCheckpoint()
-    val ivfPqRecalls = valid.map { qid =>
-      val q = emb.filter(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>").as("qe"))
-      val exact = emb.filter(col("vec_id") =!= qid)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          call_function("squared_l2",
-            col("embedding").cast("array<double>"), col("qe")).as("d"))
-        .orderBy(col("d"), col("vec_id")).limit(10)
-        .collect().map(_.getLong(0)).toSet
-      val got = topIds(ProductQuantization.ivfPqSearch(
-        codes.filter(col("vec_id") =!= qid), pqAssigned,
-        emb.filter(col("vec_id") =!= qid), cents, pqCb, qVecs(qid),
-        kTop = 10, nprobe = 2, shortlist = 200))
-      if (exact.isEmpty) 0.0 else (got & exact).size.toDouble / exact.size
-    }
-    // the ivfSearch scaladoc's 100 TB claim, MEASURED instead of
-    // asserted: with the cell assignment written as a PARTITION COLUMN,
-    // a one-cell probe touches only that cell's directory — the same
-    // evidence discipline as the layout section's year pruning
-    // (files-read counts from the filesystem, not vibes)
-    val cellDir = java.nio.file.Files
-      .createTempDirectory("graft-emb-cells").toString
-    KMeans.assign(emb, cents)
-      .write.partitionBy("cell_id").mode("overwrite").parquet(cellDir)
-    val cellPart = spark.read.parquet(cellDir)
-    val probeCell = cellPart.select("cell_id").head().getInt(0)
-    val cellFlat = KMeans.assign(emb, cents).localCheckpoint()
-    val cellScanFlat = timeMed(reps, "cellpart_scan_flat")(
-      cellFlat.filter(col("cell_id") === probeCell)
-        .agg(count(lit(1))).collect())
-    val cellScanPruned = timeMed(reps, "cellpart_scan_pruned")(
-      cellPart.filter(col("cell_id") === probeCell)
-        .agg(count(lit(1))).collect())
-    def parquetFiles(p: java.nio.file.Path) = {
-      val s = java.nio.file.Files.walk(p)
-      try s.filter(f => f.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
-    val cellFilesTotal = parquetFiles(java.nio.file.Paths.get(cellDir))
-    val cellFilesRead = parquetFiles(
-      java.nio.file.Paths.get(cellDir, s"cell_id=$probeCell"))
-    // persisted IVF index (r18 VERDICT #2) — the exact path q_ann_ivf
-    // rides: ONE label-partitioned write (billed cold via eviction),
-    // then every probe statically prunes to the query cell's directory;
-    // build-vs-probe is the postings pricing discipline
-    // (the eviction, which deletes the previous index directory, is not
-    // billed to the build)
-    var ivfIdxDir: String = null
-    val ivfIdxBuildT = {
-      val xs = (1 to reps).map { _ =>
-        Memo.evict(spark, Memo.IvfIndexes)
-        time { ivfIdxDir = Similarity.ivfIndexPath(emb) }
-      }
-      repsLog("ivf_index_build") = xs
-      median(xs)
-    }
-    val ivfIdx = spark.read.parquet(ivfIdxDir)
-    val ivfIdxProbeT = timeMed(reps, "ivf_index_probe")(
-      Similarity.ivfTopKIndexed(ivfIdx, 0L, 10).collect())
-    val ivfIdxFilesTotal =
-      graft.plans.Layout.scannedFiles(ivfIdx).size
-    val ivfIdxFilesRead = graft.plans.Layout
-      .scannedFiles(Similarity.ivfTopKIndexed(ivfIdx, 0L, 10)).size
-    // incremental maintenance (r19 VERDICT #5): price the per-batch
-    // UPSERT (dynamic overwrite of touched cells only) against the
-    // full rebuild the upsert replaces — the streaming-embeddings
-    // steady-state vs the re-center event. Upserting a replayed slice
-    // is idempotent (batch-wins anti-join), so reps don't grow the
-    // index; each rep pays the same touched-cell rewrite.
-    val ivfBatch = emb.filter(pmod(col("vec_id"), lit(20L)) === 0L)
-      .localCheckpoint()
-    val ivfUpsertT = timeMed(reps, "ivf_index_upsert_batch") {
-      Similarity.upsertIvfIndex(ivfIdxDir, ivfBatch)
-    }
-    val ivfRebuildT = timeMed(reps, "ivf_index_rebuild") {
-      Similarity.writeIvfIndex(emb, ivfIdxDir)
-    }
-    (Seq(1, 2, 4).map { nprobe =>
-      val recalls = valid.map { qid =>
-        val got = topIds(Similarity.ivfSearch(emb, cents, qid, 10, nprobe))
-        (got & brute(qid)).size.toDouble / brute(qid).size
-      }
-      s"ivf_recall_nprobe$nprobe" ->
-        (if (recalls.nonEmpty) recalls.sum / recalls.size else 0.0)
-    }) ++ Seq("ivf_queries" -> valid.size.toDouble,
-      "cellpart_scan_flat" -> cellScanFlat,
-      "cellpart_scan_pruned" -> cellScanPruned,
-      "cellpart_files_total" -> cellFilesTotal.toDouble,
-      "cellpart_files_read" -> cellFilesRead.toDouble,
-      "index_build_k64" -> idxBuild,
-      "index_build_k4096" -> idxBuild4k,
-      "ivf_index_build" -> ivfIdxBuildT,
-      "ivf_index_probe" -> ivfIdxProbeT,
-      "ivf_index_files_total" -> ivfIdxFilesTotal.toDouble,
-      "ivf_index_files_read" -> ivfIdxFilesRead.toDouble,
-      "ivf_index_upsert_batch" -> ivfUpsertT,
-      "ivf_index_rebuild" -> ivfRebuildT,
-      "pq_train_m8k256" -> pqTrainT,
-      "pq_encode" -> pqEncodeT,
-      "pq_recall10_adc" ->
-        (if (pqRecalls.nonEmpty) pqRecalls.sum / pqRecalls.size else 0.0),
-      "pq_recall10_rerank200" ->
-        (if (pqRecallsRr.nonEmpty) pqRecallsRr.sum / pqRecallsRr.size else 0.0),
-      "ivfpq_recall10_np2" ->
-        (if (ivfPqRecalls.nonEmpty) ivfPqRecalls.sum / ivfPqRecalls.size else 0.0),
-      "pq_code_bytes_ratio" -> (dim * 4.0 / m))
-  }
-
-  /** Per-batch probe cost against a GROWING bucketed on-disk band index —
-    * the steady-state cost of the always-on admission loop (the
-    * reference's poll → diff → upsert cycle, feeder_postgres.py:251-259,
-    * at the near-dup layer). Setup writes the corpus' LSH band index
-    * bucketed by (band, bkey); each simulated micro-batch then times
-    * [[graft.streaming.StreamingDedup.candidates]] + per-batch distinct —
-    * batch-mode execution of the exact plan the micro-batch runs, since a
-    * stream-static join re-plans against the static side's files every
-    * batch — and APPENDS the accepted batch's band rows
-    * ([[graft.plans.Layout.appendBucketed]]) so later batches probe a
-    * larger index, exactly as the admission job grows it. Broadcast is
-    * disabled so the join takes the bucketed sort-merge path a 100 TB
-    * index requires (the zero-index-side-exchange plan is pinned in
-    * StreamingDedupSpec; this section prices it per round). */
-  def streamingBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.extensions.Dedup
-    import graft.streaming.StreamingDedup
-    val docs = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
-    val buckets = 8
-    val setup = timeMed(reps, "index_build") {
-      spark.sql("DROP TABLE IF EXISTS stream_band_idx")
-      graft.plans.Layout.writeBucketed(
-        Dedup.bandBuckets(Dedup.shingles(docs, share = false), share = false),
-        "stream_band_idx", Seq("band", "bkey"), buckets)
-    }
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val nBatches = 4
-      val perBatch = (1 to nBatches).map { b =>
-        // batch b: a 1/20 slice of the corpus, ids offset so the probe
-        // sees genuinely new documents (guaranteed near-dup hits);
-        // localCheckpoint freezes it so the probe bills only the join
-        val batch = docs
-          .filter(pmod(col("doc_id"), lit(20)) === lit(b - 1))
-          .select((col("doc_id") + lit(b.toLong * 10000000L)).as("doc_id"),
-            col("text"))
-          .localCheckpoint()
-        // the probe is side-effect-free — rep it against the index AS OF
-        // this batch, then append once so the next batch sees growth
-        val t = timeMed(reps, s"probe_batch_$b") {
-          StreamingDedup.candidates(spark.table("stream_band_idx"), batch)
-            .distinct()
-            .write.format("noop").mode("overwrite").save()
-        }
-        graft.plans.Layout.appendBucketed(
-          Dedup.bandBucketsRowLocal(batch),
-          "stream_band_idx", Seq("band", "bkey"), buckets)
-        s"probe_batch_$b" -> t
-      }
-      val idxRows = spark.table("stream_band_idx").count().toDouble
-      // maintenance: the index is now 5 writes deep (initial + 4 appends)
-      // — price the OPTIMIZE-style rewrite and the probe either side of
-      // it, with the file counts that are the structural evidence. The
-      // compact row is rep-honest despite mutating state: every rep
-      // rewrites the identical full row set (only rep 1 reads the
-      // fragmented layout, and reading is the cheap half of a rewrite).
-      val locStr = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("stream_band_idx"))
-        .location.toString
-      val locUri = java.net.URI.create(locStr)
-      val locDir = if (locUri.getScheme == null) new java.io.File(locStr)
-        else new java.io.File(locUri)
-      def idxFiles() = Option(locDir.listFiles())
-        .fold(0.0)(_.count(_.getName.endsWith(".parquet")).toDouble)
-      val probeBatch = docs
-        .filter(pmod(col("doc_id"), lit(20)) === lit(nBatches))
-        .select((col("doc_id") + lit((nBatches + 1).toLong * 10000000L)).as("doc_id"),
-          col("text"))
-        .localCheckpoint()
-      def probeOnce(name: String): Double = timeMed(reps, name) {
-        StreamingDedup.candidates(spark.table("stream_band_idx"), probeBatch)
-          .distinct()
-          .write.format("noop").mode("overwrite").save()
-      }
-      val filesFragmented = idxFiles()
-      val probeFragmented = probeOnce("probe_fragmented")
-      val compact = timeMed(reps, "index_compact") {
-        graft.plans.Layout.compactBucketed(
-          spark, "stream_band_idx", Seq("band", "bkey"), buckets)
-      }
-      val filesCompacted = idxFiles()
-      val probeCompacted = probeOnce("probe_compacted")
-      Seq("index_build" -> setup) ++ perBatch ++ Seq(
-        "index_rows_final" -> idxRows,
-        "index_files_fragmented" -> filesFragmented,
-        "probe_fragmented" -> probeFragmented,
-        "index_compact" -> compact,
-        "index_files_compacted" -> filesCompacted,
-        "probe_compacted" -> probeCompacted)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS stream_band_idx")
-    }
-  }
-
-  /** LSM-persisted SCD state admission economics (r19 VERDICT #6 —
-    * [[graft.streaming.StreamingBucketedMerge]]): against the wide
-    * 53-column state the merge family prices everywhere else, the
-    * steady-state per-batch bill of the delta-append path vs the full
-    * state rewrite a [[graft.streaming.SnapshotStream.mergeSink]]-style
-    * saveState pays per batch, plus the resolving compaction and its
-    * file-count evidence. Admission batches are FULL dated snapshots
-    * with incremental perturbation (the SCD contract — a snapshot is
-    * complete; partial feeds would read as mass tombstones), each
-    * applied ONCE (appends are not idempotent; replaying a date is an
-    * empty delta): the first admission pays the bootstrap-sized delta
-    * (every pre-1996 key tombstones), the two steady batches pay
-    * ~|perturbed keys| — the row reports the steady median and the
-    * first-batch cost separately. */
-  def scdLsmBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.queries.CoreQueries
-    import graft.merge.ScdMerge
-    import graft.streaming.StreamingBucketedMerge
-    val buckets = 32
-    val a = CoreQueries.wideSnap(spark, sfDir, perturb = false,
-      col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-    val s1 = ScdMerge.applySnapshot(
-      ScdMerge.emptyState(a), a, "1998-01-01", "id", CoreQueries.wideCols)
-    var st: StreamingBucketedMerge.State = null
-    // rep-honest: each rep drops and re-persists the identical state
-    val initT = timeMed(reps, "scdlsm_init") {
-      spark.sql("DROP TABLE IF EXISTS scd_lsm_bench")
-      st = StreamingBucketedMerge.init(
-        s1, "scd_lsm_bench", "id", CoreQueries.wideCols, buckets)
-    }
-    val b = CoreQueries.wideSnap(spark, sfDir, perturb = true,
-      col("o_orderdate") >= lit("1996-01-01").cast("timestamp"))
-    def drift(base: org.apache.spark.sql.DataFrame, mod: Long) =
-      base.withColumn("w06",
-        when(pmod(col("id"), lit(mod)) === 0, concat(col("w06"), lit(s"#m$mod")))
-          .otherwise(col("w06")))
-    val batches = Seq(
-      ("1998-06-01", b),
-      ("1998-07-01", drift(b, 11L)),
-      ("1998-08-01", drift(drift(b, 11L), 13L)))
-    val admitted = batches.map { case (d, snapDf) =>
-      val slice = snapDf.localCheckpoint()
-      val before = spark.table("scd_lsm_bench").count()
-      val t0 = System.nanoTime()
-      st = StreamingBucketedMerge.applyBatch(spark, st, slice, d)
-      val t = (System.nanoTime() - t0) / 1e9
-      (t, (spark.table("scd_lsm_bench").count() - before).toDouble)
-    }
-    val admitTimes = admitted.map(_._1)
-    // steady-metric reps must not carry the bootstrap-sized first batch
-    // (a phantom high-variance rep the adjudication workflow would
-    // misread as box noise); the first batch has its own row + rep
-    repsLog("scdlsm_admit_first") = Seq(admitTimes.head)
-    repsLog("scdlsm_admit_batch") = admitTimes.tail
-    val stateRows = StreamingBucketedMerge.currentState(spark, st)
-      .count().toDouble
-    def lsmFiles() =
-      graft.plans.Layout.bucketedDataFiles(spark, "scd_lsm_bench").toDouble
-    val filesFragmented = lsmFiles()
-    // the full-rewrite alternative, apples-to-apples: the SAME next
-    // batch persisted mergeSink-style — merge against the current
-    // state, then shuffle + per-bucket sort + write of the WHOLE merged
-    // state (rep-honest: every rep rewrites the identical merged set)
-    val altBatch = drift(drift(drift(b, 11L), 13L), 17L).localCheckpoint()
-    val rewriteT = timeMed(reps, "scdlsm_rewrite_alternative") {
-      spark.sql("DROP TABLE IF EXISTS scd_lsm_alt")
-      graft.plans.Layout.writeBucketedSorted(
-        ScdMerge.applySnapshot(
-          StreamingBucketedMerge.currentState(spark, st), altBatch,
-          "1998-09-01", "id", CoreQueries.wideCols)
-          .withColumn("_gen", lit(0L)),
-        "scd_lsm_alt", Seq("id"), buckets)
-    }
-    spark.sql("DROP TABLE IF EXISTS scd_lsm_alt")
-    // resolving compaction (rep 1 reads the fragmented layout; later
-    // reps rewrite the already-resolved set — the index_compact
-    // rep-honesty note applies)
-    val compactT = timeMed(reps, "scdlsm_compact") {
-      st = StreamingBucketedMerge.compact(spark, st)
-    }
-    val filesCompacted = lsmFiles()
-    spark.sql("DROP TABLE IF EXISTS scd_lsm_bench")
-    // TIMING rows share the (dominant at this sf) merge term between
-    // the two persistence strategies; the STRUCTURAL rows carry the
-    // scale argument — a steady batch WRITES rows_appended_steady rows
-    // where the rewrite strategy writes state_rows, and at 100 TB the
-    // state write is the bill (the wall-clock crossover is where
-    // |state| outgrows what the merge itself costs).
-    Seq(
-      "scdlsm_init" -> initT,
-      "scdlsm_admit_first" -> admitTimes.head,
-      "scdlsm_admit_batch" -> median(admitTimes.tail),
-      "scdlsm_rows_appended_first" -> admitted.head._2,
-      "scdlsm_rows_appended_steady" -> median(admitted.tail.map(_._2)),
-      "scdlsm_state_rows" -> stateRows,
-      "scdlsm_files_fragmented" -> filesFragmented,
-      "scdlsm_rewrite_alternative" -> rewriteT,
-      "scdlsm_compact" -> compactT,
-      "scdlsm_files_compacted" -> filesCompacted)
-  }
-
-  /** The LSM read-amplification SAWTOOTH, measured (r12 VERDICT #2):
-    * an index base plus a delta log that grows one batch at a time,
-    * [[graft.streaming.CompactionPolicy]](maxLogBatches = 3) deciding
-    * when to fold — exactly the decision
-    * [[graft.streaming.StreamingPostings.sinkCompacting]] makes per
-    * micro-batch, driven here in batch form so each point is a clean
-    * median. Emitted rows are the curve itself: `lsm_view_bN` (resolve
-    * cost with N log segments, rising), `lsm_compact_bN` (the fold bill
-    * at each trigger), `lsm_view_bN_post` (resolve cost right after the fold,
-    * back near flat) — two full teeth over six batches, so the
-    * compaction points and the recovery are visible in one JSON
-    * object. Base and every delta are checkpointed: each timed view is
-    * the latest-per-term resolve over materialized segments, the cost
-    * readers actually pay between compactions, not re-derivation.
-    *
-    * Two constructions were tried and only this one shows the physics:
-    * batches must RE-TOUCH the index's terms. Disjoint-term batches
-    * (fresh docs, fresh vocabulary — the first draft) add one row per
-    * NEW term to the log, so base ∪ log holds ~one row per term no
-    * matter how many segments pile up, and the fold collapses nothing:
-    * view cost tracks total index size, flat across compactions.
-    * Amplification is the MULTI-ROW-PER-TERM resolve — a feed
-    * re-mentioning hot terms every batch — so each batch here is the
-    * same corpus content under fresh doc_ids (term space 16×-amplified
-    * by prefix replication, so the multi-row resolve dwarfs the fixed
-    * job overhead): at 3 segments every term carries 4 rows
-    * (base + 3), post-fold it carries 1, and the tooth is real. */
-  def lsmBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import org.apache.spark.sql.DataFrame
-    import graft.extensions.Postings
-    import graft.streaming.{CompactionPolicy, StreamingPostings}
-    val base0 = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
-    val corpus = (0 until 16).map(i => base0.select(
-        (col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\S+)", s"l${i}_$$1").as("text")))
-      .reduce(_ union _)
-    val pairs = Postings.termPairs(corpus).localCheckpoint()
-    // batch b = the same term pairs under fresh doc_ids (appendDelta's
-    // new-ids contract), i.e. a feed that re-touches every term
-    def batchPairs(b: Int): DataFrame = pairs.select(
-      (col("doc_id") + lit(b.toLong * 100000000L)).as("doc_id"), col("term"))
-    var base = Postings.buildFromPairs(pairs).localCheckpoint()
-    var deltas = Vector.empty[DataFrame]
-    def log: DataFrame =
-      if (deltas.isEmpty) base.withColumn("batch_id", lit(0L)).limit(0)
-      else deltas.reduce(_ unionByName _)
-    val policy = CompactionPolicy(maxLogBatches = 3, maxLogToBaseRatio = 0)
-    val rows = Seq.newBuilder[(String, Double)]
-    (1 to 6).foreach { b =>
-      val delta = Postings
-        .appendDeltaFromPairs(StreamingPostings.view(base, log), batchPairs(b))
-        .withColumn("batch_id", lit(b.toLong))
-        .localCheckpoint()
-      deltas :+= delta
-      // the noise-free form of the sawtooth: rows entering the resolve
-      // (base + every log segment — the read amplification itself,
-      // exact; on a 32-core box the TIMED rows sit on a ~0.3 s fixed
-      // job floor that a few million skinny rows barely move, so the
-      // row curve is the honest scale signal and the time curve the
-      // honest absolute cost)
-      rows += (s"lsm_resolve_rows_b$b" ->
-        (base.count() + log.count()).toDouble)
-      rows += (s"lsm_view_b$b" -> timeMed(reps, s"lsm_view_b$b") {
-        StreamingPostings.view(base, log)
-          .write.format("noop").mode("overwrite").save()
-      })
-      if (policy.shouldCompact(deltas.size.toLong, log.count(), base.count())) {
-        rows += (s"lsm_compact_b$b" -> timeMed(reps, s"lsm_compact_b$b") {
-          StreamingPostings.compact(base, log)
-            .write.format("noop").mode("overwrite").save()
-        })
-        base = StreamingPostings.compact(base, log).localCheckpoint()
-        deltas = Vector.empty
-        rows += (s"lsm_resolve_rows_b${b}_post" ->
-          (base.count() + log.count()).toDouble)
-        rows += (s"lsm_view_b${b}_post" -> timeMed(reps, s"lsm_view_b${b}_post") {
-          StreamingPostings.view(base, log)
-            .write.format("noop").mode("overwrite").save()
-        })
-      }
-    }
-    // r15 VERDICT #5: the compact leg's zero-parquet-scan contract as an
-    // ARTIFACT row (the spec pins it; this makes the round artifact
-    // self-evident): 0 = every leg cuts from the one checkpointed
-    // termPairs frame; any parquet scan means a leg re-derived its
-    // pairs from the corpus (the r12 4-scan shape).
-    rows += ("lsm_compact_leg_scans" -> {
-      val p = SparkEntry.queries("q_postings_compact")(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      "Scan parquet".r.findAllIn(p).size.toDouble
-    })
-    rows.result()
-  }
-
-  /** The live-corpus composition (EndToEndSpec / StreamingPipelineSpec)
-    * measured end-to-end at the bench SF, so the COMPOSED pipeline's
-    * cost is tracked per round, not just its pieces:
-    *
-    *   snapshot ingest → SCD merge (two dated snapshots of the document
-    *   corpus) → quality gates + dedup + split over the live state →
-    *   persisted serving artifacts (bucketed LSH band index + vocab
-    *   profile) → streaming admission (two MemoryStream micro-batches
-    *   through the gate into BOTH always-on monitors: near-dup
-    *   candidates and per-source drift).
-    *
-    * Each phase is timed separately; counts are emitted so a phase that
-    * silently drops everything (and then benches an empty tail) is
-    * visible in the JSON rather than reading as a speedup. */
-  def capstoneBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.extensions.{CorpusPipeline, Dedup, TextAnalysis}
-    import graft.merge.ScdMerge
-    import graft.streaming.{DriftMonitor, StreamingDedup}
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val docs = Tables.table(spark, sfDir, "documents")
-      .select("doc_id", "text", "source", "n_chars").localCheckpoint()
-    val tracked = Seq("text", "source", "n_chars") // n_chars rides along for the quality gate
-
-    // 1. two weekly snapshots: ~6% of keys vanish, ~10% change content,
-    // ~5% are new — the reference's scrape-diff regime at corpus scale
-    val snap2 = docs
-      .filter(pmod(col("doc_id"), lit(17)) =!= 0)
-      .withColumn("text", when(pmod(col("doc_id"), lit(10)) === 0,
-        concat(col("text"), lit(" refreshed revision marker")))
-        .otherwise(col("text")))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(20)) === 3)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-          col("source"), col("n_chars")))
-    var state: DataFrame = null
-    val mergeT = timeMed(reps, "merge") {
-      val s1 = ScdMerge.applySnapshot(
-        ScdMerge.emptyState(docs), docs, "2024-01-01", "doc_id", tracked)
-      state = ScdMerge.applySnapshot(s1, snap2, "2024-01-08", "doc_id", tracked)
-        .localCheckpoint()
-    }
-    val live = state.filter(col("removed_at").isNull)
-      .select("doc_id", "text", "source", "n_chars")
-
-    // 2. quality gates → exact dedup → near-dup removal → split
-    var cleaned: DataFrame = null
-    val gatesT = timeMed(reps, "gates") {
-      cleaned = live
-        .join(CorpusPipeline.clean(live).select("doc_id"), "doc_id")
-        .localCheckpoint()
-    }
-    // the same gates leg with the containment survivor policy ENGAGED
-    // (tau matches q_dedup_containment's 0.97 regime): near-dup pairs
-    // drop the contained side — the quote, the re-post — instead of
-    // blindly dropping b. Priced beside the default leg per round, and
-    // the policy delta published: containment_dropped counts docs the
-    // default (resemblance drop-b) rule KEPT that the containment rule
-    // drops — the quote-over-container mistakes the gate exists to fix.
-    var cleanedCont: DataFrame = null
-    val gatesContT = timeMed(reps, "gates_containment") {
-      cleanedCont = live
-        .join(CorpusPipeline.clean(live, containmentTau = Some(0.97))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint()
-    }
-    val contDropped = cleaned.select("doc_id")
-      .exceptAll(cleanedCont.select("doc_id")).count()
-    // the ship-it artifact end-to-end (q_training_set's chain: leakage
-    // -safe assignment ∘ exact-substring scrub ∘ fixed-budget packing)
-    // priced as one capstone phase, with its shipped-row count so a
-    // policy change that silently drops the corpus reads as what it is
-    val fullDocs = Tables.table(spark, sfDir, "documents")
-    var trainingSet: DataFrame = null
-    val trainingSetT = timeMed(reps, "training_set") {
-      trainingSet = graft.extensions.TrainingSet.compose(fullDocs)
-        .localCheckpoint()
-    }
-    val trainingRows = trainingSet.count()
-    // the artifact WITH payload and the privacy leg engaged — what a
-    // shard writer actually serializes (manifest join-back + PII
-    // column scrub on top of the compose chain above)
-    val trainingSetTextT = timeMed(reps, "training_set_text_pii") {
-      graft.extensions.TrainingSet.composeText(fullDocs, piiScrub = true)
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // 3. serving artifacts the admission loop probes (drop-before-write
-    // keeps the repped body idempotent)
-    var profile: DataFrame = null
-    val buildT = timeMed(reps, "artifact_build") {
-      spark.sql("DROP TABLE IF EXISTS capstone_band_idx")
-      graft.plans.Layout.writeBucketed(
-        Dedup.bandBuckets(
-          Dedup.shingles(cleaned.select("doc_id", "text"), share = false),
-          share = false),
-        "capstone_band_idx", Seq("band", "bkey"), 8)
-      profile = TextAnalysis.vocabProfile(cleaned).localCheckpoint()
-    }
-
-    // 4. streaming admission: one arriving stream, both monitors.
-    // MemoryStream feeds from driver memory, so the arriving slice is
-    // collected — capped (orderBy + limit: deterministic) so the
-    // driver's share stays bounded at ANY bench SF, not just sf0.1
-    // (4000 docs/batch; the 1/25 slice stays under the cap through
-    // sf2.0, so bench numbers are unchanged where they're comparable)
-    val arriving = (1 to 2).flatMap { b =>
-      docs.filter(pmod(col("doc_id"), lit(25)) === lit(b - 1))
-        .select((col("doc_id") + lit(20000000L)).as("doc_id"), col("text"),
-          col("source"))
-        .orderBy("doc_id").limit(4000)
-        .as[(Long, String, String)].collect().toSeq :+
-        ((30000000L + b, "zz", "junk")) // gated out (< 4 tokens)
-    }
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    var candidatePairs = 0L
-    var driftRows = 0L
-    var admContHits = 0L
-    // one rep = a full stream lifecycle (fresh MemoryStream + queries);
-    // counters reset per rep so the reported counts are one pass's
-    // `containmentIdx`: when set (the corpus shingle frame), each batch
-    // additionally pays the containment-direction probe — the third
-    // admission monitor — so the triple-monitor pass is priced as its
-    // own row and `admission_2_batches` keeps its round-9 semantics
-    // (dedup candidates + drift only), round-over-round comparable.
-    def admissionPass(containmentIdx: Option[DataFrame] = None): Double = {
-      candidatePairs = 0L; driftRows = 0L; admContHits = 0L
-      val input = MemoryStream[(Long, String, String)]
-      val gated = input.toDF().toDF("doc_id", "text", "source")
-        .filter(graft.extensions.TextTokens.count >= 4)
-      val q1 = StreamingDedup.sink(spark.table("capstone_band_idx"),
-        gated.select("doc_id", "text"),
-        (pairs, _) => { candidatePairs += pairs.count() }).start()
-      val q2 = DriftMonitor.sink(gated, profile,
-        (drift, _) => { driftRows += drift.count() }).start()
-      def probeContainment(batch: Seq[(Long, String, String)]): Unit =
-        containmentIdx.foreach { corpusSh =>
-          val bdf = spark.createDataset(batch)(
-              org.apache.spark.sql.Encoders.product[(Long, String, String)])
-            .toDF("doc_id", "text", "source").select("doc_id", "text")
-          admContHits += Dedup.containmentProbe(
-              corpusSh, spark.table("capstone_band_idx"), bdf)
-            .filter(col("cont_corpus") >= 0.97 || col("cont_new") >= 0.97)
-            .count()
-        }
-      try {
-        time {
-          val (h, t) = arriving.splitAt(arriving.size / 2)
-          input.addData(h)
-          q1.processAllAvailable(); q2.processAllAvailable()
-          probeContainment(h)
-          input.addData(t)
-          q1.processAllAvailable(); q2.processAllAvailable()
-          probeContainment(t)
-        }
-      } finally { q1.stop(); q2.stop() }
-    }
-    // containment-aware admission, priced: the same arriving slice
-    // scored by the incremental containment probe (batch-mode — the
-    // plan a foreachBatch admission runs), so the newest survivor
-    // policy's per-batch cost is tracked per round like the
-    // resemblance probe's. cont_hits counts candidate rows with a
-    // decisive direction (either side >= 0.97).
-    var contHits = 0L
-    var sketchMergeT = 0.0
-    var admitContT = 0.0
-    val (admitT, contProbeT) = try {
-      val a = {
-        val xs = (1 to reps).map(_ => admissionPass())
-        repsLog("admission_2_batches") = xs
-        median(xs)
-      }
-      val corpusSh = Dedup.shingles(cleaned.select("doc_id", "text"),
-        share = false).localCheckpoint()
-      // like-for-like split (r10 VERDICT #2): the plain row above keeps
-      // its r9 semantics; the containment-engaged composition is its own
-      // row so the policy's per-batch cost is priced, not folded in
-      admitContT = {
-        val xs = (1 to reps).map(_ => admissionPass(Some(corpusSh)))
-        repsLog("admission_2_batches_containment") = xs
-        median(xs)
-      }
-      val oneBatch = spark.createDataset(arriving.take(4000))(
-        org.apache.spark.sql.Encoders.product[(Long, String, String)])
-        .toDF("doc_id", "text", "source").select("doc_id", "text")
-        .localCheckpoint()
-      val c = timeMed(reps, "containment_probe_batch") {
-        contHits = Dedup.containmentProbe(
-            corpusSh, spark.table("capstone_band_idx"), oneBatch)
-          .filter(col("cont_corpus") >= 0.97 || col("cont_new") >= 0.97)
-          .count()
-      }
-      // 4b. always-on corpus profile: the per-batch sketch-maintenance
-      // cost — the cleaned corpus' CMS grid merged with one arriving
-      // batch's (StreamingSketch.mergeCms, d·w-bounded state) — so the
-      // profile leg the counting sketches add to the live pipeline is
-      // priced per round like every other admission-side monitor
-      val corpusGrid = graft.extensions.Sketches.cmsBuild(
-        graft.extensions.Sketches.tokens(cleaned)).localCheckpoint()
-      sketchMergeT = timeMed(reps, "sketch_merge_batch") {
-        graft.streaming.StreamingSketch.mergeCms(corpusGrid,
-          graft.extensions.Sketches.cmsBuild(
-            graft.extensions.Sketches.tokens(oneBatch)))
-          .write.format("noop").mode("overwrite").save()
-      }
-      (a, c)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS capstone_band_idx")
-    }
-
-    // 5. the embedding leg of the same pipeline — IVF train over the
-    // corpus embeddings, then SemDeDup admission within the FITTED
-    // cells (the composed scale path: cell = k-means assignment, not a
-    // testdata label) — so the semantic-dedup half gets the same
-    // per-round cost tracking as the text half. keep_ratio is emitted
-    // so a run that silently drops everything reads as what it is.
-    import graft.extensions.{KMeans, Similarity}
-    import graft.streaming.StreamingSemDedup
-    val emb = Tables.table(spark, sfDir, "embeddings").localCheckpoint()
-    var cents: DataFrame = null
-    val kmFitT = timeMed(reps, "emb_kmeans_fit") { cents = KMeans.fit(emb, k = 8, iters = 3) }
-    var semKept = 0L
-    var semVecs = 0L
-    var semKeptCapped = 0L
-    val cells = KMeans.assign(emb, cents)
-      .select(col("vec_id"), col("cell_id").cast("long").as("label"),
-        col("e").as("embedding"))
-    // tau matches q_semdedup's oracle regime (0.3): at the testdata's
-    // within-cluster cosine spread a 0.7 tau drops nothing, and a leg
-    // that always reports keep_ratio 1.0 can't flag a regression
-    val semT = timeMed(reps, "emb_semdedup") {
-      val sums = Similarity.semDedup(cells, tau = 0.3)
-        .agg(sum("n_vecs"), sum("n_kept")).head()
-      semVecs = sums.getLong(0)
-      semKept = sums.getLong(1)
-    }
-    // the cell-size guard's accuracy contract, measured: at cap 64 the
-    // fitted cells (~|corpus|/8 vectors each at bench SF) genuinely
-    // sub-block, and cross-block pairs go unseen — the keep-ratio delta
-    // vs the uncapped run IS the approximation cost, priced per round
-    // the way MinHash/winnowing/ANN price theirs
-    val semCapT = timeMed(reps, "emb_semdedup_cap64") {
-      semKeptCapped = Similarity.semDedup(cells, tau = 0.3, maxCellSize = 64)
-        .agg(sum("n_kept")).head().getLong(0)
-    }
-
-    // 6. streaming admission, embedding side: the per-batch cost of
-    // probing arriving vectors against the persisted survivor index
-    // (StreamingSemDedup — batch-mode execution of the exact plan each
-    // micro-batch runs, the streamingBench pricing discipline). Index
-    // build priced separately; two 1/25 batches probed per rep.
-    var semAdmitted = 0L
-    var semIdx: DataFrame = null
-    val semIdxBuildT = timeMed(reps, "emb_admit_index_build") {
-      semIdx = StreamingSemDedup.survivorIndex(emb, cents, tau = 0.3)
-        .localCheckpoint()
-    }
-    val semAdmitT = timeMed(reps, "emb_admit_2_batches") {
-      semAdmitted = 0L
-      (1 to 2).foreach { b =>
-        val batch = emb.filter(pmod(col("vec_id"), lit(25)) === lit(b - 1))
-          .select((col("vec_id") + lit(40000000L)).as("vec_id"), col("embedding"))
-        val assigned = StreamingSemDedup.assignWithNorm(batch, cents)
-        semAdmitted += StreamingSemDedup.admitBatch(semIdx, assigned, tau = 0.3)
-          .count()
-      }
-    }
-
-    // 7. the privacy pass over the live corpus — priced with every
-    // class ENGAGED (synthText plants one email/phone/IP/card per doc,
-    // Luhn-valid on even ids), so the row bills the replace branches,
-    // not just the never-matching regex scans a clean corpus would pay
-    val piiT = timeMed(reps, "pii_scrub") {
-      graft.extensions.Pii.scrub(
-          live.withColumn("text", graft.extensions.Pii.synthText))
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // 8. the forget pass (r11): delete propagation through the packed
-    // manifest — manifest-rows-only repack cost per round, plus the
-    // bounded-rewrite bill (rewritten/total chunks) so the
-    // "unlearning is a suffix rewrite, not a full repack" claim is a
-    // measured number, not a scaladoc sentence
-    val delManifest = graft.extensions.Packing
-      .packChunks(fullDocs, budget = 64).localCheckpoint()
-    val dels = delManifest.select("doc_id")
-      .filter(col("doc_id") % 37 === 0).localCheckpoint()
-    val delRepackT = timeMed(reps, "delete_repack") {
-      graft.extensions.Packing.applyDeletes(delManifest, dels, budget = 64)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val delBill = graft.extensions.Packing
-      .repackCost(delManifest, dels, budget = 64)
-      .agg(sum("chunks_rewritten"), sum("chunks_before")).head()
-
-    Seq(
-      "merge" -> mergeT,
-      "gates" -> gatesT,
-      "pii_scrub" -> piiT,
-      "delete_repack" -> delRepackT,
-      "delete_chunks_rewritten" -> delBill.getLong(0).toDouble,
-      "delete_chunks_total" -> delBill.getLong(1).toDouble,
-      "gates_containment" -> gatesContT,
-      "containment_dropped" -> contDropped.toDouble,
-      "training_set" -> trainingSetT,
-      "training_set_rows" -> trainingRows.toDouble,
-      "training_set_text_pii" -> trainingSetTextT,
-      "artifact_build" -> buildT,
-      "admission_2_batches" -> admitT,
-      "admission_2_batches_containment" -> admitContT,
-      "admission_containment_hits" -> admContHits.toDouble,
-      "containment_probe_batch" -> contProbeT,
-      "containment_hits" -> contHits.toDouble,
-      "sketch_merge_batch" -> sketchMergeT,
-      "live_docs" -> live.count().toDouble,
-      "clean_docs" -> cleaned.count().toDouble,
-      "clean_docs_containment" -> cleanedCont.count().toDouble,
-      "candidate_pairs" -> candidatePairs.toDouble,
-      "drift_rows" -> driftRows.toDouble,
-      "emb_kmeans_fit" -> kmFitT,
-      "emb_semdedup" -> semT,
-      "emb_semdedup_cap64" -> semCapT,
-      "emb_vecs" -> semVecs.toDouble,
-      "emb_keep_ratio" ->
-        (if (semVecs > 0) semKept.toDouble / semVecs else 0.0),
-      "emb_keep_ratio_cap64" ->
-        (if (semVecs > 0) semKeptCapped.toDouble / semVecs else 0.0),
-      "emb_admit_index_build" -> semIdxBuildT,
-      "emb_admit_2_batches" -> semAdmitT,
-      "emb_admitted" -> semAdmitted.toDouble)
-  }
-
-  /** Times layout-aware variants against their flat-layout twins.
-    * Returns (metric name, seconds-or-count). */
-  def layoutBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout").toString
-    val orders = Tables.table(spark, sfDir, "orders")
-    val customer = Tables.table(spark, sfDir, "customer")
-
-    val setup = time {
-      graft.plans.Layout.writeYearPartitioned(
-        orders, "o_orderdate", s"$tmp/orders_part", Seq("o_orderkey"))
-      graft.plans.Layout.writeBucketed(orders, "orders_bkt", "o_custkey", 8)
-      graft.plans.Layout.writeBucketed(customer, "customer_bkt", "c_custkey", 8)
-    }
-    val part = spark.read.parquet(s"$tmp/orders_part")
-
-    // one-year slice: on the partitioned layout this touches ONE
-    // directory; on the flat layout every file is read and filtered
-    def yearAgg(df: org.apache.spark.sql.DataFrame, yearCol: org.apache.spark.sql.Column) =
-      df.filter(yearCol === 1998)
-        .groupBy(yearCol.as("yr")).agg(count(lit(1)).as("n")).count()
-
-    val flatScan = timeMed(reps, "scan_flat")(yearAgg(orders, year(col("o_orderdate"))))
-    val prunedScan = timeMed(reps, "scan_pruned")(yearAgg(part, col("year")))
-    // evidence, not vibes: how many files the pruned plan actually reads
-    // (inputFiles reports the whole relation; prunedFiles consults the
-    // executed plan's PartitionFilters)
-    val filesTotal = part.inputFiles.length
-    val filesRead = graft.plans.Layout.prunedFiles(spark, s"$tmp/orders_part", 1998).size
-
-    // bucketed-join demo: broadcast disabled so both variants run the
-    // sort-merge path a 100 TB dim would — the bucketed twin plans no
-    // Exchange on either side (pinned in LayoutSkewSpec; timed here)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val shuffledJoin = timeMed(reps, "join_shuffled") {
-      orders.join(customer, col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment").agg(count(lit(1))).count()
-    }
-    val bucketedJoin = timeMed(reps, "join_bucketed") {
-      spark.table("orders_bkt")
-        .join(spark.table("customer_bkt"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment").agg(count(lit(1))).count()
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    spark.sql("DROP TABLE IF EXISTS orders_bkt")
-    spark.sql("DROP TABLE IF EXISTS customer_bkt")
-
-    // sorted-write demo (the "secondary index" substitute): identical
-    // row-group size, with/without clustering on the hot key; footer
-    // stats give the ground-truth row-group hit rate for `key = v`
-    val probeKey = orders.agg(max(col("o_custkey")) / 2).head().getDouble(0).toLong
-    val sortedSetup = time {
-      graft.plans.Layout.writeSorted(orders, s"$tmp/orders_sorted", "o_custkey")
-      graft.plans.Layout.writeUnsorted(orders, s"$tmp/orders_unsorted")
-    }
-    val (rgTotalSorted, rgHitSorted) =
-      graft.plans.Layout.rowGroupStats(spark, s"$tmp/orders_sorted", "o_custkey", probeKey)
-    val (rgTotalUnsorted, rgHitUnsorted) =
-      graft.plans.Layout.rowGroupStats(spark, s"$tmp/orders_unsorted", "o_custkey", probeKey)
-    def keyScan(path: String, name: String): Double = {
-      val df = spark.read.parquet(path)
-      timeMed(reps, name)(df.filter(col("o_custkey") === probeKey).agg(count(lit(1))).count())
-    }
-    val scanSorted = keyScan(s"$tmp/orders_sorted", "keyscan_sorted")
-    val scanUnsorted = keyScan(s"$tmp/orders_unsorted", "keyscan_unsorted")
-
-    // z-order demo — the TWO-predicate layout lever: the A-sorted
-    // layout skips perfectly on its sort key and not at all on an
-    // uncorrelated second key (every row group spans the full B range);
-    // the Morton-interleaved twin trades a few groups of A-locality for
-    // locality on BOTH. Footer row-group stats are the evidence, same
-    // ground-truth discipline as the sorted/unsorted rows above.
-    val ordersPriced = orders.withColumn("_price_l",
-      col("o_totalprice").cast("long"))
-    val probeB = orders
-      .agg((max(col("o_totalprice")) / 2).cast("long")).head().getLong(0)
-    val zorderSetup = time {
-      graft.plans.Layout.writeSorted(ordersPriced, s"$tmp/orders_sorted2", "o_custkey")
-      graft.plans.Layout.writeZOrdered(
-        ordersPriced, s"$tmp/orders_z", "o_custkey", "_price_l")
-    }
-    val (rgTotS2, rgHitS2A) = graft.plans.Layout.rowGroupStats(
-      spark, s"$tmp/orders_sorted2", "o_custkey", probeKey)
-    val (_, rgHitS2B) = graft.plans.Layout.rowGroupStats(
-      spark, s"$tmp/orders_sorted2", "_price_l", probeB)
-    val (rgTotZ, rgHitZA) = graft.plans.Layout.rowGroupStats(
-      spark, s"$tmp/orders_z", "o_custkey", probeKey)
-    val (_, rgHitZB) = graft.plans.Layout.rowGroupStats(
-      spark, s"$tmp/orders_z", "_price_l", probeB)
-
-    // storage-codec economics — the other big 100 TB layout lever
-    // (storage cost vs decode CPU), measured: the same table written
-    // under snappy (Spark's default; fast, larger) and zstd (smaller,
-    // slightly more decode CPU), with on-disk bytes from the
-    // filesystem and the same full-scan aggregate timed on each
-    def dirBytes(p: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    }
-    val lineitem = Tables.table(spark, sfDir, "lineitem")
-    val codecRows = Seq("snappy", "zstd").flatMap { codec =>
-      val p = s"$tmp/lineitem_$codec"
-      lineitem.write.option("compression", codec).mode("overwrite").parquet(p)
-      val scanT = timeMed(reps, s"codec_${codec}_scan")(
-        spark.read.parquet(p)
-          .agg(sum(col("l_quantity")), count(lit(1))).collect())
-      Seq(s"codec_${codec}_bytes" -> dirBytes(p).toDouble,
-        s"codec_${codec}_scan" -> scanT)
-    }
-
-    Seq(
-      "setup_write" -> setup,
-      "scan_flat" -> flatScan,
-      "scan_pruned" -> prunedScan,
-      "files_total" -> filesTotal.toDouble,
-      "files_read_pruned" -> filesRead.toDouble,
-      "join_shuffled" -> shuffledJoin,
-      "join_bucketed" -> bucketedJoin,
-      "sorted_setup_write" -> sortedSetup,
-      "rowgroups_total_sorted" -> rgTotalSorted.toDouble,
-      "rowgroups_hit_sorted" -> rgHitSorted.toDouble,
-      "rowgroups_total_unsorted" -> rgTotalUnsorted.toDouble,
-      "rowgroups_hit_unsorted" -> rgHitUnsorted.toDouble,
-      "keyscan_sorted" -> scanSorted,
-      "keyscan_unsorted" -> scanUnsorted,
-      "zorder_setup_write" -> zorderSetup,
-      "rowgroups_total_sorted2" -> rgTotS2.toDouble,
-      "rowgroups_hit_sorted_keyA" -> rgHitS2A.toDouble,
-      "rowgroups_hit_sorted_keyB" -> rgHitS2B.toDouble,
-      "rowgroups_total_zorder" -> rgTotZ.toDouble,
-      "rowgroups_hit_zorder_keyA" -> rgHitZA.toDouble,
-      "rowgroups_hit_zorder_keyB" -> rgHitZB.toDouble) ++ codecRows
-  }
-
-  /** Continuous scale-lever measurement: the ngram-Jaccard df levers
-    * {plain, maxDf cap, df=1 prune, dictionary encode} timed end-to-end
-    * on a namespace-shifted Zipf-tail corpus (10× the sfDir documents
-    * with 60 per-doc unique filler tokens ≈ 50k docs at sf0.1 — the
-    * regime where the singleton shingle tail dominates the inverted
-    * index; corpus construction per NgramPruneCrossoverBench, which
-    * located the crossover). Frame sharing is disabled so each lever
-    * pays its own full pipeline — these are fresh-corpus numbers, not
-    * lever-delta numbers. */
-  def scaleBench(spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    val base = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
-    val k = 10
-    val tail = 60
-    val docs = (0 until k).map(i => base.select(
-        (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1").as("text")))
-      .reduce(_ union _)
-      .select(col("doc_id"),
-        concat(col("text"), lit(" "),
-          concat_ws(" ", transform(sequence(lit(1), lit(tail)),
-            j => concat(lit("u"), col("doc_id"), lit("_"), j)))).as("text"))
-      .localCheckpoint(true)
-    val nDocs = docs.count().toDouble
-    val prevShare = spark.conf.getOption("spark.graft.dedup.shareFrames")
-    spark.conf.set("spark.graft.dedup.shareFrames", "false")
-    try {
-      // the postings index as it would live in production: term-SORTED
-      // parquet (Layout.writeSorted), so the probe's pushed-down In
-      // predicate prunes row groups by footer stats. Built eagerly here
-      // — index construction is billed by the postings_build row, the
-      // probe rows pay only the lookup, as a real deployment would
-      val postingsDir = java.nio.file.Files
-        .createTempDirectory("graft-postings").toString
-      graft.plans.Layout.writeSorted(
-        graft.extensions.Postings.build(docs), s"$postingsDir/idx", "term",
-        files = 8)
-      val postingsIdx = spark.read.parquet(s"$postingsDir/idx")
-      // 8 probe phrases hash-spread across the term space (min per
-      // xxhash64 bucket), not the 8 alphabetically-first — adjacent
-      // terms would all land in one sorted row group and flatter the
-      // pruning story
-      val postingsPhrases = postingsIdx
-        .filter(col("postings").isNotNull)
-        .groupBy(pmod(xxhash64(col("term")), lit(8)).as("b"))
-        .agg(min("term").as("term"))
-        .collect().map(_.getString(1)).toSeq
-      val levers = Seq(
-        "docs" -> nDocs,
-        "ngram_plain" -> timeMed(reps, "ngram_plain")(
-          graft.extensions.Dedup.ngramJaccard(docs, 0.3).count()),
-        "ngram_maxdf" -> timeMed(reps, "ngram_maxdf")(
-          graft.extensions.Dedup.ngramJaccard(docs, 0.3, maxDf = Some(50)).count()),
-        "ngram_pruned" -> timeMed(reps, "ngram_pruned")(
-          graft.extensions.Dedup.ngramJaccard(docs, 0.3,
-            dropUniqueShingles = true).count()),
-        "ngram_encoded" -> timeMed(reps, "ngram_encoded")(
-          graft.extensions.Dedup.ngramJaccard(docs, 0.3,
-            encodeShingles = true).count()),
-        // exact-substring window-key lever: identical span geometry
-        // (ExactSubstrSpec pins hashed ≡ raw), but the df/owner shuffle
-        // and the join-back move xxhash64 longs instead of raw 6-token
-        // strings. Times AND the measured shuffle-bytes drop — the
-        // scaladoc's ~5× claim as plan-metric evidence, per round
-        "substr_raw" -> timeMed(reps, "substr_raw")(
-          graft.extensions.TextAnalysis.exactSubstrSpans(docs)
-            .write.format("noop").mode("overwrite").save()),
-        "substr_hashed" -> timeMed(reps, "substr_hashed")(
-          graft.extensions.TextAnalysis.exactSubstrSpans(docs, hashWindows = true)
-            .write.format("noop").mode("overwrite").save()),
-        "substr_shuffle_mb_raw" ->
-          shuffleBytesOf(graft.extensions.TextAnalysis.exactSubstrSpans(docs)) / 1e6,
-        "substr_shuffle_mb_hashed" ->
-          shuffleBytesOf(graft.extensions.TextAnalysis
-            .exactSubstrSpans(docs, hashWindows = true)) / 1e6,
-        // winnowing's claim: ~2/(w+1) of the full k-gram index feeds the
-        // candidate self-join — measure the ratio and the pair-join time
-        // on the same corpus each round rather than asserting it
-        "winnow_index_ratio" -> {
-          // same gram definition on both sides (Winnowing.grams, not the
-          // raw case-sensitive Dedup.shingles) — apples to apples
-          val full = graft.extensions.Winnowing.grams(docs).count().toDouble
-          val winnowed = graft.extensions.Winnowing
-            .fingerprints(docs).agg(sum("n_fps")).head().getLong(0).toDouble
-          winnowed / full
-        },
-        "winnow_pairs" -> timeMed(reps, "winnow_pairs")(
-          graft.extensions.Winnowing.sharedFingerprintPairs(docs).count()),
-        // posting-list economics on the Zipf corpus (unique filler
-        // tails ⇒ a term space in the corpus-size class, df almost
-        // always 1): price the capped index build, then a phrase
-        // lookup through the index (broadcast probe over the
-        // materialized lists) against the scan path it replaces
-        // (re-explode every doc's grams per query) — the index's
-        // whole reason to exist, measured each round
-        "postings_build" -> timeMed(reps, "postings_build")(
-          graft.extensions.Postings.build(docs)
-            .write.format("noop").mode("overwrite").save()),
-        "postings_probe" -> timeMed(reps, "postings_probe")(
-          graft.extensions.Postings.probe(postingsIdx, postingsPhrases)
-            .count()),
-        "postings_scan_probe" -> timeMed(reps, "postings_scan_probe")(
-          graft.extensions.Postings.scanProbe(docs, postingsPhrases)
-            .count()),
-        // incremental maintenance vs the rebuild it replaces: a 1/25
-        // arriving batch (offset ids, so every id is NEW per the
-        // appendDelta contract) upserted against the stored index —
-        // the cost ratio to postings_build above IS the incremental
-        // claim, measured each round
-        "postings_delta_batch" -> {
-          val batch = docs.filter(pmod(col("doc_id"), lit(25)) === 0)
-            .select((col("doc_id") + lit(90000000L)).as("doc_id"), col("text"))
-          timeMed(reps, "postings_delta_batch")(
-            graft.extensions.Postings.appendDelta(postingsIdx, batch)
-              .write.format("noop").mode("overwrite").save())
-        },
-        // probe through the LSM view (base ∪ one delta-log batch,
-        // latest-per-term): the read amplification a log carries
-        // between compactions, beside the flat postings_probe above.
-        // The term predicate pushes through the view's window (it
-        // filters the PARTITION key), so the probe prunes both sides
-        "postings_view_probe" -> {
-          val batch = docs.filter(pmod(col("doc_id"), lit(25)) === 0)
-            .select((col("doc_id") + lit(90000000L)).as("doc_id"), col("text"))
-          val delta = graft.extensions.Postings
-            .appendDelta(postingsIdx, batch)
-            .withColumn("batch_id", lit(0L)).localCheckpoint()
-          timeMed(reps, "postings_view_probe")(
-            graft.extensions.Postings.probe(
-              graft.streaming.StreamingPostings.view(postingsIdx, delta),
-              postingsPhrases).count())
-        },
-        // read amplification GROWS with the log: the same probe through
-        // a 4-segment delta log (four chained batches, each delta
-        // computed against the then-current view exactly as the sink
-        // would), beside the 1-segment row above — the growth curve
-        // that sets the compaction cadence
-        "postings_view_probe_log4" -> {
-          val four = (0 until 4).map { i =>
-            docs.filter(pmod(col("doc_id"), lit(100)) === i)
-              .select((col("doc_id") + lit(90000000L * (i + 1))).as("doc_id"),
-                col("text"))
-          }
-          var log = four.head.limit(0)
-            .select(lit("").as("term"), lit(0L).as("df"),
-              lit(0L).as("first_doc"), lit(0L).as("last_doc"),
-              lit("").as("postings"), lit(0L).as("batch_id"))
-          four.zipWithIndex.foreach { case (b, i) =>
-            val cur = graft.streaming.StreamingPostings.view(postingsIdx, log)
-            log = log.unionByName(graft.extensions.Postings
-                .appendDelta(cur, b)
-                .withColumn("batch_id", lit(i.toLong)))
-              .localCheckpoint()
-          }
-          timeMed(reps, "postings_view_probe_log4")(
-            graft.extensions.Postings.probe(
-              graft.streaming.StreamingPostings.view(postingsIdx, log),
-              postingsPhrases).count())
-        },
-        // the compaction lever priced against the rows above: the fold
-        // PLUS the term-sorted write-back (the job's real bill — a
-        // compacted base that is not re-laid-out keeps none of the
-        // index's scan economics), then the SAME probe against the
-        // rewritten base — read amplification back to the flat
-        // postings_probe cost, which is the entire point of the fold
-        "postings_compact" -> {
-          val batch = docs.filter(pmod(col("doc_id"), lit(25)) === 0)
-            .select((col("doc_id") + lit(90000000L)).as("doc_id"), col("text"))
-          val delta = graft.extensions.Postings
-            .appendDelta(postingsIdx, batch)
-            .withColumn("batch_id", lit(0L)).localCheckpoint()
-          timeMed(reps, "postings_compact")(
-            graft.plans.Layout.writeSorted(
-              graft.streaming.StreamingPostings.compact(postingsIdx, delta),
-              s"$postingsDir/compacted", "term", files = 8))
-        },
-        "postings_compacted_probe" -> timeMed(reps, "postings_compacted_probe")(
-          graft.extensions.Postings.probe(
-            spark.read.parquet(s"$postingsDir/compacted"), postingsPhrases)
-            .count()),
-        // counting sketches in their native regime: the Zipf corpus's
-        // per-doc filler gives ~3M distinct tokens, so exact counters
-        // ARE the vocabulary while the CMS grid stays ≤ d·w rows and
-        // the KMV buffer stays k longs per group — price the sketch
-        // build beside the exact distinct count it stands in for, and
-        // record the measured KMV error (k=64 ⇒ σ ≈ 1/√62 ≈ 13%)
-        "cms_build_w1024" -> timeMed(reps, "cms_build_w1024")(
-          graft.extensions.Sketches.cmsBuild(
-              graft.extensions.Sketches.tokens(docs), depth = 4, width = 1024)
-            .write.format("noop").mode("overwrite").save()),
-        "cms_grid_rows" -> graft.extensions.Sketches.cmsBuild(
-          graft.extensions.Sketches.tokens(docs), depth = 4, width = 1024)
-          .count().toDouble,
-        "vocab_exact_distinct" -> timeMed(reps, "vocab_exact_distinct")(
-          graft.extensions.Sketches.tokens(docs)
-            .agg(count_distinct(col("tok"))).collect()),
-        // the PURE sketch path (what a 100 TB profile pays): per-source
-        // k-min state only — the contract row kmvDistinct also pays the
-        // exact countDistinct it is judged against, so pricing THAT
-        // here would bill the yardstick to the sketch
-        "kmv_state_64" -> {
-          val srcDocs = docs.withColumn("source",
-            concat(lit("s"), pmod(col("doc_id"), lit(16))))
-          timeMed(reps, "kmv_state_64")(
-            graft.streaming.StreamingSketch.kmvState(srcDocs, k = 64, n = 1)
-              .write.format("noop").mode("overwrite").save())
-        },
-        "kmv_relerr_mean" -> {
-          val srcDocs = docs.withColumn("source",
-            concat(lit("s"), pmod(col("doc_id"), lit(16))))
-          graft.extensions.Sketches.kmvDistinct(srcDocs, k = 64, n = 1)
-            .agg(avg(abs(col("kmv_est") - col("n_exact")) / col("n_exact")))
-            .head().getDouble(0)
-        },
-        // the quantile member of the sketch family (r11): Spark's
-        // mergeable GK sketch (approx_percentile, accuracy 100 ⇒ rank
-        // error ≤ 1%) priced beside the exact percentile it stands in
-        // for at 100 TB (exact = full sort; GK state is bounded), and
-        // its MEASURED worst rank error published like kmv_relerr —
-        // the row that catches a regression in the trade, not just
-        // the speed
-        "quantile_exact_sort" -> timeMed(reps, "quantile_exact_sort") {
-          docs.select(length(col("text")).cast("long").as("v"))
-            .agg(percentile(col("v"), lit(0.5)), percentile(col("v"), lit(0.99)))
-            .collect()
-        },
-        "quantile_gk_sketch" -> timeMed(reps, "quantile_gk_sketch") {
-          docs.select(length(col("text")).cast("long").as("v"))
-            .agg(percentile_approx(col("v"), lit(0.5), lit(100)),
-              percentile_approx(col("v"), lit(0.99), lit(100)))
-            .collect()
-        },
-        "quantile_rank_err_max" -> {
-          val vals = docs.select(length(col("text")).cast("long").as("v"))
-            .localCheckpoint()
-          val n = vals.count()
-          val approx = vals.agg(
-            percentile_approx(col("v"), lit(0.5), lit(100)).as("p50"),
-            percentile_approx(col("v"), lit(0.99), lit(100)).as("p99")).head()
-          def rankErr(est: Long, q: Double): Double = {
-            val rank = vals.filter(col("v") <= est).count()
-            math.abs(rank.toDouble / n - q)
-          }
-          math.max(rankErr(approx.getLong(0), 0.5),
-            rankErr(approx.getLong(1), 0.99))
-        },
-        // the ORACLED quantile path (r12): the int64 histogram state —
-        // bounded to `bins` rows, exactly mergeable, bitwise
-        // cross-engine (q_hist_quantile) — priced beside GK and the
-        // exact sort it both stand in for; GK has tighter error, the
-        // histogram has the hashable-oracle property, and at 100 TB
-        // both are one map-side-combinable pass
-        "quantile_hist_state" -> timeMed(reps, "quantile_hist_state") {
-          graft.extensions.Sketches.histQuantile(
-            graft.extensions.Sketches.histState(
-              docs.select(length(col("text")).cast("long").as("v")),
-              "v", 0L, 4096L, 256),
-            Seq(500, 990), 0L, 4096L, 256)
-            .collect()
-        },
-        // shard assignment at corpus scale: the distributed global
-        // row number (two metadata-only shuffles + a P-row collect)
-        // dealing the Zipf corpus serpentine over 64 shards, plus the
-        // balance spread it achieves (max-min balance factor; 0 =
-        // perfect) — the claim that LPT-ish dealing stays balanced on
-        // a skewed corpus, measured each round
-        "shard_assign_64" -> timeMed(reps, "shard_assign_64")(
-          graft.extensions.Packing.shardAssign(docs, 64)
-            .write.format("noop").mode("overwrite").save()),
-        "shard_balance_spread" -> {
-          // balance_x10k is the int64-scaled factor; /10000 keeps this
-          // row's unit comparable to pre-r11 rounds (0 = perfect)
-          val b = graft.extensions.Packing.shardBalance(
-              graft.extensions.Packing.shardAssign(docs, 64), 64)
-            .agg(max(col("balance_x10k")) - min(col("balance_x10k")))
-            .head().getLong(0)
-          b / 10000.0
-        },
-        // long-doc skew probe for the entropy fold: one 8k-token doc with
-        // 4k distinct tokens (the cooccur methodology). The pre-round-8
-        // per-distinct-token rescan did ~33M comparisons on this row; the
-        // sorted run-length fold is one O(n log n) pass — priced each
-        // round so the quadratic shape cannot silently return
-        "entropy_8k_doc" -> {
-          val doc = docs.sparkSession.range(1).select(
-            col("id").as("doc_id"),
-            concat_ws(" ", transform(sequence(lit(1), lit(8192)),
-              i => concat(lit("t"), pmod(i, lit(4096))))).as("text"))
-          timeMed(reps, "entropy_8k_doc")(graft.extensions.TextAnalysis.tokenEntropy(doc)
-            .write.format("noop").mode("overwrite").save())
-        })
-      // production-shape BPE: 256 merges learned over the Zipf corpus's
-      // word-frequency table with 64-merge batched rounds — prices the
-      // learnBatched driver-round-trip amortization each round (a
-      // sequential 256-merge run is 256 full aggregations; batched is
-      // 4). Runs LAST: its 3M-word vocab frames churn enough heap to
-      // perturb the ngram lever timings when run before them.
-      var bpeMerges = Seq.empty[graft.extensions.BpeTrain.Merge]
-      val bpeSec = timeMed(reps, "bpe256_batched64") {
-        bpeMerges = graft.extensions.BpeTrain.learnBatched(docs, 256, 64)
-      }
-      levers ++ Seq(
-        "bpe256_batched64" -> bpeSec,
-        "bpe256_merges" -> bpeMerges.size.toDouble)
-    } finally {
-      prevShare match {
-        case Some(v) => spark.conf.set("spark.graft.dedup.shareFrames", v)
-        case None => spark.conf.unset("spark.graft.dedup.shareFrames")
-      }
-    }
-  }
-
-  /** The paged source's aggregate-pushdown economics (r14): the same
-    * group-free COUNT over a 200k-row feed, once through the pushed
-    * PagedCountScan (answered from O(leaves) `found()` metadata probes,
-    * ZERO `fetch()` page calls) and once forced down the row path
-    * (`sum(1)` is outside the probe algebra, so the scan pages through
-    * the whole feed). The fetch-call rows are the structural evidence
-    * beside the timings: against a real HTTP feed every fetch is a
-    * network round-trip, so `paged_fetches_rowscan` is the bill the
-    * pushdown deletes. */
-  def pagedBench(spark: SparkSession, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.sources.HashSpreadApi
-    def feed = spark.read.format("graft.sources.PagedSource")
-      .option("n", "200000").option("base", "1600000000")
-      .option("span", "864000") // 10 days of feed time
-      .option("perPage", "100").option("maxPages", "10")
-      .option("minRange", "300")
-      .load()
-    def fetchesDuring(body: => Unit): Long = {
-      val before = HashSpreadApi.fetchCalls.get()
-      body
-      HashSpreadApi.fetchCalls.get() - before
-    }
-    var pushedFetches = 0L
-    val pushedSec = timeMed(reps, "paged_count_pushed") {
-      pushedFetches = fetchesDuring(
-        feed.groupBy().agg(count(lit(1))).collect())
-    }
-    var rowFetches = 0L
-    val rowSec = timeMed(reps, "paged_count_rowscan") {
-      rowFetches = fetchesDuring(feed.agg(sum(lit(1))).collect())
-    }
-    Seq(
-      "paged_count_pushed" -> pushedSec,
-      "paged_count_rowscan" -> rowSec,
-      "paged_fetches_pushed" -> pushedFetches.toDouble,
-      "paged_fetches_rowscan" -> rowFetches.toDouble)
-  }
-
-  /** Runtime bloom-filter join pruning (r14) — the OTHER runtime
-    * optimization the 100 TB story leans on beside AQE skew splitting:
-    * when a shuffle join's build side is filtered selective, Catalyst
-    * (InjectRuntimeFilter) plants a bloom filter built from the dim's
-    * join keys as a semi-join reduction on the fact side, so fact rows
-    * that cannot match die BEFORE the fact-side exchange — at cluster
-    * scale that deletes most of the shuffle, the dominant cost of a
-    * selective fact×dim join. Broadcast is disabled so the join is the
-    * shuffle join a 100 TB fact forces; thresholds are scaled to bench
-    * bytes (the 10 GB application-side default assumes cluster scans).
-    * Evidence is structural, not a timing inference:
-    * `bloom_filters_injected` counts the might_contain predicates in
-    * the final plan (0 with the feature off by construction). */
-  def runtimeFilterBench(
-      spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    val lineitem = Tables.table(spark, sfDir, "lineitem")
-    val part = Tables.table(spark, sfDir, "part")
-    // ~1% of parts, selected on a NON-join column: a join-key predicate
-    // would transit to the fact side statically (constraint
-    // propagation), leaving the bloom nothing to prune — the runtime
-    // filter is the only lever exactly when the dim's selectivity is
-    // invisible to the fact scan, which is the production shape
-    // (dim filtered on brand/category, fact holding only the key)
-    def dim = part.filter(pmod(xxhash64(col("p_name")), lit(97L)) === 0L)
-    def joined = lineitem
-      .join(dim, col("l_partkey") === col("p_partkey"))
-      .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("rows"))
-    def bloomsOf(df: org.apache.spark.sql.DataFrame): Double =
-      "might_contain".r.findAllIn(
-        df.queryExecution.executedPlan.toString.toLowerCase).size.toDouble
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      // BOTH broadcast levers off: the planner's and AQE's runtime
-      // conversion — otherwise AQE flips the SMJ to broadcast and the
-      // fact shuffle the bloom exists to shrink never happens
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "1MB")
-      def run(on: Boolean, name: String): (Double, Double, Double) = {
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", on.toString)
-        val sec = timeMed(reps, name)(joined.collect())
-        val probe = joined
-        val shuffleMb = shuffleBytesOf(probe) / 1e6
-        if (sys.env.contains("GRAFT_DEBUG_PLAN"))
-          println(s"=== $name plan ===\n${probe.queryExecution.executedPlan}")
-        (sec, bloomsOf(probe), shuffleMb)
-      }
-      val (onSec, onBlooms, onMb) = run(on = true, "bloom_on")
-      val (offSec, offBlooms, offMb) = run(on = false, "bloom_off")
-      // at bench bytes the bloom BUILD (an extra agg over the dim keys)
-      // can cost more than the fact shuffle it deletes — the graded
-      // evidence is the shuffle-byte delta, which is what scales with
-      // the fact side while the build cost scales with the dim
-      Seq(
-        "bloom_on" -> onSec, "bloom_filters_injected" -> onBlooms,
-        "bloom_on_shuffle_mb" -> onMb,
-        "bloom_off" -> offSec, "bloom_off_injected" -> offBlooms,
-        "bloom_off_shuffle_mb" -> offMb)
-    } finally saved.foreach { case (k, v) =>
-      v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
-    }
-  }
-
-  /** The r15 curation family's memo lever, priced: the registry rows
-    * share one scored/partitioned/weights frame through the dedup
-    * sharedFrame memo, and this section measures what that buys — each
-    * `cold_*` row rebuilds its full pipeline per rep (shareFrames off:
-    * LM train + scoring joins + rank for the partition; feature table +
-    * broadcast scoring for DSIR), while the `memo_*` rows are what
-    * every downstream consumer actually pays reading the frozen frames
-    * (the curriculum re-ranks per seed by design — its rank is the
-    * irreducible per-call work). At cluster scale the same gap is
-    * scan-vs-persisted-stage; the memo is the single-session stand-in. */
-  def curationBench(
-      spark: SparkSession, sfDir: String, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.extensions.DataSelection
-    def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val docs = Tables.table(spark, sfDir, "documents")
-    val conf = spark.conf
-    def cold(name: String)(body: => Unit): Double = {
-      conf.set("spark.graft.dedup.shareFrames", "false")
-      try timeMed(reps, name)(body)
-      finally conf.unset("spark.graft.dedup.shareFrames")
-    }
-    val coldPart = cold("cold_partition_build")(
-      noopWrite(DataSelection.perplexityPartition(docs)))
-    val coldDsir = cold("cold_dsir_weights")(
-      noopWrite(DataSelection.dsirWeights(docs)))
-    // memo warm from the suite's registry pass — these are steady-state
-    // consumer reads, not first touches
-    val memoPart = timeMed(reps, "memo_read_partition")(
-      noopWrite(DataSelection.perplexityPartition(docs)))
-    val memoCurr = timeMed(reps, "memo_curriculum_rank")(
-      noopWrite(DataSelection.curriculum(docs, seed = 11L)))
-    val memoOverlap = timeMed(reps, "memo_overlap")(
-      noopWrite(DataSelection.selectionAgreement(docs)))
-    val memoDsirTop = timeMed(reps, "memo_dsir_top")(
-      noopWrite(DataSelection.dsirSelect(docs, topK = 200)))
-    Seq(
-      "cold_partition_build" -> coldPart,
-      "memo_read_partition" -> memoPart,
-      "memo_curriculum_rank" -> memoCurr,
-      "memo_overlap" -> memoOverlap,
-      "cold_dsir_weights" -> coldDsir,
-      "memo_dsir_top" -> memoDsirTop)
-  }
-
-  /** The runtime half of the skew story — [[graft.plans.Skew]] salts
-    * the groupBy half; join-side skew is AQE's job
-    * (spark.sql.adaptive.skewJoin, on in [[GraftSession]] and here) and
-    * this section proves the feature actually engages rather than
-    * asserting the conf: a 50%-hot-key join (every even id collapses to
-    * key 0 — one reducer partition holds half the fact side), broadcast
-    * disabled so the shuffled join cannot dodge the hot partition,
-    * priced with skew splitting on vs off. Evidence is structural, not
-    * a timing inference: the final adaptive plan's AQEShuffleRead nodes
-    * are walked and their PartialReducerPartitionSpec slices counted —
-    * `skew_on_splits` > 0 means AQE cut the hot partition into
-    * advisory-sized slices that run in parallel; `skew_off_splits` is 0
-    * by construction. Thresholds are scaled to bench bytes (the 256 MB
-    * default assumes cluster-sized partitions; the factor-over-median
-    * trigger and advisory slice size keep their production shape). */
-  /** Per-batch economics of the JOINT (text ∘ media) admission twin
-    * ([[graft.streaming.StreamingJointDedup.jointCandidates]]) — the
-    * single-channel twins are priced in [[streamingBench]]; this section
-    * prices the two-channel composition (r16 VERDICT #6): each channel's
-    * index build, then the per-batch probe against the FULL corpus
-    * indexes and against HALF-size indexes, so the artifact shows the
-    * per-batch cost's dependence on corpus size directly (both probes
-    * are banded equi-joins into bucket-keyed indexes — near-flat in
-    * corpus size — while the batch pays its own SimHash + PNG-decode
-    * hashing every batch, proportional to the batch). Batch rows are
-    * genuine re-posts on BOTH channels (corpus captions under new ids
-    * paired with re-posted corpus PNG payloads), so the candidate frame
-    * is non-trivial; `joint_candidates_found` is emitted beside the
-    * timings so a silently-empty probe can never read as fast. */
-  def jointAdmissionBench(spark: SparkSession, sfDir: String,
-      reps: Int = 3): Seq[(String, Double)] = {
-    import graft.extensions.Dedup
-    import graft.multimodal.Multimodal
-    import graft.streaming.StreamingJointDedup
-    import spark.implicits._
-    val docs = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
-    val nMedia = 4000
-    val photos = Multimodal.syntheticPhotos(spark, nMedia).toDF().localCheckpoint()
-    var textIdx: org.apache.spark.sql.DataFrame = null
-    val textIdxT = timeMed(reps, "joint_text_index_build") {
-      textIdx = Dedup.hammingBands(
-        Dedup.simHash(docs, share = false), "doc_id", "simhash")
-        .localCheckpoint()
-    }
-    var mediaIdx: org.apache.spark.sql.DataFrame = null
-    val mediaIdxT = timeMed(reps, "joint_media_index_build") {
-      mediaIdx = Dedup.hammingBands(
-        Multimodal.imageHashes(photos.as[Multimodal.MediaRow]).toDF(),
-        "media_id", "ahash").localCheckpoint()
-    }
-    // half-size indexes: the corpus-size lever
-    val textIdxHalf = Dedup.hammingBands(
-      Dedup.simHash(docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
-        share = false), "doc_id", "simhash").localCheckpoint()
-    val mediaIdxHalf = Dedup.hammingBands(
-      Multimodal.imageHashes(
-        photos.filter(pmod(col("media_id"), lit(2L)) === 0)
-          .as[Multimodal.MediaRow]).toDF(),
-      "media_id", "ahash").localCheckpoint()
-    // arriving batch: 1/25 of the corpus captions re-posted under new
-    // ids, each paired with a re-posted corpus PNG — hits on both
-    // channels (window pairing is build-time only; the batch is frozen)
-    val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
-    val bd = docs.filter(pmod(col("doc_id"), lit(25L)) === 0)
-      .select(row_number().over(w).cast("long").as("rid"), col("text"))
-    val bp = photos.filter(col("media_id") < 2000)
-      .select((col("media_id") + 1L).as("rid"), col("kind"),
-        col("payload"), col("meta"))
-    val batch = bd.join(bp, "rid")
-      .select((col("rid") + 10000000L).as("doc_id"), col("text"),
-        col("kind"), col("payload"), col("meta"))
-      .localCheckpoint()
-    val batchRows = batch.count().toDouble
-    def probeT(ti: org.apache.spark.sql.DataFrame, mi: org.apache.spark.sql.DataFrame, name: String): Double =
-      timeMed(reps, name) {
-        StreamingJointDedup.jointCandidates(spark, ti, mi, batch)
-          .write.format("noop").mode("overwrite").save()
-      }
-    val pFull = probeT(textIdx, mediaIdx, "joint_probe_batch_fullcorpus")
-    val pHalf = probeT(textIdxHalf, mediaIdxHalf, "joint_probe_batch_halfcorpus")
-    val found = StreamingJointDedup
-      .jointCandidates(spark, textIdx, mediaIdx, batch).count().toDouble
-    Seq(
-      "joint_text_index_build" -> textIdxT,
-      "joint_media_index_build" -> mediaIdxT,
-      "joint_batch_rows" -> batchRows,
-      "joint_probe_batch_fullcorpus" -> pFull,
-      "joint_probe_batch_halfcorpus" -> pHalf,
-      "joint_candidates_found" -> found)
-  }
-
-  /** Per-batch economics of the round-17 ADMISSION twins — the frozen-dim
-    * pattern priced the way [[streamingBench]] prices the LSH probe:
-    * build cost for the corpus-derived dims (paid once, at refresh
-    * cadence) beside the steady-state per-batch cost, with work-proof
-    * counters so an accidentally-empty probe can never read as fast.
-    *  - retrieval decon ([[graft.streaming.StreamingRetrievalDecon]]):
-    *    frozen (stats, idf, benchmark grams); per batch = one narrow
-    *    batch scan + the k-bounded containment join.
-    *  - quality classifier ([[graft.streaming.StreamingClassifier]]):
-    *    frozen NB weight table; per batch = batch tf + broadcast weight
-    *    join.
-    *  - soft dedup ([[graft.streaming.StreamingSoftDedup]]): corpus
-    *    state (membership + remap) and band index built at refresh
-    *    cadence; per batch = row-local banding + index probe +
-    *    batch-sized CC fold.
-    *  - tokenizer health ([[graft.streaming.StreamingTokenizerStats]]):
-    *    frozen unigram vocab; per batch = one word aggregate + a 1-row
-    *    fertility/coverage reduce.
-    *  - boilerplate line gate ([[graft.streaming.StreamingLineGate]]):
-    *    frozen line census; per batch = one explode + broadcast
-    *    anti-join + per-doc reassembly. The Bloom regime beside it
-    *    (r20): freeze = hash census folded into one broadcast bitset,
-    *    per batch = scan-side probe, no join side at all. */
-  def admissionBench(spark: SparkSession, sfDir: String,
-      reps: Int = 3): Seq[(String, Double)] = {
-    import graft.streaming.{StreamingClassifier, StreamingRetrievalDecon}
-    val docs = Tables.table(spark, sfDir, "documents")
-      .select("doc_id", "text", "n_chars")
-    val terms = Seq("spark", "vector", "stream")
-    val bench = docs.filter(pmod(col("doc_id"), lit(10L)) === 0)
-    val corpus = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0)
-    // the arriving batch: a 1/25 corpus slice re-posted under new ids
-    // (guaranteed containment hits), frozen so probes bill only the
-    // work. Offset derived from max(doc_id) so a larger sf can never
-    // silently collide (r18 ADVICE); the soft-dedup batch below reuses
-    // it (sdDocs ⊆ docs, so this bound covers its contract too). Loud
-    // on an empty fixture, not getLong's opaque NPE (MakeSf1 discipline).
-    val maxIdRow = docs.agg(max("doc_id")).head
-    require(!maxIdRow.isNullAt(0),
-      s"$sfDir documents is empty — nothing to bench admission against")
-    val batchOffset = maxIdRow.getLong(0) + 1L
-    val batch = docs.filter(pmod(col("doc_id"), lit(25L)) === 1)
-      .select((col("doc_id") + lit(batchOffset)).as("doc_id"), col("text"),
-        col("n_chars"))
-      .localCheckpoint()
-    val batchRows = batch.count().toDouble
-    var dims: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = null
-    val dimsT = timeMed(reps, "decon_dims_build") {
-      Memo.evict(spark, Memo.DedupFrames) // bill a cold dims build
-      dims = StreamingRetrievalDecon.dims(corpus, bench, terms, n = 4)
-    }
-    val (st, idf, bg) = dims
-    val deconT = timeMed(reps, "decon_probe_batch") {
-      StreamingRetrievalDecon.admitBatch(batch, st, idf, bg, terms)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val deconFlagged = StreamingRetrievalDecon
-      .admitBatch(batch, st, idf, bg, terms)
-      .filter(col("contaminated")).count().toDouble
-    var w: org.apache.spark.sql.DataFrame = null
-    val wT = timeMed(reps, "classifier_weights_build") {
-      w = StreamingClassifier.weights(corpus)
-    }
-    val clsT = timeMed(reps, "classifier_probe_batch") {
-      StreamingClassifier.admitBatch(batch, w)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val clsKept = StreamingClassifier.admitBatch(batch, w)
-      .filter(col("keep")).count().toDouble
-    // Gopher rule battery at admission (r18 VERDICT #7): stateless
-    // per-doc flags — one narrow codegen'd batch projection, zero state
-    val gopherT = timeMed(reps, "gopher_probe_batch") {
-      graft.streaming.StreamingGopherGate.admitBatch(batch)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val gopherRejected = graft.streaming.StreamingGopherGate.admitBatch(batch)
-      .filter(!col("pass")).count().toDouble
-    // tokenizer health at admission (r19): per-batch fertility +
-    // coverage under the frozen unigram vocab — one batch scan, one
-    // word aggregate, a 1-row reduce; zero state. Work proof: the
-    // full-coverage fixture vocab must segment every occurrence
-    // (unseg_frac exactly 0 — an empty probe would read NULL).
-    val tokVocab = graft.queries.Round19Queries.uniVocab.toMap
-    val tokT = timeMed(reps, "tokenizer_probe_batch") {
-      graft.streaming.StreamingTokenizerStats.admitBatch(batch, tokVocab)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val tokRow = graft.streaming.StreamingTokenizerStats
-      .admitBatch(batch, tokVocab).head()
-    require(tokRow.getDouble(5) == 0.0,
-      s"full-coverage vocab must segment the whole batch: $tokRow")
-    val tokFertility = tokRow.getDouble(4)
-    // boilerplate line gate (r19): frozen census (refresh cadence)
-    // beside the per-batch scrub — broadcast anti-join against the
-    // census, zero streaming state. Work proof: the batch re-posts
-    // corpus texts, so frozen boilerplate MUST be dropped from it.
-    var lgFrozen: org.apache.spark.sql.DataFrame = null
-    val lgFreezeT = timeMed(reps, "linegate_census_build") {
-      lgFrozen = graft.streaming.StreamingLineGate.freezeBoilerplate(corpus)
-        .localCheckpoint()
-    }
-    val lgT = timeMed(reps, "linegate_probe_batch") {
-      graft.streaming.StreamingLineGate.admitBatch(batch, lgFrozen)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // sum over an empty batch is NULL — the same opaque-NPE channel the
-    // maxIdRow isNullAt guard closes (r19 ADVICE); fail loudly instead
-    val lgDroppedRow = graft.streaming.StreamingLineGate
-      .admitBatch(batch, lgFrozen)
-      .selectExpr("sum(n_lines - n_kept)").head
-    require(!lgDroppedRow.isNullAt(0),
-      "linegate probe batch is empty: sum(n_lines - n_kept) is NULL")
-    val lgDropped = lgDroppedRow.getLong(0).toDouble
-    require(lgDropped > 0,
-      "re-posted corpus batch must shed frozen boilerplate lines")
-    // Bloom regime of the line gate (r20): the freeze folds the hash
-    // census into ONE broadcast bitset (cold per rep — filter memo
-    // evicted; the shared-lines frame stays warm exactly as the exact
-    // row above, so both price census-above-shared-lines), and the
-    // per-batch scrub is a codegen'd scan-side probe with no join side.
-    // Work proof: the probe may only drop MORE than the exact gate.
-    var lgBloomFrozen: Option[org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]] = None
-    val lgBloomFreezeT = timeMed(reps, "linegate_bloom_freeze") {
-      Memo.evict(spark, Memo.BloomFilters)
-      lgBloomFrozen =
-        graft.streaming.StreamingLineGate.freezeBoilerplateBloom(corpus)
-    }
-    require(lgBloomFrozen.nonEmpty,
-      "corpus census must yield a non-empty frozen bitset")
-    val lgBloomT = timeMed(reps, "linegate_bloom_probe_batch") {
-      graft.streaming.StreamingLineGate.admitBatchBloom(batch, lgBloomFrozen)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val lgBloomDroppedRow = graft.streaming.StreamingLineGate
-      .admitBatchBloom(batch, lgBloomFrozen)
-      .selectExpr("sum(n_lines - n_kept)").head
-    require(!lgBloomDroppedRow.isNullAt(0),
-      "linegate bloom probe batch is empty: sum(n_lines - n_kept) is NULL")
-    val lgBloomDropped = lgBloomDroppedRow.getLong(0).toDouble
-    require(lgBloomDropped >= lgDropped,
-      s"bloom gate may only drop MORE than the exact gate " +
-        s"($lgBloomDropped < $lgDropped)")
-    // soft dedup (r17 verdict #5): the dedup-adjusted source-mass input
-    // of mixture planning maintained incrementally — state bootstrap at
-    // refresh cadence (the whole-corpus CC, paid once) beside the
-    // steady-state per-batch fold (row-local banding + index probe +
-    // batch-sized CC). The arriving slice reuses corpus TEXTS under new
-    // ids, so every batch doc near-dups its original — the fold pays
-    // the full merge path, and the mass delta proves the probe fired.
-    val sdDocs = Tables.table(spark, sfDir, "documents")
-      .select("doc_id", "source", "text")
-      .filter(pmod(col("doc_id"), lit(10L)) =!= 0)
-    // arriving ids must be disjoint from the corpus (the admitBatch
-    // contract): batchOffset = max over ALL docs + 1 ≥ max(sdDocs) + 1,
-    // so one derived bound serves both and skips a second corpus scan
-    val sdOffset = batchOffset
-    val sdBatch = sdDocs.filter(pmod(col("doc_id"), lit(25L)) === 1)
-      .select((col("doc_id") + lit(sdOffset)).as("doc_id"), col("source"),
-        col("text"))
-      .localCheckpoint()
-    var sdIndex: org.apache.spark.sql.DataFrame = null
-    var sdState: graft.streaming.StreamingSoftDedup.State = null
-    val sdBuildT = timeMed(reps, "softdedup_state_build") {
-      Memo.evict(spark, Memo.DedupFrames) // bill a cold CC build
-      sdIndex = graft.extensions.Dedup.bandBuckets(
-        graft.extensions.Dedup.shingles(sdDocs, share = false),
-        share = false).localCheckpoint()
-      sdState = graft.streaming.StreamingSoftDedup.fromCorpus(sdDocs)
-    }
-    var sdNext: graft.streaming.StreamingSoftDedup.State = null
-    val sdAdmitT = timeMed(reps, "softdedup_admit_batch") {
-      sdNext = graft.streaming.StreamingSoftDedup
-        .admitBatch(sdState, sdIndex, sdBatch)
-    }
-    // work proof: re-posted texts join their originals' clusters, so
-    // admitted mass must land as fractional weight, not new singletons
-    val sdMerged = graft.streaming.StreamingSoftDedup.weights(sdNext)
-      .filter(col("doc_id") >= sdOffset && col("cluster_size") > 1)
-      .count().toDouble
-    // corpus-size sensitivity (the joint_admission full-vs-half
-    // discipline): the banding is batch-local and the index probe is
-    // bucket-keyed, but membership RESOLUTION is one narrow metadata
-    // scan per batch — this pair of rows measures what that costs as
-    // the corpus doubles (16 B/row metadata, honest number not a claim)
-    val sdDocsHalf = sdDocs.filter(pmod(col("doc_id"), lit(2L)) === 1)
-    var sdIndexHalf: org.apache.spark.sql.DataFrame = null
-    var sdStateHalf: graft.streaming.StreamingSoftDedup.State = null
-    timeMed(1, "softdedup_half_build") {
-      Memo.evict(spark, Memo.DedupFrames)
-      sdIndexHalf = graft.extensions.Dedup.bandBuckets(
-        graft.extensions.Dedup.shingles(sdDocsHalf, share = false),
-        share = false).localCheckpoint()
-      sdStateHalf = graft.streaming.StreamingSoftDedup.fromCorpus(sdDocsHalf)
-    }
-    val sdAdmitHalfT = timeMed(reps, "softdedup_admit_batch_halfcorpus") {
-      graft.streaming.StreamingSoftDedup
-        .admitBatch(sdStateHalf, sdIndexHalf, sdBatch)
-    }
-    Seq(
-      "admission_batch_rows" -> batchRows,
-      "decon_dims_build" -> dimsT,
-      "decon_probe_batch" -> deconT,
-      "decon_flagged" -> deconFlagged,
-      "classifier_weights_build" -> wT,
-      "classifier_probe_batch" -> clsT,
-      "classifier_kept" -> clsKept,
-      "gopher_probe_batch" -> gopherT,
-      "gopher_rejected" -> gopherRejected,
-      "tokenizer_probe_batch" -> tokT,
-      "tokenizer_batch_fertility" -> tokFertility,
-      "linegate_census_build" -> lgFreezeT,
-      "linegate_probe_batch" -> lgT,
-      "linegate_batch_dropped" -> lgDropped,
-      "linegate_bloom_freeze" -> lgBloomFreezeT,
-      "linegate_bloom_probe_batch" -> lgBloomT,
-      "linegate_bloom_batch_dropped" -> lgBloomDropped,
-      "softdedup_state_build" -> sdBuildT,
-      "softdedup_admit_batch" -> sdAdmitT,
-      "softdedup_admit_batch_halfcorpus" -> sdAdmitHalfT,
-      "softdedup_batch_merged" -> sdMerged)
-  }
-
-  def skewJoinBench(
-      spark: SparkSession, reps: Int = 3,
-      n: Long = 2000000L): Seq[(String, Double)] = {
-    import org.apache.spark.sql.execution.PartialReducerPartitionSpec
-    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
-    val left = spark.range(n).select(
-      when(pmod(col("id"), lit(2L)) === 0, lit(0L)).otherwise(col("id")).as("k"),
-      sha2(concat(lit("p"), col("id")), 256).as("pad")) // ~64 B payload/row
-    val right = spark.range(200000L).select(col("id").as("k"),
-      (col("id") * 7L).as("v"))
-    // global agg consumes the join without imposing an output
-    // partitioning, so OptimizeSkewedJoin is free to split
-    def joined = left.join(right, "k")
-      .agg(sum(length(col("pad"))).as("bytes"), count(lit(1)).as("rows"))
-    // query stages are LEAF nodes holding their subtree in .plan — a
-    // plain collect() on the final plan never reaches the
-    // AQEShuffleRead below ResultQueryStage
-    def splitsOf(df: org.apache.spark.sql.DataFrame): Double =
-      aqe.collect(df.queryExecution.executedPlan) {
-        case r: AQEShuffleReadExec =>
-          r.partitionSpecs.count(_.isInstanceOf[PartialReducerPartitionSpec])
-      }.sum.toDouble
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // skew detection is median-relative: with too few reducer
-      // partitions the hot partition IS the median and nothing reads as
-      // skewed — pin enough partitions that the median reflects the
-      // non-hot keys (a leaked shuffle.partitions=2 from another
-      // session once silently defeated the split)
-      conf.set("spark.sql.adaptive.enabled", "true")
-      if (conf.get("spark.sql.shuffle.partitions").toInt < 8)
-        conf.set("spark.sql.shuffle.partitions", "8")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4MB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2MB")
-      def run(on: Boolean, name: String): (Double, Double) = {
-        conf.set("spark.sql.adaptive.skewJoin.enabled", on.toString)
-        val sec = timeMed(reps, name)(joined.collect())
-        val probe = joined // fresh Dataset: its executedPlan is this run's
-        probe.collect()
-        (sec, splitsOf(probe))
-      }
-      val (onSec, onSplits) = run(on = true, "skew_on")
-      val (offSec, offSplits) = run(on = false, "skew_off")
-      // the PREDICTIVE half of the skew story: the sketch-only factor
-      // (Sketches.skewFactor — CMS F2 × KMV cardinality, one bounded
-      // pass per side at ingest) flags the hot key BEFORE any shuffle;
-      // the AQE splits above are the runtime confirmation. hot ⇒
-      // ~share²·D (huge); uniform ⇒ ~1.
-      def factorOf(df: org.apache.spark.sql.DataFrame): Double =
-        graft.extensions.Sketches.skewFactor(df, "k")
-          .head().getAs[Double]("skew_factor")
-      Seq(
-        "hot_rows" -> (n / 2).toDouble,
-        "skew_on" -> onSec, "skew_on_splits" -> onSplits,
-        "skew_off" -> offSec, "skew_off_splits" -> offSplits,
-        "sketch_skew_hot" -> factorOf(left),
-        "sketch_skew_uniform" -> factorOf(right))
-    } finally saved.foreach { case (k, v) =>
-      v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
-    }
-  }
-
-  /** Prices the modality-dedup family per round: decode + perceptual
-    * hash throughput over GENUINE containers (PNG via javax.imageio,
-    * WAV via javax.sound — the same codecs production rows hit), and
-    * the banded pair join with planted exact duplicates (every
-    * id-offset copy must pair with its original at hamming 0, so
-    * `*_pairs_found` also regression-tests recall end-to-end at bench
-    * scale). Payloads are localCheckpoint'ed first — the rows time
-    * decode/hash/join, not synthesis. */
-  def multimodalBench(spark: SparkSession, reps: Int = 3): Seq[(String, Double)] = {
-    import graft.multimodal.Multimodal
-    import spark.implicits._
-    val n = 2000
-    val imgsBase = Multimodal.syntheticPhotos(spark, n)
-    val imgs = imgsBase
-      .union(imgsBase.map(r => r.copy(media_id = r.media_id + n)))
-      .localCheckpoint()
-    val wavsBase = Multimodal.syntheticModulatedWavs(spark, n)
-    val wavs = wavsBase
-      .union(wavsBase.map(r => r.copy(media_id = r.media_id + n)))
-      .localCheckpoint()
-    val imgHashT = timeMed(reps, s"img_hash_${2 * n}") {
-      Multimodal.imageHashes(imgs).write.format("noop").mode("overwrite").save()
-    }
-    // resize throughput + the bytes ratio the derived table ships at —
-    // decode, bilinear scale of the 32x24 photos into 16x16 bounds
-    // (16x12 out, area ratio 0.25), PNG re-encode per row
-    val imgResizeT = timeMed(reps, s"img_resize_${2 * n}") {
-      Multimodal.resizeImages(imgs, 16, 16)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val resizeBytesRatio = {
-      val resized = Multimodal.resizeImages(imgs, 16, 16)
-        .agg(sum(length(col("payload")))).head().getLong(0).toDouble
-      val orig = imgs.agg(sum(length(col("payload")))).head().getLong(0).toDouble
-      resized / orig
-    }
-    val imgHashes = Multimodal.imageHashes(imgs).localCheckpoint()
-    val imgPairsT = timeMed(reps, "img_pairs_join")(Multimodal.imageHashPairs(imgHashes).count())
-    val imgPairs = Multimodal.imageHashPairs(imgHashes).count().toDouble
-    val wavHashT = timeMed(reps, s"wav_hash_${2 * n}") {
-      Multimodal.audioHashes(wavs).write.format("noop").mode("overwrite").save()
-    }
-    val wavHashes = Multimodal.audioHashes(wavs).localCheckpoint()
-    val wavPairsT = timeMed(reps, "wav_pairs_join")(Multimodal.audioHashPairs(wavHashes).count())
-    val wavPairs = Multimodal.audioHashPairs(wavHashes).count().toDouble
-    // video: fewer rows (each payload is framesPer JPEGs), planted
-    // re-posts like the other kinds
-    val nVid = 500
-    val vidsBase = Multimodal.syntheticMjpegAvis(spark, nVid)
-    val vids = vidsBase
-      .union(vidsBase.map(r => r.copy(media_id = r.media_id + nVid)))
-      .localCheckpoint()
-    val vidHashT = timeMed(reps, s"vid_hash_${2 * nVid}") {
-      Multimodal.videoHashes(vids).write.format("noop").mode("overwrite").save()
-    }
-    val vidHashes = Multimodal.videoHashes(vids).localCheckpoint()
-    val vidPairsT = timeMed(reps, "vid_pairs_join")(Multimodal.videoHashPairs(vidHashes).count())
-    val vidPairs = Multimodal.videoHashPairs(vidHashes).count().toDouble
-    Seq(
-      "media_rows_per_kind" -> (2.0 * n),
-      s"img_hash_${2 * n}" -> imgHashT,
-      s"img_resize_${2 * n}" -> imgResizeT,
-      "img_resize_bytes_ratio" -> resizeBytesRatio,
-      "img_pairs_join" -> imgPairsT,
-      "img_pairs_found" -> imgPairs,
-      s"wav_hash_${2 * n}" -> wavHashT,
-      "wav_pairs_join" -> wavPairsT,
-      "wav_pairs_found" -> wavPairs,
-      s"vid_hash_${2 * nVid}" -> vidHashT,
-      "vid_pairs_join" -> vidPairsT,
-      "vid_pairs_found" -> vidPairs)
+  /** The driver contract: ONE JSON line `{"metric","value","unit",
+    * "queries",...,"sf"}`. `queryReps` holds each query's per-rep
+    * seconds in suite order; `queries` carries their medians, `value`
+    * their total and `queries_reps` the raw reps, so a loaded-box run
+    * is identifiable from the artifact (uniformly inflated or
+    * high-variance reps). "sf" is the numeric scale factor when the
+    * directory ends in `sfN` (the driver's own records key on 0.1-style
+    * numbers) and the quoted directory otherwise; the directory itself
+    * travels in "sf_dir". */
+  def contractLine(queryReps: Seq[(String, Seq[Double])], sharedBuild: Double,
+      reps: Int, codegenCompiles: Long, sfDir: String): String = {
+    val results = queryReps.map { case (n, xs) => n -> median(xs) }
+    val total = results.map(_._2).sum
+    val repsJson = queryReps
+      .map { case (n, xs) => "\"" + n + "\":" + xs.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val sfJson = "sf([0-9.]+)/*$".r.findFirstMatchIn(sfDir)
+      .map(_.group(1)).getOrElse("\"" + sfDir + "\"")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonNum(results)},"queries_reps":$repsJson,"shared_build":$sharedBuild,"reps":$reps,"codegen_compiles":$codegenCompiles,"sf":$sfJson,"sf_dir":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -2109,7 +188,7 @@ object Bench {
     def compiles =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compilesBefore = compiles
-    val results = sortedQueries.zipWithIndex.map { case ((name, fn), i) =>
+    val queryReps = sortedQueries.zipWithIndex.map { case ((name, fn), i) =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try {
@@ -2120,49 +199,20 @@ object Bench {
         }
         (System.nanoTime() - t0) / 1e9
       }
-      repsLog(name) = times
       if ((i + 1) % calEvery == 0 && i + 1 < sortedQueries.size)
         calTimes += (i + 1) -> calProbe()
-      name -> median(times)
+      name -> times
     }
     val codegenCompiles = compiles - compilesBefore
     calTimes += sortedQueries.size -> calProbe()
-    val qs = jsonNum(results)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // each section returns its rows; serialization emits the numbers
-    // object plus the parallel `<section>_reps` per-rep arrays (extra
-    // keys, same queries/value contract — r9 VERDICT #2)
-    def section(name: String)(body: => Seq[(String, Double)]): Seq[(String, Double)] =
-      try body catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name section failed: ${e.getMessage}")
-          Seq.empty
-      }
-    val layout = section("layout")(layoutBench(spark, sfDir, reps))
-    val scale = section("scale")(scaleBench(spark, sfDir, reps))
-    val ann = section("ann")(annBench(spark, sfDir, reps))
-    val streaming = section("streaming")(streamingBench(spark, sfDir, reps))
-    val lsm = section("lsm")(lsmBench(spark, sfDir, reps))
-    val scdLsm = section("scd_lsm")(scdLsmBench(spark, sfDir, reps))
-    val capstone = section("capstone")(capstoneBench(spark, sfDir, reps))
-    val multimodal = section("multimodal")(multimodalBench(spark, reps))
-    val skewjoin = section("skewjoin")(skewJoinBench(spark, reps))
-    val paged = section("paged")(pagedBench(spark, reps))
-    val rtfilter = section("rtfilter")(runtimeFilterBench(spark, sfDir, reps))
-    val curation = section("curation")(curationBench(spark, sfDir, reps))
-    val jointAdm = section("joint_admission")(
-      jointAdmissionBench(spark, sfDir, reps))
-    val admission = section("admission")(admissionBench(spark, sfDir, reps))
-    // Driver contract: ONE JSON line {"metric",...,"value",...,"unit",
-    // "queries",...,"sf"}. "sf" is emitted as the numeric scale factor
-    // (the driver's own records key on 0.1-style numbers); the directory
-    // travels in "sf_dir". Built once, printed here AND re-printed as the
-    // very last stdout line (below) so a parser that takes either the
-    // first or the last JSON line finds the full contract (r21: every
-    // prior round's BENCH_r*.json shows parsed:null).
-    val sfJson = "sf([0-9.]+)/*$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse("\"" + sfDir + "\"")
-    val artifactLine = (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_reps":${jsonReps(results)},"shared_build":$sharedBuild,"reps":$reps,"layout":${jsonNum(layout)},"layout_reps":${jsonReps(layout)},"scale":${jsonNum(scale)},"scale_reps":${jsonReps(scale)},"ann":${jsonNum(ann)},"ann_reps":${jsonReps(ann)},"streaming":${jsonNum(streaming)},"streaming_reps":${jsonReps(streaming)},"lsm":${jsonNum(lsm)},"lsm_reps":${jsonReps(lsm)},"scd_lsm":${jsonNum(scdLsm)},"scd_lsm_reps":${jsonReps(scdLsm)},"capstone":${jsonNum(capstone)},"capstone_reps":${jsonReps(capstone)},"multimodal":${jsonNum(multimodal)},"multimodal_reps":${jsonReps(multimodal)},"skewjoin":${jsonNum(skewjoin)},"skewjoin_reps":${jsonReps(skewjoin)},"paged":${jsonNum(paged)},"paged_reps":${jsonReps(paged)},"rtfilter":${jsonNum(rtfilter)},"rtfilter_reps":${jsonReps(rtfilter)},"curation":${jsonNum(curation)},"curation_reps":${jsonReps(curation)},"joint_admission":${jsonNum(jointAdm)},"joint_admission_reps":${jsonReps(jointAdm)},"admission":${jsonNum(admission)},"admission_reps":${jsonReps(admission)},"codegen_compiles":$codegenCompiles,"sf":$sfJson,"sf_dir":"$sfDir"}""")
+    val results = queryReps.map { case (n, xs) => n -> median(xs) }
+    val total = results.map(_._2).sum
+    // Built once, printed here AND re-printed as the very last stdout
+    // line (below) so a parser that takes either the first or the last
+    // JSON line finds the full contract (r21: every prior round's
+    // BENCH_r*.json shows parsed:null).
+    val artifactLine =
+      contractLine(queryReps, sharedBuild, reps, codegenCompiles, sfDir)
     println(artifactLine)
     // Final SHORT line so a tail-truncated capture of this output still
     // contains a complete, parseable summary (r10 VERDICT #4: the full
@@ -2175,11 +225,12 @@ object Bench {
     // distinguish box load (uniform inflation / high variance) from plan
     // drift (clean reps, higher median), and `ratio` vs the prior
     // committed file localizes the regression to named queries.
-    val minsNow: Map[String, Double] = results.map { case (n, _) =>
-      n -> repsLog.get(n).filter(_.nonEmpty).map(_.min).getOrElse(0.0)
+    val minsNow: Map[String, Double] = queryReps.map { case (n, xs) =>
+      n -> (if (xs.nonEmpty) xs.min else 0.0)
     }.toMap
+    val repsOf = queryReps.toMap
     val queryLines = results.map { case (name, med) =>
-      val repsArr = repsLog.getOrElse(name, Seq.empty).mkString("[", ",", "]")
+      val repsArr = repsOf(name).mkString("[", ",", "]")
       val prevPart = prevMedians.get(name) match {
         case Some(p) if p > 0 =>
           s""","prev":$p,"ratio":${med / p}"""

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * disjoint id strides. Document tokens carry a per-replica prefix
   * (replica 0 verbatim), so cross-replica text is NOT near-duplicate —
   * within-replica duplicate/Zipf structure is preserved, which is
-  * exactly the workload whose linear scaling is under test (the same
-  * construction [[Bench.lsmBench]] uses for term-space amplification; an
+  * exactly the workload whose linear scaling is under test (an
   * unprefixed copy would make every doc a 10-way near-dup and square the
   * candidate-pair count instead of scaling it). Id strides are multiples
   * of 10 (and 5), so the `doc_id % 5` reference slice and `doc_id % 10`

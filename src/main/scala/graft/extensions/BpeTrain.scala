@@ -50,21 +50,6 @@ object BpeTrain {
           lit(" ")).as("seq"),
         col("freq"))
 
-  /** Release the blocks behind a localCheckpoint'ed frame. Each merge
-    * round checkpoints a new vocab frame (lineage truncation); without
-    * freeing the predecessor a long vocabulary run (10k+ merges) retains
-    * one materialized copy per round for the session. Defensive match:
-    * if the plan isn't the expected LogicalRDD, do nothing — no worse
-    * than not freeing. private[graft]: the per-batch streaming paths
-    * ([[graft.streaming.StreamingBucketedMerge]]) carry the same
-    * leak shape — one retained checkpoint per micro-batch. */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Ranked adjacent-pair counts of a (seq, freq) frame — the one
     * distributed aggregation each merge round runs, shared by [[learn]]
     * (limit 1) and [[learnBatched]] (limit = candidate window). */
@@ -102,7 +87,7 @@ object BpeTrain {
         seqs = seqs.select(
           replace(col("seq"), lit(s" $l  $r "), lit(s" $l$r ")).as("seq"),
           col("freq")).localCheckpoint()
-        freeCheckpoint(prev) // new round materialized; predecessor's blocks go
+        graft.Frozen.release(prev) // new round materialized; predecessor's blocks go
         rank += 1
         continue = rank <= numMerges
       }
@@ -178,7 +163,7 @@ object BpeTrain {
           replace(s, lit(s" $l  $r "), lit(s" $l$r "))
         }
         seqs = seqs.select(mergedSeq.as("seq"), col("freq")).localCheckpoint()
-        freeCheckpoint(prev)
+        graft.Frozen.release(prev)
         continue = rank <= numMerges
       }
     }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * Iteration count is bounded by the component diameter (near-dup
   * clusters are shallow); for web-scale graphs the same loop hosts the
   * large-star/small-star optimization — the per-iteration dataflow shape
-  * is identical. Old label generations are dropped by reference so the
-  * ContextCleaner reclaims their blocks. */
+  * is identical. Each superseded generation is freed
+  * ([[graft.Frozen.release]]) once its successor has materialized. */
 object ConnectedComponents {
 
   /** Sum of the observed metric if delivered, else a direct aggregate
@@ -109,12 +109,14 @@ object ConnectedComponents {
             coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
           (r.getLong(0), r.getLong(1))
       }
+      graft.Frozen.release(edges)
       edges = next
       converged = probe == prev
       prev = probe
       it += 1
     }
-    // every edge is now (node → root); roots and isolated nodes label themselves
+    // every edge is now (node → root); roots and isolated nodes label
+    // themselves. The label frame is a lazy join over `edges`: keep it.
     val lbl = nodes.select(col(idCol).as("id"))
       .join(edges.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -149,11 +151,13 @@ object ConnectedComponents {
         .observe(obs, coalesce(sum("comp"), lit(0L)).as("s"))
         .localCheckpoint() // eager: the one job of this iteration
       val sumNow = convergenceSum(obs, next)
+      graft.Frozen.release(labels)
       labels = next
       converged = sumNow == prevSum
       prevSum = sumNow
       it += 1
     }
+    graft.Frozen.release(edges)
     labels
   }
 }

@@ -284,7 +284,7 @@ object Similarity {
     * dirs, written label-partitioned under the pinned overwrite `mode`
     * ([[withOverwriteMode]]), and the checkpoint freed after — the
     * per-batch steady state must not retain one merged copy per
-    * applied batch ([[BpeTrain.freeCheckpoint]]). `b` must already be
+    * applied batch ([[graft.Frozen.release]]). `b` must already be
     * normalized and vec_id-unique. Returns merged's distinct labels
     * (sorted), collected before the free. */
   private def mergeWriteIndex(
@@ -301,7 +301,7 @@ object Similarity {
       }
       merged.select("label").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-    } finally BpeTrain.freeCheckpoint(merged)
+    } finally graft.Frozen.release(merged)
   }
 
   /** Run `body` with spark.sql.sources.partitionOverwriteMode pinned —

@@ -156,11 +156,9 @@ object Sketches {
     * (second frequency moment, [[cmsJoinSize]] of a grid with itself)
     * and D the KMV cardinality estimate. A uniform key scores ≈ 1; a
     * key holding `share` of the rows scores ≈ share²·D. The AQE
-    * skew-join split ([[graft.Bench.skewJoinBench]]) REACTS to skew
+    * skew-join split (pinned in SkewJoinEvidenceSpec) REACTS to skew
     * mid-query; this predicts it from ingest-time sketches so the plan
-    * (salting granularity, broadcast threshold) is chosen up front —
-    * the bench publishes hot vs uniform factors beside the split
-    * counts each round.
+    * (salting granularity, broadcast threshold) is chosen up front.
     *
     * Width sizing: the F₂ estimate's noise floor is N²/w, which is
     * exactly a uniform key's true F₂ (N²/D) when w = D — so w ≫ D is

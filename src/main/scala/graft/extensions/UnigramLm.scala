@@ -193,7 +193,7 @@ object UnigramLm {
       if (r < emRounds) { // renormalize over the counted support —
         model = logProbs(mCounts).collect() // vocabulary-sized collect
           .map(x => x.getString(0) -> x.getDouble(1)).toMap
-        BpeTrain.freeCheckpoint(mCounts)
+        graft.Frozen.release(mCounts)
       }
     }
     val chars = words.select(explode(expr(
@@ -270,9 +270,7 @@ object UnigramLm {
     val spark = documents.sparkSession
     import spark.implicits._
     // freed before every return: the returned frame is driver-built
-    // (keptSeq.toDF), so nothing reads the word table after the loop —
-    // without the free each call retains one word-table copy for the
-    // session (the BpeTrain.freeCheckpoint discipline)
+    // (keptSeq.toDF), so nothing reads the word table after the loop
     val words = wordFreqs(documents).localCheckpoint()
     try {
     val seedMap = logProbs(seedCounts(words, maxPieceLen)).collect()
@@ -328,6 +326,6 @@ object UnigramLm {
       }
     }
     result
-    } finally BpeTrain.freeCheckpoint(words)
+    } finally graft.Frozen.release(words)
   }
 }

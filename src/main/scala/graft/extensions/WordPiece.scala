@@ -112,7 +112,7 @@ object WordPiece {
         seqs = seqs.select(
           replace(col("seq"), lit(s" $l  $r "), lit(s" $l$r ")).as("seq"),
           col("freq")).localCheckpoint()
-        BpeTrain.freeCheckpoint(prev)
+        graft.Frozen.release(prev)
         rank += 1
         continue = rank <= numMerges
       }
@@ -194,7 +194,7 @@ object WordPiece {
           replace(s, lit(s" $l  $r "), lit(s" $l$r "))
         }
         seqs = seqs.select(mergedSeq.as("seq"), col("freq")).localCheckpoint()
-        BpeTrain.freeCheckpoint(prev)
+        graft.Frozen.release(prev)
         continue = rank <= numMerges
       }
     }

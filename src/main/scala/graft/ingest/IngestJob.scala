@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Frozen
 import graft.merge.ScdMerge
 import graft.metrics.Freshness
 
@@ -74,8 +75,10 @@ object IngestJob {
     * this function did not return); discovery; then per snapshot one
     * merge, localCheckpointed. Only the last merge is observed: the
     * intermediate states are never returned, so their gauges could
-    * never be read. A snapshot dated at or below the high-water mark is
-    * skipped, never merged, so a late snapshot cannot reach the state. */
+    * never be read; each is freed once the next one has materialized
+    * (never the caller's `state`). A snapshot dated at or below the
+    * high-water mark is skipped, never merged, so a late snapshot cannot
+    * reach the state. */
   def runOnce(
       spark: SparkSession,
       root: String,
@@ -102,6 +105,7 @@ object IngestJob {
       // same by write-and-reload.)
       val next = merged.localCheckpoint()
       if (last) Freshness.remember(next, merged)
+      if (st ne state) Frozen.release(st)
       next
     }
     (finalState, dates)

@@ -743,36 +743,6 @@ object Multimodal {
     }
   }
 
-  /** Deterministic amplitude-MODULATED 8-bit mono WAVs — envelope
-    * hashing fingerprints dynamics, which [[syntheticWavs]]' pure
-    * constant-amplitude tones don't have (flat envelope ⇒ coin-flip
-    * gradient bits; the [[AudioCodec.envelopeHash]] caveat). Used by
-    * the bench multimodal section. */
-  def syntheticModulatedWavs(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n).map { i =>
-      val nSamples = 4000
-      // per-(seed, envelope-window) pseudo-random amplitude: a phase
-      // shift (sin(... + i)) only yields ~2π distinguishable envelope
-      // shapes across seeds — hashed window amplitudes keep distinct
-      // clips far apart in Hamming space
-      val pcm = Array.tabulate[Byte](nSamples) { j =>
-        val win = j * 65 / nSamples
-        val amp = 0.3 + 0.7 *
-          ((mix64(i * 131L + win) & 0xffff).toDouble / 65536.0)
-        (math.sin(j * 0.25 + i) * amp * 100).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      MediaRow(i, "audio", bos.toByteArray,
-        MediaMeta(None, None, Some(nSamples * 1000L / 8000), Some("audio/wav")))
-    }
-  }
-
   /** Deterministic GENUINE MJPEG-AVI payloads for tests/demos: a
     * spec-shaped RIFF container (`hdrl` with an avih header, a `movi`
     * list of `00dc` chunks) whose frames are real ImageIO-encoded

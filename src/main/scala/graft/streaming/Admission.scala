@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
-import graft.extensions.BpeTrain
-
 /** The one owner of the micro-batch. Every always-on loop in graft —
   * the snapshot merge, the freshness export and each admission twin —
   * is `Admission.sink(arriving.writeStream) { b => … }`: append mode,
@@ -39,7 +37,7 @@ object Admission {
     }
 
     private[Admission] def release(): Unit =
-      held.foreach(BpeTrain.freeCheckpoint)
+      held.foreach(graft.Frozen.release)
   }
 
   /** `writer` in append mode, running `body` on every micro-batch. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.extensions.{BpeTrain, TextAnalysis}
+import graft.extensions.TextAnalysis
 
 /** Streaming distribution-drift monitor — the always-on counterpart of
   * [[TextAnalysis.sourceDrift]], watching a live document feed the way
@@ -86,7 +86,7 @@ object DriftMonitor {
         val prev = profile
         profile = TextAnalysis.vocabProfile(profileSource(), topN)
           .localCheckpoint()
-        if (prev != null) BpeTrain.freeCheckpoint(prev)
+        if (prev != null) graft.Frozen.release(prev)
       }
       onBatch(TextAnalysis.driftVsProfile(b.df, profile), b.id)
     }

@@ -112,15 +112,14 @@ object StreamingBucketedMerge {
       // and so the append (a second action) doesn't recompute the merge
       .localCheckpoint()
     // free after the append: an always-on sink otherwise pins one
-    // delta's blocks per micro-batch for the session (the
-    // BpeTrain.freeCheckpoint discipline)
+    // delta's blocks per micro-batch
     try {
       if (delta.isEmpty) st.copy(gen = st.gen + 1)
       else {
         Layout.appendBucketed(delta, st.table, Seq(st.keyCol), st.buckets)
         st.copy(gen = st.gen + 1, fragmented = true)
       }
-    } finally graft.extensions.BpeTrain.freeCheckpoint(delta)
+    } finally graft.Frozen.release(delta)
   }
 
   /** RESOLVING compaction: rewrite the table to latest-per-key at one
@@ -134,7 +133,7 @@ object StreamingBucketedMerge {
     try {
       Layout.writeBucketedSorted(resolved, st.table, Seq(st.keyCol), st.buckets)
       st.copy(fragmented = false)
-    } finally graft.extensions.BpeTrain.freeCheckpoint(resolved)
+    } finally graft.Frozen.release(resolved)
   }
 
   /** [[applyBatch]] + policy compaction: compact when the table's file

@@ -118,7 +118,8 @@ object StreamingLineGate {
     * and the RUNNING removal-mass report. `state` is by-name so each
     * batch re-reads the caller's persisted report — the stream-static
     * shape every twin in this repo uses. The scrubbed frame is
-    * checkpointed and handed over; the caller owns its lifetime. */
+    * checkpointed and handed over; the caller owns its lifetime and
+    * frees it with [[graft.Frozen.release]] once done with it. */
   def sink(
       state: => DataFrame,
       boilerplate: DataFrame,
@@ -130,8 +131,9 @@ object StreamingLineGate {
       onBatch(scrubbed, mergeReports(state, batchReport(scrubbed)), b.id)
     }
 
-  /** [[sink]] for the Bloom regime — identical replay/report contract;
-    * the per-batch scrub is the scan-side probe of the ONE frozen
+  /** [[sink]] for the Bloom regime — identical replay/report contract,
+    * and the caller frees the scrubbed frame with
+    * [[graft.Frozen.release]] the same way; the per-batch scrub is the scan-side probe of the ONE frozen
     * bitset ([[admitBatchBloom]]), so admission cost is batch-scan ∝
     * batch with no per-batch broadcast rebuild or join side. */
   def sinkBloom(

@@ -173,8 +173,8 @@ object StreamingSoftDedup {
       .union(viaCorpus.select(col("a").as("id")))
       .distinct()
     // batch-sized graph: batch docs + touched canonicals; min-id labels
+    // (label returns a checkpointed frame)
     val labels = ConnectedComponents.label(nodes, within.union(viaCorpus))
-      .localCheckpoint()
     val newMembership = b.select("doc_id", "source")
       .join(labels.select(col("id").as("doc_id"), col("comp")), "doc_id")
     // a touched canonical that lost the min: remap row. Strictly
@@ -189,9 +189,13 @@ object StreamingSoftDedup {
       .join(newRemap.alias("n"), col("r.canon") === col("n.old_comp"), "left")
       .select(col("r.old_comp"),
         coalesce(col("n.canon"), col("r.canon")).as("canon"))
-    State(
+    val next = State(
       state.membership.unionByName(newMembership).localCheckpoint(),
       compressed.unionByName(newRemap).localCheckpoint())
+    // the new state is materialized; the batch's own checkpoints are
+    // spent. `state` is the caller's and stays.
+    Seq(b, bands, labels).foreach(graft.Frozen.release)
+    next
   }
 
   /** The sink's per-batch fold with its REPLAY GUARD, exposed so the

@@ -32,6 +32,14 @@ class ProductQuantizationSpec extends SparkSpec {
     assert(codes().size == 30, "every non-degenerate row gets a code")
   }
 
+  test("a code is m sub-codes below ksub: m bytes per vector at ksub <= 256") {
+    val codes = ProductQuantization.encode(emb, cb)
+      .collect().map(_.getSeq[Int](1))
+    assert(codes.length == 30)
+    assert(codes.forall(c => c.size == 2 && c.forall(i => i >= 0 && i < 4)),
+      codes.map(_.mkString("[", ",", "]")).mkString(" "))
+  }
+
   test("ADC score equals the reconstruction distance bit-for-bit") {
     val q = clustered(1).head._2.map(_ + 0.005)
     val codes = ProductQuantization.encode(emb, cb)

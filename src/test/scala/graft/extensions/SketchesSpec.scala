@@ -50,6 +50,17 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
+  test("the CMS grid stays depth x width rows however large the vocabulary") {
+    // 5000 distinct tokens into 64 buckets per row: every cell is hit,
+    // and the grid is still exactly 4 x 64 counters holding every token
+    val big = spark.range(5000)
+      .selectExpr("id AS doc_id", "concat('tok', id) AS text")
+    val grid = Sketches.cmsBuild(Sketches.tokens(big), depth = 4, width = 64)
+    assert(grid.count() == 4L * 64L)
+    assert(grid.groupBy("seed").agg(sum("cnt")).as[(Int, Long)].collect()
+      .toMap == (0 until 4).map(_ -> 5000L).toMap)
+  }
+
   test("CMS grids are additive: sketch(a ∪ b) = sketch(a) + sketch(b) cell-wise") {
     val a = docs.filter($"doc_id" <= 3)
     val b = docs.filter($"doc_id" > 3)

@@ -53,6 +53,16 @@ object WinnowingProperties extends Properties("Winnowing") {
       nFps <= nWindows && (nGrams == 0 || r.getDouble(3) <= 1.0)
     }
 
+  property("distinct-token text: winnowed density near 2/(w+1)") =
+    forAll(Gen.choose(0, 1 << 20)) { seed =>
+      // 2000 grams of fresh tokens: the window minimum is a fresh gram
+      // about 2/(w+1) of the time, so the index shrinks by that factor
+      val docs = Seq((1L, (0 until 2002).map(i => s"t${seed}_$i")
+        .mkString(" "))).toDF("doc_id", "text")
+      val density = Winnowing.fingerprints(docs, k, w).collect().head.getDouble(3)
+      density > 1.5 / (w + 1) && density < 2.5 / (w + 1)
+    }
+
   property("duplicating a doc adds no new fingerprints: identical digests") =
     forAll(words(15)) { toks =>
       val t = toks.mkString(" ")

@@ -2,7 +2,9 @@ package graft.ingest
 
 import java.nio.file.Files
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.{Memo, SparkSpec}
@@ -155,6 +157,37 @@ class IngestJobSpec extends SparkSpec {
     assert(Freshness.compute(s1, "2021-1-20") == g)
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     intercept[Exception](Freshness.compute(s1, "not a date"))
+  }
+
+  test("runOnce catch-up: of what the call persisted, only the returned state stays") {
+    val root = Files.createTempDirectory("ingest-release").toFile.getAbsolutePath
+    writeCsv(root, "2021-01-01", Seq(("1", "a", "False"), ("2", "b", "False")))
+    writeCsv(root, "2021-01-08", Seq(("1", "a", "False"), ("3", "c", "False")))
+    writeCsv(root, "2021-01-15", Seq(("1", "a2", "False"), ("3", "c", "False")))
+    val sc = spark.sparkContext
+    val state = emptyState(root, "2021-01-01")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // strong references, taken as each snapshot is read (the generation
+    // before it exists by then): the persisted-RDD map holds its values
+    // weakly, so an unreleased generation could otherwise vanish with
+    // the GC before the check
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def capture(): Unit =
+      held ++= sc.getPersistentRDDs.values.filterNot(r => before(r.id))
+    val (s1, d1) = IngestJob.runOnce(spark, root, state, "id", tracked,
+      today = "2021-01-15", dir => { capture(); readSnapshot(dir) })
+    capture()
+    assert(d1 == Seq("2021-01-01", "2021-01-08", "2021-01-15"))
+    val returned = s1.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.id
+      case other => fail(s"runOnce returned an uncheckpointed plan: ${other.nodeName}")
+    }
+    val heldIds = held.map(_.id).toSet
+    assert(heldIds.size >= 3, s"three generations were checkpointed: $heldIds")
+    val still = heldIds.filter(sc.getPersistentRDDs.contains)
+    assert(still == Set(returned), s"retained ${(still - returned).toSeq.sorted}")
+    assert(s1.count() == 3L)
+    state.count() // the caller's state stays readable
   }
 
   test("observed gauges equal scanned gauges: every row removed") {
